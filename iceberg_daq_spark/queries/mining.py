@@ -21,6 +21,10 @@ from pyspark.sql import functions as F
 from iceberg_daq_spark.registry import register
 from iceberg_daq_spark.tables import load
 
+# TPC-H has 25 brands, so the brand edge list has at most 25 x 24
+# directed pairs; q199 collects it and refuses anything larger.
+_Q199_MAX_EDGES = 25 * 24
+
 
 def brand_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q199's weighted brand co-purchase edge list: one partial-
@@ -107,6 +111,12 @@ def q199(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles (~7 exchanges, 12 window nodes of pure scheduler floor on
     metadata-sized state); the final community fold stays in Spark."""
     edges = brand_copurchase_edges(spark, sf_dir).collect()
+    if len(edges) > _Q199_MAX_EDGES:
+        raise ValueError(
+            f"q199_label_propagation: brand_copurchase_edges returned {len(edges)} "
+            f"rows, more than the {_Q199_MAX_EDGES} (25 x 24 brand pairs) the "
+            "driver-side LPA is sized for"
+        )
     labels = {r["src"]: r["src"] for r in edges}
     for _ in range(2):
         votes: dict[str, dict[str, int]] = {}

@@ -15,8 +15,16 @@ order cannot flip the hash.
 
 from __future__ import annotations
 
+import ast
+import functools
+import inspect
+import json
+import os
+import re
+import subprocess
 from collections.abc import Callable
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -55,352 +63,139 @@ def all_queries() -> dict[str, QuerySpec]:
 
 
 # The verify driver hash-checks only the FIRST 50 entries of
-# ``__spark_entry__.queries()``.  With 240+ registered queries the
-# window cannot cover everything, so ``driver_ordered`` sorts by how
-# much a driver row is worth this round:
-#   1. never-driver-checked queries (every new registration lands here
-#      automatically), oracle-backed before rows-only, in registration
-#      order;
-#   2. ``_RECHECK`` - queries whose implementation changed this round
-#      with oracles unchanged (manual escape hatch: a driver
-#      re-confirmation is worth more than routine staleness), then
-#      ``_ROWSONLY_REFRESH`` - up to 5 rows-only queries whose source
-#      changed since their last driver row (git-derived quota);
-#   3. everything else oracle-backed, STALEST driver row first
-#      (ascending ``_LAST_DRIVER_ROUND``), then registration order;
-#   4. rows-only queries (the driver can never hash-verify these;
-#      local tests assert their semantics) - always last, stalest
-#      first.
-#
-# ``_LAST_DRIVER_ROUND`` is generated from the repo's
-# CORRECTNESS_r*.json artifacts by tools/gen_check_order.py (run once
-# per round); tests/test_registry_rotation.py fails if it goes stale,
-# so the rotation can never silently rot (round-11 verdict #7).
+# ``__spark_entry__.queries()``.  With 260+ registered queries the window
+# cannot cover everything, so ``driver_ordered`` sorts by how much a
+# driver row is worth, by one rule derived from what the checkout holds.
+# Nothing is stored: a new driver artifact or a code edit re-orders the
+# next process by itself.
+#   - A query's *last driver round* R is the newest CORRECTNESS_r<R>.json
+#     at the repo root that has a row for it.
+#   - A query is *owed* a driver row when its source changed after the
+#     driver's ``round R:`` commit.  Its source is the text of its
+#     ``def`` plus every module-level function of the same module that
+#     it reaches by name.  Helpers in other modules (``operators/*``, a
+#     sibling query module) are not compared: a query that changed only
+#     there waits for its turn in the stalest-first tiers.
+#   - Order: never-checked queries, then owed queries, then the other
+#     oracle-backed queries, then rows-only queries (the driver cannot
+#     hash-verify these; local tests assert their semantics).  Within a
+#     tier the stalest driver row goes first, then registration order.
 
-_RECHECK: list[str] = [
-    # (r13's recheck list - q109/q81/q117/q133/q138/q97/q239/q57/q231/
-    # q236/q237/q230 - all received fresh driver rows in
-    # CORRECTNESS_r13.json, every one all-match, so they rotate out.)
-    # r14 optimization-round plan changes with oracles unchanged -
-    # driver re-confirmation owed; entries are appended as each
-    # change lands, and tests/test_oracle.py's fast profile ALWAYS
-    # includes this list so the changed code is what gets re-tested.
-    #
-    # r14: q165/q230/q199 moved to the one-collect_set-exchange shape
-    # (pairs/anti-joins/hit joins restate over per-customer/per-order
-    # brand sets, q199's bounded <=600-edge LPA iterates on the
-    # driver); q204's per-query winner became a max_by partial agg
-    # instead of the ranked window over every scored pair.
-    "q165_copurchase_cosine",
-    "q230_recsys_backtest",
-    "q199_label_propagation",
-    "q204_knn_label_agreement",
-    # q162 rides the same one-collect_set-exchange rewrite as q165
-    "q162_basket_lift",
-]
+REPO_ROOT = Path(__file__).resolve().parent.parent
 
-# Rows-only queries (oracle=None) sort last in the rotation, so once
-# checked they effectively never re-enter a 50-slot window - yet a
-# rows-only driver row is the only driver-side signal the query still
-# RUNS.  This list reserves up to 5 window slots per round for
-# rows-only entries whose defining source file changed in git AFTER
-# the round that produced their last driver row (round-12 verdict #3).
-# Generated by tools/gen_check_order.py from git history + artifacts.
-# --- BEGIN GENERATED ROWSONLY (tools/gen_check_order.py) ---
-_ROWSONLY_REFRESH: list[str] = [
-    "q56_sim_ann_ivf",
-    "q16_approx_count_distinct",
-    "q29_watermark_late_data",
-    "q32_adler32_checksum",
-    "q104_hll_sketch_union",
-]
-# --- END GENERATED ROWSONLY ---
 
-# --- BEGIN GENERATED (tools/gen_check_order.py) ---
-_LAST_DRIVER_ROUND: dict[str, int] = {
-    "q01_scan_filter_project": 10,
-    "q02_pushdown_shapes": 10,
-    "q03_inner_join_agg": 11,
-    "q04_broadcast_join": 11,
-    "q05_multiway_join": 11,
-    "q06_left_outer_join": 11,
-    "q07_left_semi_join": 11,
-    "q08_left_anti_join": 11,
-    "q09_range_join": 11,
-    "q100_heavy_hitters": 8,
-    "q101_contrastive_pairs": 8,
-    "q102_data_quality_checks": 13,
-    "q103_metric_anomalies": 9,
-    "q104_hll_sketch_union": 9,
-    "q105_quality_percentile_rank": 8,
-    "q106_fuzzy_match": 12,
-    "q107_pareto_frontier": 8,
-    "q108_hybrid_rrf": 8,
-    "q109_pagerank": 13,
-    "q10_asof_join": 11,
-    "q110_cohort_retention": 8,
-    "q111_event_funnel": 11,
-    "q112_peak_concurrency": 8,
-    "q113_event_transitions": 8,
-    "q114_top_journeys": 8,
-    "q115_metric_correlation": 8,
-    "q116_gapfill_resample": 8,
-    "q117_triangle_count": 13,
-    "q118_trend_slope": 8,
-    "q119_full_outer_reconcile": 13,
-    "q11_cross_join": 11,
-    "q120_source_vocab_overlap": 8,
-    "q121_funnel_timing": 8,
-    "q122_ab_welch": 8,
-    "q123_spatial_radius_join": 8,
-    "q124_top_supplier_view": 13,
-    "q125_association_rules": 8,
-    "q126_last_touch_attribution": 8,
-    "q127_column_profile": 13,
-    "q128_degree_distribution": 10,
-    "q129_cusum_changepoint": 10,
-    "q12_hash_agg_measures": 10,
-    "q130_decayed_engagement": 10,
-    "q131_mad_outliers": 10,
-    "q132_rfm_segmentation": 10,
-    "q133_bfs_reach": 13,
-    "q134_scd2_pit_join": 10,
-    "q135_mutual_information": 10,
-    "q136_session_pattern": 10,
-    "q137_largest_remainder_prorate": 11,
-    "q138_trailing_actives": 13,
-    "q139_quantile_normalize": 10,
-    "q13_distinct_agg": 11,
-    "q140_chi_square_independence": 10,
-    "q141_ols_two_factor": 10,
-    "q142_kaplan_meier_churn": 11,
-    "q143_gini_concentration": 11,
-    "q144_benford_first_digit": 10,
-    "q145_time_weighted_avg": 10,
-    "q146_winsorized_stats": 10,
-    "q147_psi_drift": 10,
-    "q148_lead_lag_xcorr": 10,
-    "q149_user_feature_matrix": 10,
-    "q14_rollup_grouping": 11,
-    "q150_session_summary": 10,
-    "q151_shipping_sla": 10,
-    "q152_discount_elasticity": 10,
-    "q153_supplier_hhi": 10,
-    "q154_activity_heatmap": 10,
-    "q155_cohort_ltv": 11,
-    "q156_mix_shift_bridge": 11,
-    "q157_kcore": 10,
-    "q158_event_doublefire": 10,
-    "q159_qq_table": 10,
-    "q15_minmax_firstlast": 11,
-    "q160_sliding_hll_wau": 9,
-    "q161_ks_two_sample": 11,
-    "q162_basket_lift": 10,
-    "q163_ab_conversion_ztest": 10,
-    "q164_mann_whitney_u": 10,
-    "q165_copurchase_cosine": 10,
-    "q166_user_kl_divergence": 10,
-    "q167_last_touch_attribution": 10,
-    "q168_shipping_priority": 9,
-    "q169_order_priority_wait": 9,
-    "q16_approx_count_distinct": 2,
-    "q170_revenue_uplift": 9,
-    "q171_volume_shipping": 9,
-    "q172_market_share": 10,
-    "q173_returned_items": 10,
-    "q174_customer_distribution": 10,
-    "q175_promo_revenue": 10,
-    "q176_small_qty_revenue": 10,
-    "q177_large_volume_customers": 10,
-    "q178_waiting_suppliers": 10,
-    "q179_dormant_rich_customers": 10,
-    "q17_collect_sorted_list": 11,
-    "q180_seasonal_dow_index": 9,
-    "q181_wape_backtest": 9,
-    "q182_floored_balance": 9,
-    "q183_max_drawdown": 9,
-    "q184_weekend_lift": 9,
-    "q185_power_analysis": 9,
-    "q186_markov2_transitions": 9,
-    "q187_bot_burst_score": 9,
-    "q188_revenue_retention": 9,
-    "q189_vocab_growth": 9,
-    "q18_ranking_topk": 11,
-    "q190_bigram_perplexity": 9,
-    "q191_abc_classification": 9,
-    "q192_segment_migration": 9,
-    "q193_customer_brand_hhi": 9,
-    "q194_new_vs_returning": 9,
-    "q195_repeat_purchase_cadence": 9,
-    "q196_price_band_mix": 9,
-    "q197_order_reconciliation": 9,
-    "q198_laspeyres_index": 9,
-    "q199_label_propagation": 9,
-    "q19_analytic_lag_lead": 12,
-    "q200_wilson_ranking": 9,
-    "q201_grid_hotspot": 9,
-    "q202_weekend_did": 9,
-    "q203_label_separation": 9,
-    "q204_knn_label_agreement": 9,
-    "q205_position_attribution": 9,
-    "q206_referential_integrity": 11,
-    "q207_weekly_yoy": 9,
-    "q208_order_backlog": 9,
-    "q209_error_budget_burn": 9,
-    "q20_gaps_and_islands": 12,
-    "q210_incident_mttr": 9,
-    "q211_traffic_burstiness": 9,
-    "q212_supplier_scorecard": 9,
-    "q213_join_skew_audit": 9,
-    "q214_segment_basket_size": 9,
-    "q215_discount_ladder": 9,
-    "q216_order_regularity": 9,
-    "q217_weighted_discount_percentiles": 11,
-    "q218_theil_inequality": 11,
-    "q219_robust_spread": 11,
-    "q21_sort_limit_topk": 11,
-    "q220_holt_forecast": 11,
-    "q221_acf_ljung_box": 11,
-    "q222_seasonal_decomposition": 11,
-    "q223_countmin_heavy_hitters": 11,
-    "q224_bloom_membership": 11,
-    "q225_logreg_train": 11,
-    "q226_kmeans_lloyd": 11,
-    "q227_adamic_adar": 11,
-    "q228_naive_bayes_langid": 11,
-    "q229_poisson_bootstrap_ci": 11,
-    "q22_set_operations": 12,
-    "q230_recsys_backtest": 13,
-    "q231_absorbing_markov": 13,
-    "q232_holt_winters": 11,
-    "q233_model_eval": 11,
-    "q234_decision_stump": 11,
-    "q235_sax_motifs": 11,
-    "q236_markov_attribution": 13,
-    "q237_adaboost_stumps": 13,
-    "q238_shapley_attribution": 11,
-    "q239_survivorship": 13,
-    "q23_scalar_battery": 12,
-    "q240_dbscan": 11,
-    "q241_grid_outliers": 11,
-    "q242_duplicated_spans": 12,
-    "q243_top_copied_passages": 12,
-    "q244_stratified_split": 12,
-    "q245_sequence_packing": 12,
-    "q246_containment_pairs": 12,
-    "q247_hdf5_event_files": 12,
-    "q248_label_medoids": 12,
-    "q249_quantile_sketch": 12,
-    "q24_array_battery": 12,
-    "q250_kneser_ney_bigram": 13,
-    "q251_embedding_anisotropy": 13,
-    "q252_tokenizer_fertility": 13,
-    "q253_embedding_spectrum": 13,
-    "q254_dsir_selection": 13,
-    "q255_ccnet_ppl_buckets": 13,
-    "q256_gopher_rules": 13,
-    "q257_temperature_mixture": 13,
-    "q258_jl_projection_audit": 13,
-    "q259_lsh_band_calibration": 13,
-    "q25_tumbling_window": 12,
-    "q260_blocklist_filter": 13,
-    "q261_token_waterfill": 13,
-    "q262_dedup_threshold_sweep": 13,
-    "q263_image_phash_neardup": 13,
-    "q264_simhash_hamming_calibration": 13,
-    "q265_retrieval_ndcg": 13,
-    "q26_sliding_window": 12,
-    "q27_session_window": 12,
-    "q28_prescale": 12,
-    "q29_watermark_late_data": 2,
-    "q30_interval_join_readout": 12,
-    "q31_metadata_docs": 12,
-    "q32_adler32_checksum": 2,
-    "q33_tp_ta_reduction": 12,
-    "q34_dromap_compile": 12,
-    "q35_run_allocator": 12,
-    "q36_config_rewrite": 11,
-    "q37_metadata_etl_e2e": 12,
-    "q40_dedup_exact": 12,
-    "q41_dedup_ngram_jaccard": 12,
-    "q42_dedup_minhash_lsh": 13,
-    "q43_dedup_simhash": 13,
-    "q44_sim_topk_cosine": 12,
-    "q45_sim_ann_lsh": 13,
-    "q46_text_langid": 12,
-    "q47_text_quality": 12,
-    "q48_token_count": 12,
-    "q49_fingerprint": 12,
-    "q50_multimodal_meta": 12,
-    "q51_image_decode_stats": 13,
-    "q52_video_frame_sample": 12,
-    "q53_audio_stats": 12,
-    "q54_embed_near_dup": 12,
-    "q55_embed_near_dup_lsh": 13,
-    "q56_sim_ann_ivf": 1,
-    "q57_dedup_components": 13,
-    "q58_corpus_profile": 12,
-    "q59_salted_join": 12,
-    "q60_pivot": 12,
-    "q61_unpivot": 12,
-    "q62_correlated_subquery": 12,
-    "q63_text_clean": 12,
-    "q64_stratified_sample": 12,
-    "q65_contamination_check": 12,
-    "q66_vocab_topk": 11,
-    "q67_cube_grouping_sets": 12,
-    "q68_metadata_json_docs": 12,
-    "q69_sequence_packing": 12,
-    "q70_mixture_rebalance": 12,
-    "q71_repetition_score": 12,
-    "q72_source_cap": 12,
-    "q73_cluster_retention": 13,
-    "q74_exact_percentiles": 12,
-    "q75_boilerplate_shingles": 13,
-    "q76_quality_funnel": 13,
-    "q77_label_centroids": 13,
-    "q78_doc_chunking": 13,
-    "q79_pii_redaction": 8,
-    "q80_url_domains": 8,
-    "q81_unigram_surprisal": 13,
-    "q82_keyword_extract": 8,
-    "q83_source_drift": 8,
-    "q84_bm25_search": 13,
-    "q85_shard_assignment": 13,
-    "q86_semdedup": 9,
-    "q87_quality_classifier": 13,
-    "q88_ngram_novelty": 13,
-    "q89_bpe_vocab": 9,
-    "q90_training_prep_pipeline": 9,
-    "q91_pmi_collocations": 13,
-    "q92_dup_cluster_sizes": 13,
-    "q93_zipf_slope": 13,
-    "q94_source_dup_rates": 13,
-    "q95_readability": 8,
-    "q96_curriculum_bins": 8,
-    "q97_sim_ann_pq": 13,
-    "q98_int8_quantization": 8,
-    "q99_weighted_sample": 8,
-}
-# --- END GENERATED ---
+@dataclass(frozen=True)
+class Rotation:
+    last_round: dict[str, int]  # every query with a driver row -> R
+    owed: frozenset[str]
+    order: tuple[str, ...]  # registered names, driver-check priority
+
+
+def _git(root: Path, *args: str) -> str:
+    try:
+        proc = subprocess.run(["git", *args], cwd=root, capture_output=True, text=True)
+    except OSError:  # no git binary: no history to compare against
+        return ""
+    return proc.stdout if proc.returncode == 0 else ""
+
+
+def _round_commits(root: Path) -> dict[int, str]:
+    """Round N -> sha of the newest ``round N: ...`` commit."""
+    commits: dict[int, str] = {}
+    for line in _git(root, "log", "--format=%H %s").splitlines():
+        if m := re.match(r"(\w+) round (\d+):", line):
+            commits.setdefault(int(m[2]), m[1])
+    return commits
+
+
+def _functions(source: str) -> dict[str, tuple[str, ast.AST]]:
+    """Module-level function -> (text of its ``def``, its AST node).
+    Sliced by AST line range: ``ast.get_source_segment`` is quadratic
+    in the module size."""
+    lines = source.splitlines()
+    return {
+        node.name: ("\n".join(lines[node.lineno - 1 : node.end_lineno]), node)
+        for node in ast.parse(source).body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+    }
+
+
+def _reach(functions: dict[str, tuple[str, ast.AST]], name: str) -> set[str]:
+    """``name`` and every module-level function it reaches by name."""
+    seen: set[str] = set()
+    todo = [name]
+    while todo:
+        n = todo.pop()
+        if n in functions and n not in seen:
+            seen.add(n)
+            todo.extend(x.id for x in ast.walk(functions[n][1]) if isinstance(x, ast.Name))
+    return seen
+
+
+def changed_since(root: Path, specs: dict[str, QuerySpec], rounds: dict[str, int]) -> set[str]:
+    """Names in ``rounds`` whose source differs from the one in the
+    ``round <rounds[name]>:`` commit.  A round with no commit compares
+    nothing."""
+    commits = _round_commits(root)
+    changed: dict[str, set[str]] = {}
+    parsed: dict[tuple[str, str], dict[str, tuple[str, ast.AST]]] = {}
+
+    def functions(rev: str, rel: str):  # rev "" = the working tree
+        if (rev, rel) not in parsed:
+            text = _git(root, "show", f"{rev}:{rel}") if rev else (root / rel).read_text()
+            parsed[rev, rel] = _functions(text)
+        return parsed[rev, rel]
+
+    out = set()
+    for name, rnd in rounds.items():
+        rev = commits.get(rnd)
+        if rev is None:
+            continue
+        if rev not in changed:
+            changed[rev] = set(_git(root, "diff", "--name-only", rev).splitlines())
+        fn = inspect.unwrap(specs[name].fn)
+        rel = os.path.relpath(os.path.realpath(fn.__code__.co_filename), root.resolve())
+        if rel not in changed[rev]:
+            continue
+        # if everything the live def reaches reads the same in the round's
+        # commit, the old def reached exactly that set too
+        live, old = functions("", rel), functions(rev, rel)
+        if any(n not in old or old[n][0] != live[n][0] for n in _reach(live, fn.__name__)):
+            out.add(name)
+    return out
+
+
+def derive_rotation(root: Path, specs: dict[str, QuerySpec]) -> Rotation:
+    """The driver check order of ``specs`` for the checkout at ``root``
+    (the rule is in the comment above)."""
+    last: dict[str, int] = {}
+    for path in root.glob("CORRECTNESS_r*.json"):
+        if m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name):
+            for name in json.loads(path.read_text()):
+                last[name] = max(last.get(name, 0), int(m[1]))
+    owed = changed_since(root, specs, {n: last[n] for n in specs if n in last})
+
+    def tier(n: str) -> int:
+        if n not in last:
+            return 0
+        if n in owed:
+            return 1
+        return 2 if specs[n].oracle is not None else 3
+
+    order = sorted(specs, key=lambda n: (tier(n), last.get(n, 0)))  # stable
+    return Rotation(last_round=last, owed=frozenset(owed), order=tuple(order))
+
+
+@functools.cache
+def driver_rotation() -> Rotation:
+    """``derive_rotation`` of this checkout, computed once per process."""
+    return derive_rotation(REPO_ROOT, all_queries())
 
 
 def driver_ordered() -> dict[str, QuerySpec]:
     """Registry in driver-check-priority order (see comment above)."""
     specs = all_queries()
-    names = list(specs)
-
-    def key(n: str):
-        oracle = specs[n].oracle is not None
-        if n not in _LAST_DRIVER_ROUND:
-            return (0, 0 if oracle else 1, names.index(n))
-        if n in _RECHECK:
-            return (1, 0, _RECHECK.index(n))
-        if n in _ROWSONLY_REFRESH:
-            return (1, 1, _ROWSONLY_REFRESH.index(n))
-        return (2 if oracle else 3, _LAST_DRIVER_ROUND[n], names.index(n))
-
-    return {n: specs[n] for n in sorted(names, key=key)}
+    return {n: specs[n] for n in driver_rotation().order}
 
 
 def spark_queries() -> dict[str, QueryFn]:

@@ -23,7 +23,7 @@ def pytest_report_header(config):
     profile = (
         "FULL (SPARK_GRAFT_FULL_TESTS=1): every oracle-backed query, both datasets"
         if FULL_TESTS
-        else "FAST (default): stratified oracle sample + all _RECHECK; "
+        else "FAST (default): stratified oracle sample + every query whose code moved; "
         "set SPARK_GRAFT_FULL_TESTS=1 for the full battery"
     )
     return [f"iceberg_daq_spark test profile: {profile}; master=local[{TEST_CPUS}]"]

@@ -99,9 +99,7 @@ def test_text_sql_functions_match_column_api(spark, sf_dir):
     assert "PythonUDF" not in plan and "BatchEvalPython" not in plan
 
 
-def test_bench_regression_tripwire():
-    """The per-query >2x tripwire fires on a real slowdown, skips
-    noise-band priors (<50 ms), new queries, and improvements."""
+def _load_bench():
     import importlib.util
     import os
 
@@ -110,8 +108,53 @@ def test_bench_regression_tripwire():
     )
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
+    return bench
 
-    prev = {"q_slow": 1.0, "q_noise": 0.01, "q_fast": 2.0, "q_same": 0.5}
+
+def test_bench_regression_tripwire():
+    """The per-query >2x tripwire fires on a real slowdown, skips
+    noise-band priors (<50 ms), new queries, and improvements - and
+    compares nothing against a record from another (or an unstated)
+    core count."""
+    bench = _load_bench()
+
+    queries = {"q_slow": 1.0, "q_noise": 0.01, "q_fast": 2.0, "q_same": 0.5}
     now = {"q_slow": 2.5, "q_noise": 0.4, "q_fast": 0.3, "q_same": 0.6, "q_new": 9.0}
-    got = bench.find_regressions(prev, now)
+    got = bench.find_regressions({"cpus": 8, "queries": queries}, now, cpus=8)
     assert got == {"q_slow": [1.0, 2.5]}
+    assert bench.find_regressions({"cpus": 8, "queries": queries}, now, cpus=32) == {}
+    assert bench.find_regressions({"queries": queries}, now, cpus=8) == {}
+
+
+def test_bench_emit_line_keeps_per_query_timings():
+    """A full suite with a long regression list (r14: 262 queries, 59
+    regressions) still emits per-query timings inside the tail window:
+    the regression list shrinks before any timing does."""
+    import json
+
+    bench = _load_bench()
+    queries = {f"q{i:03d}_some_query_family_name": 1.0 + i / 1000 for i in range(1, 263)}
+    regressions = {n: [0.5 + i / 100, 1.0 + i / 10] for i, n in enumerate(list(queries)[:60])}
+    out = {
+        "metric": "query_suite_wall_clock",
+        "value": round(sum(queries.values()), 3),
+        "unit": "sec",
+        "queries": queries,
+        "sf": 0.1,
+        "cpus": 32,
+        "streaming": {"frames": 3840000, "frames_per_sec": 2000000},
+        "regressions": regressions,
+    }
+    line = bench.emit_line(out)
+    assert len(line) <= bench._TAIL_WINDOW
+    got = json.loads(line)
+    assert got["queries"], "per-query timings must survive"
+    assert got["value"] == out["value"]
+
+    # a small suite keeps every timing at full precision; only the
+    # regression list gives way, top ratios first
+    small = dict(out, queries=dict(list(queries.items())[:20]))
+    got = json.loads(bench.emit_line(small))
+    assert got["queries"] == small["queries"]
+    assert len(got.get("regressions", {})) <= 10
+    assert got["regressions_elided"] == 60 - len(got.get("regressions", {}))

@@ -6,22 +6,24 @@ from __future__ import annotations
 
 import pytest
 
-from iceberg_daq_spark.registry import _RECHECK, all_queries
-from tests.oracle_harness import compare, duckdb_connect, stratified_sample
+from iceberg_daq_spark.registry import all_queries
+from tests.oracle_harness import compare, duckdb_connect, retest_names, stratified_sample
 
 SPECS = all_queries()
-# Default profile: a stratified ~60-query sample + every query in
-# _RECHECK (= changed this round); SPARK_GRAFT_FULL_TESTS=1 runs all.
+RETEST = retest_names()
+# Default profile: a stratified ~60-query sample + every query whose
+# code moved (oracle_harness.retest_names); SPARK_GRAFT_FULL_TESTS=1
+# runs all.
 # See oracle_harness.FULL_TESTS for the contract.
 ORACLE_NAMES = stratified_sample(
     sorted(n for n, s in SPECS.items() if s.oracle is not None),
     target=55,
-    always=tuple(_RECHECK),
+    always=RETEST,
 )
 ROWS_ONLY_NAMES = stratified_sample(
     sorted(n for n, s in SPECS.items() if s.oracle is None),
     target=8,
-    always=tuple(_RECHECK),
+    always=RETEST,
 )
 
 

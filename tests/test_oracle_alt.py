@@ -16,18 +16,20 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from iceberg_daq_spark.registry import _RECHECK, all_queries
-from tests.oracle_harness import compare, duckdb_connect, stratified_sample
+from iceberg_daq_spark.registry import all_queries
+from tests.oracle_harness import compare, duckdb_connect, retest_names, stratified_sample
 
 SPECS = all_queries()
+RETEST = retest_names()
 # Default profile: a stratified sample DISJOINT from test_oracle's
 # (offset=1 picks the names the offset=0 stride skips, so the two fast
-# batteries together cover ~2x the single-file sample) + every query in
-# _RECHECK; SPARK_GRAFT_FULL_TESTS=1 runs all (oracle_harness.FULL_TESTS).
+# batteries together cover ~2x the single-file sample) + every query whose
+# code moved (oracle_harness.retest_names); SPARK_GRAFT_FULL_TESTS=1 runs
+# all (oracle_harness.FULL_TESTS).
 ORACLE_NAMES = stratified_sample(
     sorted(n for n, s in SPECS.items() if s.oracle is not None),
     target=30,
-    always=tuple(_RECHECK),
+    always=RETEST,
     offset=1,
 )
 

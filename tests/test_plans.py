@@ -2392,24 +2392,24 @@ def test_q229_bootstrap_single_scan(spark, sf_dir):
 
 def test_driver_window_composition():
     """The driver hash-checks only the FIRST 50 entries of queries().
-    Since round 12 the window is DERIVED (never-checked registrations
-    first, then stalest driver rows - see registry._LAST_DRIVER_ROUND
-    and tests/test_registry_rotation.py for the full invariants); here
-    we pin the consequence that matters to the driver contract: every
-    registered query missing a driver CORRECTNESS row sits in the
-    window, and _RECHECK entries (implementation changed, oracle
-    unchanged) sit right behind them."""
+    The window is derived (registry.driver_rotation: never-checked
+    registrations first, then owed ones, then stalest driver rows; see
+    tests/test_registry_rotation.py for the full invariants); here we
+    pin the consequence that matters to the driver contract: every
+    registered query missing a driver CORRECTNESS row sits at the head
+    of the window, and owed queries (code changed since their last
+    driver round) are in the window too."""
     from iceberg_daq_spark.registry import (
-        _LAST_DRIVER_ROUND,
-        _RECHECK,
         all_queries,
         driver_ordered,
+        driver_rotation,
     )
 
+    rotation = driver_rotation()
     window = list(driver_ordered())[:50]
-    unchecked = {n for n in all_queries() if n not in _LAST_DRIVER_ROUND}
+    unchecked = {n for n in all_queries() if n not in rotation.last_round}
     assert unchecked <= set(window), "never-checked queries must be in-window"
-    assert set(_RECHECK) <= set(window), "re-confirmation-owed queries in-window"
+    assert rotation.owed <= set(window), "re-confirmation-owed queries in-window"
     assert window[: len(unchecked)] == [n for n in window if n in unchecked], (
         "never-checked queries must take the window head"
     )

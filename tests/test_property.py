@@ -8,7 +8,7 @@ src_ids, merge/update orderings).
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from iceberg_daq_spark.streaming import plan
@@ -138,6 +138,8 @@ _ops = st.lists(
 
 
 @given(ops=_ops)
+# a merge-on-read delete of every row leaves the add_column pending
+@example(ops=[("merge", [(0, 0)]), ("add_column", 0), ("delete_mor", 0), ("append", 0)])
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_merge_table_op_sequences_match_model(_spark, ops, tmp_path_factory):
@@ -181,7 +183,8 @@ def test_merge_table_op_sequences_match_model(_spark, ops, tmp_path_factory):
                 [{c: (k if c == "k" else v if c == "v" else payload)
                   for c in columns}]
             ).select(*columns)
-            if not phys_ok and data:
+            if not phys_ok:
+                # pending even with no live rows: an MoR delete rewrites no data
                 with pytest.raises(ValueError, match="physical schema"):
                     t.append(row_df)
                 continue
