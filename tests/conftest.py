@@ -29,14 +29,18 @@ def pytest_report_header(config):
     return [f"iceberg_daq_spark test profile: {profile}; master=local[{TEST_CPUS}]"]
 
 
-@pytest.fixture(scope="session")
-def spark():
-    s = get_spark(
+def make_session():
+    """The test session; ``python -m tests.plan_shape`` plans on the same."""
+    return get_spark(
         app_name="iceberg_daq_spark_tests",
         master=f"local[{TEST_CPUS}]",
         shuffle_partitions=8,
     )
-    yield s
+
+
+@pytest.fixture(scope="session")
+def spark():
+    yield make_session()
 
 
 @pytest.fixture(scope="session")

@@ -20,7 +20,7 @@ from iceberg_daq_spark.queries.datamix import (
     q257,
 )
 from iceberg_daq_spark.tables import load
-from tests.test_plans import plan_of
+from tests.plan_shape import plan_of
 
 
 def test_q254_topk_and_broadcast_model(spark, sf_dir):

@@ -11,6 +11,7 @@ from iceberg_daq_spark.functions import (
     ticks_to_ts,
     ts_to_ticks,
 )
+from tests.plan_shape import plan_of
 
 # whole-us tick values around the emulator epoch + odd sub-us stragglers
 TICKS = [0, 125, 62_500, 106_250_000_000_000, 106_250_000_012_500, 63, 187]
@@ -41,13 +42,7 @@ def test_sql_form_stays_in_codegen(spark):
     """The SQL UDF must be inlined by Catalyst - the plan contains no
     python-eval node, and literal inputs constant-fold away."""
     register_sql_functions(spark)
-    plan = spark.sql(
-        "SELECT ticks_to_ts(id * 62500) AS ts FROM range(10)"
-    )._sc._jvm.PythonSQLUtils.explainString(
-        spark.sql("SELECT ticks_to_ts(id * 62500) AS ts FROM range(10)")
-        ._jdf.queryExecution(),
-        "formatted",
-    )
+    plan = plan_of(spark.sql("SELECT ticks_to_ts(id * 62500) AS ts FROM range(10)"))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     # formatted explain marks codegen'd operators with a leading '*',
     # and the UDF body must appear inlined as the div expression

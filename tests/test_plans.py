@@ -4,10 +4,18 @@ Not timing tests - structural checks that the plans Catalyst produces
 are the ones that survive 100x scale-up: filters reach the parquet
 scan, projections prune columns, dims broadcast, top-k avoids global
 sort, and the interval join is an equi join (not a nested loop).
+
+``test_plan_shape`` pins the operator multiset of every registered
+query to the committed snapshot (``tests/plan_shape.py``), so which
+joins, exchanges, windows and scans a query plans is checked there.
+The other tests assert what a node count cannot: pushed and partition
+filters, partitioning keys, operator order, expression tokens, and the
+plans of operators and conf settings outside the registry.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -16,12 +24,36 @@ from iceberg_daq_spark.queries.joins import q04, q05
 from iceberg_daq_spark.queries.scans import q01
 from iceberg_daq_spark.queries.sort_setops import q21
 from iceberg_daq_spark.queries.windows import q30
+from iceberg_daq_spark.registry import all_queries
+from tests.plan_shape import check_snapshot, load_snapshot, plan_of, plan_shape, shape_of
+
+SNAPSHOT = load_snapshot()
 
 
-def plan_of(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+@pytest.mark.parametrize("name", sorted(all_queries()))
+def test_plan_shape(spark, sf_dir, name):
+    """Regenerate with ``python -m tests.plan_shape`` after an intended
+    plan change; the JSON diff shows which operators moved."""
+    assert plan_shape(spark, sf_dir, name) == SNAPSHOT.get(name)
+
+
+def test_snapshot_covers_registry_without_cartesian():
+    check_snapshot(SNAPSHOT, all_queries())
+
+
+def test_shape_counts_nodes_and_invariant_rejects_cartesian(spark, sf_dir):
+    from iceberg_daq_spark.tables import load
+
+    assert shape_of(plan_of(load(spark, sf_dir, "region")))["Scan parquet"] == 1
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        cart = shape_of(plan_of(spark.range(3).crossJoin(spark.range(4))))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert cart["CartesianProduct"] == 1
+    with pytest.raises(ValueError, match="CartesianProduct"):
+        check_snapshot({**SNAPSHOT, "q04_broadcast_join": cart}, all_queries())
 
 
 def test_q01_pushdown_and_pruning(spark, sf_dir):
@@ -36,7 +68,6 @@ def test_q01_pushdown_and_pruning(spark, sf_dir):
 def test_q12_partial_aggregation(spark, sf_dir):
     """Sum/avg must plan as partial (map-side) + final hash aggregate."""
     plan = plan_of(q12(spark, sf_dir))
-    assert plan.count("HashAggregate") >= 2
     assert "partial_sum" in plan or "Partial" in plan
 
 
@@ -271,11 +302,6 @@ def test_q69_single_wide_stage_before_agg(spark, sf_dir):
     from iceberg_daq_spark.queries.llm import q69
 
     plan = plan_of(q69(spark, sf_dir))
-    # exactly two exchanges in the plan tree: the lang window partition
-    # + the final orderBy (formatted output repeats operators in the
-    # details section, so count the tree block only)
-    tree = plan.split("\n\n")[0]
-    assert tree.count("Exchange") == 2, tree
     assert "partial_count" in plan
 
 
@@ -315,8 +341,6 @@ def test_dedup_shingle_joins_keep_aqe_skew_applicable(spark, sf_dir):
     mark the exchange REPARTITION_BY_COL and exclude it from skew
     splitting.  Assert the session flags are on and the q41/q42 plans
     keep the join exchanges AQE-owned (no user-forced shuffle origin)."""
-    from iceberg_daq_spark.registry import all_queries
-
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
     specs = all_queries()
@@ -339,8 +363,6 @@ def test_q72_window_group_limit_partial(spark, sf_dir):
     with a PARTIAL pass below the shuffle and FINAL above it - each map
     task forwards at most K rows per source, so a hot domain never
     ships its full row set to one reducer."""
-    from iceberg_daq_spark.registry import all_queries
-
     plan = plan_of(all_queries()["q72_source_cap"].fn(spark, sf_dir))
     i_partial = plan.index("row_number(), 50, Partial")
     i_final = plan.index("row_number(), 50, Final")
@@ -436,8 +458,6 @@ def test_q78_chunking_single_dedup_shuffle(spark, sf_dir):
     only other exchange allowed is the final deterministic orderBy's
     range partition.  Column pruning must reach the scan: only doc_id
     and text are read."""
-    from iceberg_daq_spark.registry import all_queries
-
     df = all_queries()["q78_doc_chunking"].fn(spark, sf_dir)
     plan = plan_of(df)
     # scan reads exactly the two needed columns
@@ -534,19 +554,6 @@ def test_q85_global_rank_no_single_partition_window(spark, sf_dir):
     assert "rangepartitioning" in plan.lower()
 
 
-def test_q84_stats_and_df_broadcast(spark, sf_dir):
-    """BM25's corpus stats and per-term df tables broadcast back to
-    the (doc, term) tf stream - the corpus is never reshuffled by the
-    tiny sides - and the top-20 is TakeOrdered, not a global sort."""
-    from iceberg_daq_spark.queries.llm import q84
-
-    plan = plan_of(q84(spark, sf_dir))
-    assert plan.count("BroadcastHashJoin") + plan.count(
-        "BroadcastNestedLoopJoin"
-    ) >= 2
-    assert "TakeOrderedAndProject" in plan
-
-
 def test_q87_classifier_map_only(spark, sf_dir):
     """The hashed-feature fold runs inside the scan stage: no
     Exchange below the final (tiny) sort, no explode-shuffle, no
@@ -554,8 +561,6 @@ def test_q87_classifier_map_only(spark, sf_dir):
     from iceberg_daq_spark.queries.llm import q87
 
     plan = plan_of(q87(spark, sf_dir))
-    assert "Generate" not in plan  # no explode - HOF fold only
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     # the ONLY exchange is the presentation orderBy's range partition
     assert plan.count("Exchange (") == 1 and "rangepartitioning" in plan
     assert "hashpartitioning" not in plan and "SinglePartition" not in plan
@@ -568,13 +573,7 @@ def test_q102_one_scan_per_table(spark, sf_dir):
     side broadcasts."""
     from iceberg_daq_spark.queries.daq import q102
 
-    import re
-
     plan = plan_of(q102(spark, sf_dir))
-    # numbered operator-tree nodes only (the formatted output repeats
-    # nodes in the AQE / reused-subtree sections without numbers)
-    n_scans = len(re.findall(r"Scan parquet\s+\(\d+\)", plan))
-    assert n_scans <= 4  # orders, lineitem, orders+customer (FK)
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
 
@@ -597,8 +596,6 @@ def test_q96_grouped_ntile_no_single_partition_window(spark, sf_dir):
 
     plan = plan_of(q96(spark, sf_dir))
     assert "_rank_pid" in plan  # the two-pass slice id is in the window key
-    # the offsets frame joins as a broadcast, not a shuffle
-    assert "BroadcastHashJoin" in plan
 
 
 def test_q99_weighted_sample_window_group_limit(spark, sf_dir):
@@ -650,21 +647,6 @@ def test_runtime_bloom_filter_join_pruning(spark, sf_dir):
     assert "might_contain" in plan
 
 
-def test_q106_blocked_join_is_equi(spark, sf_dir):
-    """The fuzzy-match self-join must hash-join on the composite
-    blocking key (never a cartesian/nested-loop with levenshtein as
-    the only predicate), and the per-record rollup must partial-agg."""
-    from iceberg_daq_spark.queries.matching import q106
-
-    plan = plan_of(q106(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or (
-        "BroadcastHashJoin" in plan
-    )
-    assert plan.count("HashAggregate") >= 2
-
-
 def test_q106_snm_candidates_linear_in_rows(spark):
     """Row-budget guard for the sorted-neighborhood window: a single
     block of n rows must generate <= n * 2W candidate pairs (the
@@ -705,7 +687,6 @@ def test_q107_skyline_broadcasts_reduced_frontier(spark, sf_dir):
     from iceberg_daq_spark.queries.matching import q107
 
     plan = plan_of(q107(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan
     assert "SinglePartition" not in plan
 
 
@@ -725,10 +706,9 @@ def test_q109_pagerank_round_is_join_plus_partial_agg(spark, sf_dir):
     """Each PageRank round must be an equi-join + partial/final hash
     aggregate on the node id - no cartesian, no single-partition
     exchange (asserted on the un-checkpointed round; the full query's
-    final plan is just a scan of the pinned RDD plus TakeOrdered,
-    which is itself asserted)."""
+    final plan, a scan of the pinned RDD plus TakeOrdered, is pinned
+    by test_plan_shape)."""
     from iceberg_daq_spark.operators import graph
-    from iceberg_daq_spark.queries.matching import q109
     from iceberg_daq_spark.tables import load
 
     d = load(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
@@ -741,10 +721,6 @@ def test_q109_pagerank_round_is_join_plus_partial_agg(spark, sf_dir):
     assert "CartesianProduct" not in plan
     assert "SinglePartition" not in plan
     assert "HashAggregate" in plan
-
-    # the registered query's terminal plan: checkpoint scan + top-k
-    full = plan_of(q109(spark, sf_dir))
-    assert "TakeOrderedAndProject" in full
 
 
 def test_pagerank_edge_shuffle_reused_across_rounds(spark, sf_dir):
@@ -780,32 +756,6 @@ def test_pagerank_edge_shuffle_reused_across_rounds(spark, sf_dir):
         ed.unpersist()
 
 
-def test_q110_cohort_reduces_before_joining(spark, sf_dir):
-    """Cohort retention must pre-reduce the event stream (distinct
-    (user, week)) before any join, broadcast the tiny cohort-size
-    table, and partial-agg every rollup - never reshuffle raw events
-    per stage."""
-    from iceberg_daq_spark.queries.behavior import q110
-
-    plan = plan_of(q110(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan
-    assert plan.count("HashAggregate") >= 4  # distinct + three rollups
-    assert "CartesianProduct" not in plan
-
-
-def test_q111_funnel_steps_are_equi_joins(spark, sf_dir):
-    """Each funnel step must join on user_id (equi, no nested loop
-    over events); the only cross join is the 4-row x 1-row percentage
-    base."""
-    from iceberg_daq_spark.queries.behavior import q111
-
-    plan = plan_of(q111(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    # the 4x1 base join may plan as BNLJ (formatted explain mentions
-    # each operator twice: tree + details) - anything more must not
-    assert plan.count("BroadcastNestedLoopJoin") <= 2
-
-
 def test_q116_gapfill_window_partitioned_not_global(spark, sf_dir):
     """The forward-fill window must partition by event_type (no
     single-partition global window), and the cell pre-reduce must be
@@ -813,7 +763,6 @@ def test_q116_gapfill_window_partitioned_not_global(spark, sf_dir):
     from iceberg_daq_spark.queries.timeseries import q116
 
     plan = plan_of(q116(spark, sf_dir))
-    assert "Window" in plan
     assert "partial_count" in plan or "Partial" in plan
     # a global (unpartitioned) window plans SinglePartition right
     # above the Window's sort - must not appear here
@@ -841,11 +790,6 @@ def test_q117_triangle_joins_all_equi(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in sub
 
     plan = plan_of(q117(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    # the final 1x1x1 count assembly is two cross joins of single
-    # rows (tree + details = up to 4 mentions); the data-plane wedge
-    # machinery must contribute none
-    assert plan.count("BroadcastNestedLoopJoin") <= 4
     # wedge machinery on the unpinned edge list stays equi-join only
     wedge = plan_of(
         triangle_count(copresence_edges(load(spark, sf_dir, "events"), pin=False))
@@ -922,11 +866,8 @@ def test_q119_full_outer_reuses_agg_partitioning(spark, sf_dir):
 
     plan = plan_of(q119(spark, sf_dir))
     assert "FullOuter" in plan
-    assert "CartesianProduct" not in plan
     # hashpartitioning(user_id, day) exchanges: one per pre-agg side;
     # the join itself must not add a third
-    import re
-
     data_exchanges = [
         ln
         for ln in plan.splitlines()
@@ -953,8 +894,6 @@ def test_q122_welch_is_single_agg_pair_no_join(spark, sf_dir):
     from iceberg_daq_spark.queries.behavior import q122
 
     plan = plan_of(q122(spark, sf_dir))
-    assert "Join" not in plan
-    assert "Window" not in plan
     assert plan.count("Scan parquet") <= 1 or plan.count("FileScan") <= 1
     assert "partial" in plan.lower()
 
@@ -966,10 +905,7 @@ def test_q123_spatial_join_is_equi_on_cells(spark, sf_dir):
     from iceberg_daq_spark.queries.spatial import q123
 
     plan = plan_of(q123(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
     assert "pcx" in plan  # joined on the exploded neighbor-cell key
-    assert "TakeOrderedAndProject" in plan
 
 
 def test_q124_shipdate_pushed_and_scalar_subquery(spark, sf_dir):
@@ -991,24 +927,9 @@ def test_q126_attribution_window_user_partitioned(spark, sf_dir):
     from iceberg_daq_spark.queries.behavior import q126
 
     plan = plan_of(q126(spark, sf_dir))
-    assert "Window" in plan
     assert "partial_count" in plan or "Partial" in plan
     window_head = plan.split("Window")[0].splitlines()[-1]
     assert "SinglePartition" not in window_head
-
-
-def test_q127_profile_null_counts_single_scan(spark, sf_dir):
-    """All null counts must land in one agg pair over one scan (the
-    oracle's per-column UNION ALL re-scan is the shape this avoids);
-    the count-distincts plan through Expand, not per-column scans."""
-    from iceberg_daq_spark.queries.aggregates import q127
-
-    plan = plan_of(q127(spark, sf_dir))
-    n_scans = max(plan.count("Scan parquet"), 1)
-    # two agg legs (nulls + distincts) share at most 2 scans vs the
-    # oracle's 11
-    assert n_scans <= 4, n_scans
-    assert "Expand" in plan
 
 
 def test_q103_giant_group_switches_to_rolling_substrate(spark):
@@ -1045,12 +966,9 @@ def test_q128_degree_histogram_two_partial_aggs(spark, sf_dir):
     most max-degree rows), never the edge list.  The valve's top-k
     (WindowGroupLimit) lives in the pinned substrate since r13, so it
     is asserted on the un-pinned plan."""
-    from iceberg_daq_spark.queries.matching import copresence_edges, q128
+    from iceberg_daq_spark.queries.matching import copresence_edges
     from iceberg_daq_spark.tables import load
 
-    plan = plan_of(q128(spark, sf_dir))
-    assert plan.count("HashAggregate") >= 4
-    assert "CartesianProduct" not in plan
     sub = plan_of(copresence_edges(load(spark, sf_dir, "events"), pin=False))
     assert "WindowGroupLimit" in sub  # the valve's top-k survives
 
@@ -1062,7 +980,6 @@ def test_q129_cusum_windows_partition_by_type_day(spark, sf_dir):
     from iceberg_daq_spark.queries.timeseries import q129
 
     plan = plan_of(q129(spark, sf_dir))
-    assert "WindowGroupLimit" in plan
     # no unpartitioned window anywhere: SinglePartition must not
     # front a Window operator
     for seg in plan.split("Window")[:-1]:
@@ -1077,23 +994,7 @@ def test_q130_decay_is_single_agg_topk(spark, sf_dir):
     from iceberg_daq_spark.queries.behavior import q130
 
     plan = plan_of(q130(spark, sf_dir))
-    assert "TakeOrderedAndProject" in plan
-    assert "Window" not in plan
     assert "partial_sum" in plan or "Partial" in plan
-    assert "BroadcastExchange" in plan or "BroadcastNestedLoopJoin" in plan
-
-
-def test_q131_mad_three_shuffles_one_key(spark, sf_dir):
-    """Median and MAD plan as grouped aggregates joined back on
-    event_type - no cartesian, no window over the value stream."""
-    from iceberg_daq_spark.queries.timeseries import q131
-
-    plan = plan_of(q131(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "Window" not in plan
-    assert plan.count("HashAggregate") + plan.count("ObjectHashAggregate") + plan.count(
-        "SortAggregate"
-    ) >= 4
 
 
 def test_q132_rfm_thresholds_broadcast(spark, sf_dir):
@@ -1116,13 +1017,6 @@ def test_q134_pit_join_is_equi_with_pushed_type_filters(spark, sf_dir):
     from iceberg_daq_spark.queries.allocation import q134
 
     plan = plan_of(q134(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert (
-        "SortMergeJoin" in plan
-        or "ShuffledHashJoin" in plan
-        or "BroadcastHashJoin" in plan
-    )
     pushed = [seg.split("]")[0] for seg in plan.split("PushedFilters: [")[1:]]
     assert any("event_type" in p for p in pushed)
 
@@ -1134,27 +1028,9 @@ def test_q137_prorate_windows_per_order_no_global_sort(spark, sf_dir):
     from iceberg_daq_spark.queries.allocation import q137
 
     plan = plan_of(q137(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
     for seg in plan.split("Window")[:-1]:
         lines = seg.splitlines()
         assert not lines or "SinglePartition" not in lines[-1]
-
-
-def test_q135_single_scan_window_marginals(spark, sf_dir):
-    """PMI must read documents EXACTLY ONCE: marginals are window
-    sums over the contingency cell table, not separate
-    re-aggregations of the source (one rescan per marginal).  No
-    joins, no Python."""
-    import re
-
-    from iceberg_daq_spark.queries.curation import q135
-
-    plan = plan_of(q135(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "Join" not in plan
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
-    assert "BatchEvalPython" not in plan
 
 
 def test_q136_pattern_regex_jvm_side_windows_per_user(spark, sf_dir):
@@ -1164,8 +1040,6 @@ def test_q136_pattern_regex_jvm_side_windows_per_user(spark, sf_dir):
     from iceberg_daq_spark.queries.behavior import q136
 
     plan = plan_of(q136(spark, sf_dir))
-    assert "BatchEvalPython" not in plan
-    assert "CartesianProduct" not in plan
     for seg in plan.split("Window")[:-1]:
         lines = seg.splitlines()
         assert not lines or "SinglePartition" not in lines[-1]
@@ -1181,40 +1055,7 @@ def test_q138_trailing_window_is_explode_not_nlj(spark, sf_dir):
     from iceberg_daq_spark.queries.timeseries import q138
 
     plan = plan_of(q138(spark, sf_dir))
-    assert "CartesianProduct" not in plan
     assert "Generate" in plan and "explode" in plan
-    # the only BNLJ allowed is the scalar span (1-row) cross join
-    # (formatted plans print each operator twice: tree + details)
-    assert plan.count("BroadcastNestedLoopJoin") <= 2
-    assert plan.count("HashAggregate") >= 2
-
-
-def test_q139_rank_span_table_broadcasts(spark, sf_dir):
-    """The global-rank span table (value-histogram-sized) must
-    broadcast into the per-document range join; the only
-    unpartitioned window runs over the HISTOGRAM (value space), and
-    the per-document windows partition by source."""
-    from iceberg_daq_spark.queries.curation import q139
-
-    plan = plan_of(q139(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert "BatchEvalPython" not in plan
-
-
-def test_q140_contingency_single_scan(spark, sf_dir):
-    """Chi-square must read documents EXACTLY ONCE: the marginals are
-    window sums over the contingency cell table, not separate
-    re-aggregations of the source (which Spark would plan as one
-    rescan per marginal).  No joins anywhere."""
-    import re
-
-    from iceberg_daq_spark.queries.stats import q140
-
-    plan = plan_of(q140(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "Join" not in plan
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
 
 
 def test_q141_ols_is_one_aggregate_pass(spark, sf_dir):
@@ -1223,12 +1064,7 @@ def test_q141_ols_is_one_aggregate_pass(spark, sf_dir):
     algebra is a projection over the single moment row."""
     from iceberg_daq_spark.queries.stats import q141
 
-    import re
-
     plan = plan_of(q141(spark, sf_dir))
-    assert "Window" not in plan
-    assert "Join" not in plan
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
     assert "partial" in plan.lower() or plan.count("HashAggregate") >= 2
 
 
@@ -1238,18 +1074,10 @@ def test_q142_km_single_user_reduction_feeds_everything(spark, sf_dir):
     window all derive from it.  The survival windows run over the
     span-bounded day table (above the day-collapse agg pair), never
     the event stream."""
-    import re
-
     from iceberg_daq_spark.queries.stats import q142
 
     plan = plan_of(q142(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    # the checkpointed user reduction appears as ExistingRDD scans;
-    # the raw parquet is gone from the final plan entirely
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 0
     assert "ExistingRDD" in plan
-    # day-collapse agg pair sits below the windows
-    assert plan.count("HashAggregate") >= 2 and "Window" in plan
 
 
 def test_q143_gini_windows_per_segment(spark, sf_dir):
@@ -1259,8 +1087,6 @@ def test_q143_gini_windows_per_segment(spark, sf_dir):
     from iceberg_daq_spark.queries.stats import q143
 
     plan = plan_of(q143(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
     for seg in plan.split("Window")[:-1]:
         lines = seg.splitlines()
         assert not lines or "SinglePartition" not in lines[-1]
@@ -1270,15 +1096,11 @@ def test_q144_benford_digit_extraction_map_side(spark, sf_dir):
     """Digit extraction must be map-side string math over ONE scan
     with the positivity filter pushed to parquet; all window math
     runs over the 9-row digit table."""
-    import re
-
     from iceberg_daq_spark.queries.stats import q144
 
     plan = plan_of(q144(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
     assert "PushedFilters: [" in plan
     assert "o_totalprice" in plan.split("PushedFilters")[1].split("]")[0]
-    assert "BatchEvalPython" not in plan
 
 
 def test_q145_twap_segmented_window(spark, sf_dir):
@@ -1291,10 +1113,7 @@ def test_q145_twap_segmented_window(spark, sf_dir):
     from iceberg_daq_spark.queries.timeseries import q145
 
     plan = plan_of(q145(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 2
     assert re.search(r"hashpartitioning\(event_type[^)]*,\s*d", plan)
-    assert "Join" not in plan
-    assert "BatchEvalPython" not in plan
 
 
 def test_q146_band_table_broadcasts_back(spark, sf_dir):
@@ -1321,34 +1140,14 @@ def test_q147_psi_band_broadcast_then_cells(spark, sf_dir):
     assert "BatchEvalPython" not in plan
 
 
-def test_q148_xcorr_joins_on_shifted_day(spark, sf_dir):
-    """The lag expansion must broadcast (cells x 8) and the pair join
-    must be an EQUI join on the shifted day (type inequality as
-    residual), never a nested-loop over the cell table pair."""
-    from iceberg_daq_spark.queries.timeseries import q148
-
-    plan = plan_of(q148(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert (
-        "SortMergeJoin" in plan
-        or "ShuffledHashJoin" in plan
-        or plan.count("BroadcastHashJoin") >= 1
-    )
-    assert "WindowGroupLimit" in plan  # argmax rank-1 pushes down
-
-
 def test_q149_feature_matrix_single_reduction(spark, sf_dir):
     """Events must be scanned exactly once (checkpointed per-user
     reduction feeds the observation-end scalar); all count-distincts
     expand inside the one aggregate."""
-    import re
-
     from iceberg_daq_spark.queries.behavior import q149
 
     plan = plan_of(q149(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 0
     assert "ExistingRDD" in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_q150_entry_type_rides_session_agg(spark, sf_dir):
@@ -1359,26 +1158,9 @@ def test_q150_entry_type_rides_session_agg(spark, sf_dir):
     from iceberg_daq_spark.queries.behavior import q150
 
     plan = plan_of(q150(spark, sf_dir))
-    assert "BatchEvalPython" not in plan
-    assert "CartesianProduct" not in plan
     for seg in plan.split("Window")[:-1]:
         lines = seg.splitlines()
         assert not lines or "SinglePartition" not in lines[-1]
-
-
-def test_q151_sla_one_shuffle_join(spark, sf_dir):
-    """The order-key join must be a shuffle/broadcast equi join with
-    the day math map-side; percentiles fold per priority group."""
-    from iceberg_daq_spark.queries.commerce import q151
-
-    plan = plan_of(q151(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert (
-        "SortMergeJoin" in plan
-        or "ShuffledHashJoin" in plan
-        or "BroadcastHashJoin" in plan
-    )
-    assert "BatchEvalPython" not in plan
 
 
 def test_q152_part_dim_broadcasts_cells_bounded(spark, sf_dir):
@@ -1399,8 +1181,6 @@ def test_q153_hhi_dims_broadcast_window_per_nation(spark, sf_dir):
     from iceberg_daq_spark.queries.commerce import q153
 
     plan = plan_of(q153(spark, sf_dir))
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert "CartesianProduct" not in plan
     for seg in plan.split("Window")[:-1]:
         lines = seg.splitlines()
         assert not lines or "SinglePartition" not in lines[-1]
@@ -1409,13 +1189,9 @@ def test_q153_hhi_dims_broadcast_window_per_nation(spark, sf_dir):
 def test_q154_heatmap_single_scan_bounded_window(spark, sf_dir):
     """One scan, one partial-agg shuffle to types x 168 cells; the
     share window partitions by type over that bounded grid."""
-    import re
-
     from iceberg_daq_spark.queries.commerce import q154
 
     plan = plan_of(q154(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
-    assert "Join" not in plan
     for seg in plan.split("Window")[:-1]:
         lines = seg.splitlines()
         assert not lines or "SinglePartition" not in lines[-1]
@@ -1426,12 +1202,9 @@ def test_q155_ltv_single_scan_bounded_windows(spark, sf_dir):
     window runs over the (user, day) reduction and the cumulative
     window over (cohort, age) cells - both partitioned, no
     SinglePartition window."""
-    import re
-
     from iceberg_daq_spark.queries.behavior import q155
 
     plan = plan_of(q155(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
     assert "event_type" in plan.split("PushedFilters")[1].split("]")[0]
     for seg in plan.split("Window")[:-1]:
         lines = seg.splitlines()
@@ -1453,12 +1226,9 @@ def test_q156_bridge_two_broadcasts_one_reduction(spark, sf_dir):
 def test_q158_doublefire_window_per_user_type(spark, sf_dir):
     """The gap window must partition by (user, type) - wider fan-out
     than per-user alone - with one scan and one grouped agg."""
-    import re
-
     from iceberg_daq_spark.queries.behavior import q158
 
     plan = plan_of(q158(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
     for seg in plan.split("Window")[:-1]:
         lines = seg.splitlines()
         assert not lines or "SinglePartition" not in lines[-1]
@@ -1495,8 +1265,6 @@ def test_q160_sketch_table_is_day_sized(spark, sf_dir):
     from iceberg_daq_spark.queries.timeseries import q160
 
     plan = plan_of(q160(spark, sf_dir))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
     assert "hll_sketch_agg" in plan or "HllSketchAgg" in plan
 
 
@@ -1504,14 +1272,10 @@ def test_q161_ks_grid_is_value_space_sized(spark, sf_dir):
     """The CDF windows must run over the quantized value GRID (one
     partial-agg shuffle below them), with the type filter pushed to
     the scan and one scan total."""
-    import re
-
     from iceberg_daq_spark.queries.stats import q161
 
     plan = plan_of(q161(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
     assert "event_type" in plan.split("PushedFilters")[1].split("]")[0]
-    assert "CartesianProduct" not in plan
 
 
 def test_q162_incidence_pinned_single_fact_scan(spark, sf_dir):
@@ -1520,42 +1284,20 @@ def test_q162_incidence_pinned_single_fact_scan(spark, sf_dir):
     cache (pairs generate map-side by double explode - no self-join
     of the incidence, so no SortMergeJoin), and pair generation is
     never a cartesian."""
-    import re
-
     from iceberg_daq_spark.queries.market import q162
 
     plan = plan_of(q162(spark, sf_dir))
-    assert "CartesianProduct" not in plan
     assert "collect_set" in plan
-    assert len(re.findall(r"\(\d+\) SortMergeJoin", plan)) == 0
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-
-
-def test_q163_ztest_single_scan_partial_agg(spark, sf_dir):
-    """Both arms' (n, x) pivot in ONE partial+final aggregate pass over
-    a single scan - no join, no window, no second scan."""
-    import re
-
-    from iceberg_daq_spark.queries.market import q163
-
-    plan = plan_of(q163(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
-    assert plan.count("HashAggregate") >= 2
-    assert "Join" not in plan
 
 
 def test_q164_mwu_grid_sized_window(spark, sf_dir):
     """Midranks must reduce to the 3-decimal value grid before the
     rank-sum window: one scan with the type filter pushed down, and
     the window input is the grid aggregate, not row-level events."""
-    import re
-
     from iceberg_daq_spark.queries.market import q164
 
     plan = plan_of(q164(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
     assert "event_type" in plan.split("PushedFilters")[1].split("]")[0]
-    assert "CartesianProduct" not in plan
 
 
 def test_q165_copurchase_pinned_and_group_limited(spark, sf_dir):
@@ -1564,58 +1306,10 @@ def test_q165_copurchase_pinned_and_group_limited(spark, sf_dir):
     explode (NO self-join of the incidence - no SortMergeJoin and no
     data-sized broadcast anywhere), and the per-brand top-3 still
     plans a WindowGroupLimit below the rank filter."""
-    import re
-
     from iceberg_daq_spark.queries.market import q165
 
     plan = plan_of(q165(spark, sf_dir))
-    assert "CartesianProduct" not in plan
     assert "collect_set" in plan
-    assert len(re.findall(r"\(\d+\) SortMergeJoin", plan)) == 0
-    assert "WindowGroupLimit" in plan
-    # the only joins left attach the broadcast <=25-row marginals
-    assert len(re.findall(r"\(\d+\) ShuffledHashJoin", plan)) == 0
-
-
-def test_q166_kl_user_grain_pinned(spark, sf_dir):
-    """The user-grain pivot is pinned, the global mix joins back as a
-    single broadcast row, and events is never re-scanned."""
-    import re
-
-    from iceberg_daq_spark.queries.market import q166
-
-    plan = plan_of(q166(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 0
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_q167_attribution_one_scan_one_window(spark, sf_dir):
-    """Last-touch attribution is one scan, one user-partitioned window
-    (running max of the prior-event struct), one partial agg - no
-    self-join of events against events."""
-    import re
-
-    from iceberg_daq_spark.queries.market import q167
-
-    plan = plan_of(q167(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
-    assert plan.count("Window") >= 1
-    assert "Join" not in plan
-
-
-def test_q168_shipping_priority_takeordered(spark, sf_dir):
-    """Q3 analog: segment-filtered customer broadcasts, date filters
-    push to both fact scans, top-10 is TakeOrdered (no global sort)."""
-    import re
-
-    from iceberg_daq_spark.queries.tpch_ext import q168
-
-    plan = plan_of(q168(spark, sf_dir))
-    assert "TakeOrderedAndProject" in plan
-    assert plan.count("BroadcastHashJoin") >= 1
-    assert "CartesianProduct" not in plan
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 3
 
 
 def test_q169_wait_is_semi_join(spark, sf_dir):
@@ -1625,21 +1319,16 @@ def test_q169_wait_is_semi_join(spark, sf_dir):
 
     plan = plan_of(q169(spark, sf_dir))
     assert "LeftSemi" in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_q170_uplift_single_scan_all_pushed(spark, sf_dir):
     """Q6 analog: one scan, every predicate pushed, one partial+final
     agg, no join and no shuffle beyond the single-row final."""
-    import re
-
     from iceberg_daq_spark.queries.tpch_ext import q170
 
     plan = plan_of(q170(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
     pushed = plan.split("PushedFilters")[1].split("]")[0]
     assert "l_shipdate" in pushed and "l_quantity" in pushed
-    assert "Join" not in plan
 
 
 def test_q171_volume_shipping_dims_broadcast(spark, sf_dir):
@@ -1669,9 +1358,7 @@ def test_q173_returned_items_takeordered(spark, sf_dir):
     from iceberg_daq_spark.queries.tpch_ext import q173
 
     plan = plan_of(q173(spark, sf_dir))
-    assert "TakeOrderedAndProject" in plan
     assert "l_returnflag" in plan.split("PushedFilters")[1].split("]")[0]
-    assert "CartesianProduct" not in plan
 
 
 def test_q174_distribution_preaggregates_orders(spark, sf_dir):
@@ -1682,7 +1369,6 @@ def test_q174_distribution_preaggregates_orders(spark, sf_dir):
     from iceberg_daq_spark.queries.tpch_ext import q174
 
     plan = plan_of(q174(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 2
     # operator ids are post-order (children first): the orders-side
     # aggregate must carry a smaller id than the outer join above it
     agg_id = min(int(m) for m in re.findall(r"\((\d+)\) HashAggregate", plan))
@@ -1696,7 +1382,6 @@ def test_q175_promo_share_broadcast_part(spark, sf_dir):
     from iceberg_daq_spark.queries.tpch_ext import q175
 
     plan = plan_of(q175(spark, sf_dir))
-    assert plan.count("BroadcastHashJoin") >= 1
     assert "l_shipdate" in plan.split("PushedFilters")[1].split("]")[0]
 
 
@@ -1720,7 +1405,6 @@ def test_q177_large_volume_preagg_then_takeordered(spark, sf_dir):
     from iceberg_daq_spark.queries.tpch_ext import q177
 
     plan = plan_of(q177(spark, sf_dir))
-    assert "TakeOrderedAndProject" in plan
     # post-order ids: the order-grain aggregate sits below the join
     agg_id = min(int(m) for m in re.findall(r"\((\d+)\) HashAggregate", plan))
     join_id = min(int(m) for m in re.findall(r"\((\d+)\) \w*Join\w*", plan))
@@ -1736,8 +1420,6 @@ def test_q178_waiting_suppliers_one_orderkey_shuffle(spark, sf_dir):
     from iceberg_daq_spark.queries.tpch_ext import q178
 
     plan = plan_of(q178(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 2
-    assert plan.count("Window") >= 2
     # exactly one exchange hash-partitioned on okey feeds the windows
     assert len(re.findall(r"hashpartitioning\(okey", plan)) <= 2
 
@@ -1749,21 +1431,15 @@ def test_q179_dormant_rich_anti_join(spark, sf_dir):
 
     plan = plan_of(q179(spark, sf_dir))
     assert "LeftAnti" in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_q180_seasonal_grid_sized_window(spark, sf_dir):
     """The moving average runs over the DAY grid (one partial-agg
     shuffle below it), with the purchase filter pushed to the scan."""
-    import re
-
     from iceberg_daq_spark.queries.quant import q180
 
     plan = plan_of(q180(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
     assert "event_type" in plan.split("PushedFilters")[1].split("]")[0]
-    assert "CartesianProduct" not in plan
 
 
 def test_q181_backtest_pinned_grid(spark, sf_dir):
@@ -1778,20 +1454,6 @@ def test_q181_backtest_pinned_grid(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_q182_balance_one_window_shuffle(spark, sf_dir):
-    """The clamp's closed form needs ONE cumulative window (no per-row
-    recursion, no self-join); the per-user agg reuses its partitioning
-    and the top-20 is TakeOrdered."""
-    import re
-
-    from iceberg_daq_spark.queries.quant import q182
-
-    plan = plan_of(q182(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
-    assert "TakeOrderedAndProject" in plan
-    assert "Join" not in plan
-
-
 def test_q183_drawdown_two_windows_one_sort(spark, sf_dir):
     """Prefix sum and running peak share the same (user, ts, event_id)
     ordering - both Window nodes sit over one user-hash exchange."""
@@ -1800,37 +1462,7 @@ def test_q183_drawdown_two_windows_one_sort(spark, sf_dir):
     from iceberg_daq_spark.queries.quant import q183
 
     plan = plan_of(q183(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
-    assert plan.count("Window") >= 2
     assert len(re.findall(r"hashpartitioning\(user_id", plan)) <= 2
-    assert "Join" not in plan
-
-
-def test_q184_weekend_lift_broadcast_totals(spark, sf_dir):
-    """One scan to a 5-group pinned agg (zero parquet re-scans after
-    the checkpoint); the totals row joins back as a broadcast, never
-    a cartesian."""
-    import re
-
-    from iceberg_daq_spark.queries.quant import q184
-
-    plan = plan_of(q184(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 0
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_q185_power_single_pass_no_join(spark, sf_dir):
-    """The base rate is one exact-count pass; the MDE grid is a
-    literal explode - no join anywhere."""
-    import re
-
-    from iceberg_daq_spark.queries.quant import q185
-
-    plan = plan_of(q185(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
-    assert "Join" not in plan
-    assert "Generate" in plan
 
 
 def test_q186_markov2_one_window_shuffle(spark, sf_dir):
@@ -1841,142 +1473,26 @@ def test_q186_markov2_one_window_shuffle(spark, sf_dir):
     from iceberg_daq_spark.queries.sequence import q186
 
     plan = plan_of(q186(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
     assert len(re.findall(r"hashpartitioning\(user_id", plan)) <= 2
-    assert "Join" not in plan
 
 
 def test_q187_bot_burst_shared_user_sort(spark, sf_dir):
     """Burst lengths and per-user stats flow through ONE lineage (the
     islands trick + a two-level agg): one scan, no join, micros stay
     integer, and the window passes share the user-partitioned sort."""
-    import re
-
     from iceberg_daq_spark.queries.sequence import q187
 
     plan = plan_of(q187(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
-    assert "Join" not in plan
-    assert "TakeOrderedAndProject" in plan
     assert "unix_micros" in plan
-
-
-def test_q188_retention_pinned_month_grain(spark, sf_dir):
-    """The (user, month) grain is reduced once and pinned - the
-    month-shift self-join reads the checkpoint twice, events is
-    never re-scanned."""
-    import re
-
-    from iceberg_daq_spark.queries.sequence import q188
-
-    plan = plan_of(q188(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 0
-    assert "CartesianProduct" not in plan
-
-
-def test_q189_vocab_growth_word_grain_shuffle(spark, sf_dir):
-    """One explode, one word-grain agg, a broadcast doc-count row, a
-    <=10-row cumulative window - no big sort anywhere."""
-    import re
-
-    from iceberg_daq_spark.queries.sequence import q189
-
-    plan = plan_of(q189(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 2  # tokens + count
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_q190_perplexity_pinned_types_broadcast_model(spark, sf_dir):
-    """The per-doc bigram-type reduction is pinned (the model
-    re-aggregates from it and broadcasts back); only the vocabulary
-    count re-reads the corpus, so exactly ONE parquet scan remains."""
-    import re
-
-    from iceberg_daq_spark.queries.sequence import q190
-
-    plan = plan_of(q190(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert "CartesianProduct" not in plan
-
-
-def test_q191_abc_part_grain_pinned(spark, sf_dir):
-    """Lineitem reduces to part grain first and the reduction is
-    pinned (zero parquet re-scans); the cumulative window runs over
-    the dimension-sized table; class boundaries are integer."""
-    import re
-
-    from iceberg_daq_spark.queries.economics import q191
-
-    plan = plan_of(q191(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 0
-    assert "CartesianProduct" not in plan
-
-
-def test_q192_migration_pinned_month_grain(spark, sf_dir):
-    """The (user, month) grain is pinned; the month-shift join reads
-    the checkpoint twice; the matrix shares are window-sums over
-    <= 12 cells."""
-    import re
-
-    from iceberg_daq_spark.queries.economics import q192
-
-    plan = plan_of(q192(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 0
-    assert "CartesianProduct" not in plan
-
-
-def test_q193_hhi_one_custbrand_shuffle(spark, sf_dir):
-    """Part broadcasts onto the fact scan, the orderkey join feeds ONE
-    (cust, brand) partial-agg shuffle, and windows/HHI run over that
-    reduction - no fact-sized sort."""
-    import re
-
-    from iceberg_daq_spark.queries.economics import q193
-
-    plan = plan_of(q193(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 3
-    assert plan.count("BroadcastHashJoin") >= 1
-    assert "CartesianProduct" not in plan
-
-
-def test_q194_new_returning_single_consumption(spark, sf_dir):
-    """First-month derives FROM the pinned month grain (no events
-    re-scan) and joins back on the grain's own key."""
-    import re
-
-    from iceberg_daq_spark.queries.economics import q194
-
-    plan = plan_of(q194(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 0
-    assert "CartesianProduct" not in plan
 
 
 def test_q195_cadence_one_window_one_row(spark, sf_dir):
     """Purchase filter pushed to the scan, one user-partitioned lag
     window, one global row out - no join."""
-    import re
-
     from iceberg_daq_spark.queries.economics import q195
 
     plan = plan_of(q195(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
     assert "event_type" in plan.split("PushedFilters")[1].split("]")[0]
-    assert "Join" not in plan
-
-
-def test_q196_banding_sorts_dimension_only(spark, sf_dir):
-    """The ntile banding sorts the part DIMENSION and broadcasts back
-    onto the fact scan - the fact table is never globally sorted."""
-    import re
-
-    from iceberg_daq_spark.queries.economics import q196
-
-    plan = plan_of(q196(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 2
-    assert plan.count("BroadcastHashJoin") >= 1
-    assert "CartesianProduct" not in plan
 
 
 def test_q197_recon_preagg_below_join(spark, sf_dir):
@@ -1990,19 +1506,6 @@ def test_q197_recon_preagg_below_join(spark, sf_dir):
     agg_id = min(int(m) for m in re.findall(r"\((\d+)\) HashAggregate", plan))
     join_id = min(int(m) for m in re.findall(r"\((\d+)\) \w*Join\w*", plan))
     assert agg_id < join_id
-    assert "CartesianProduct" not in plan
-
-
-def test_q198_laspeyres_pinned_part_year_grain(spark, sf_dir):
-    """The (part, year) grain is pinned - base-year basket and probe
-    both read the checkpoint, lineitem scans once."""
-    import re
-
-    from iceberg_daq_spark.queries.economics import q198
-
-    plan = plan_of(q198(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 0
-    assert "CartesianProduct" not in plan
 
 
 def test_q199_lpa_edge_stage_and_final_fold(spark, sf_dir):
@@ -2023,63 +1526,7 @@ def test_q199_lpa_edge_stage_and_final_fold(spark, sf_dir):
     assert len(re.findall(r"\(\d+\) Window", edges)) == 0
 
     plan = plan_of(q199(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert len(re.findall(r"\(\d+\) Window", plan)) == 0
     assert len(plan.splitlines()) < 120, "final LPA plan regrew a per-round chain"
-
-
-def test_q200_wilson_single_pass(spark, sf_dir):
-    """Ten (n, x) pairs from one partial+final agg over one scan; no
-    join; the rank is a TakeOrdered-able sort over 10 rows."""
-    import re
-
-    from iceberg_daq_spark.queries.mining import q200
-
-    plan = plan_of(q200(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
-    assert "Join" not in plan
-
-
-def test_q201_hotspot_cell_grain_neighborhood(spark, sf_dir):
-    """Points reduce to CELL grain (pinned) before the 9-offset
-    equi-join neighborhood; global moments broadcast as one row;
-    no distance cross-join anywhere."""
-    import re
-
-    from iceberg_daq_spark.queries.mining import q201
-
-    plan = plan_of(q201(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 0
-    assert "CartesianProduct" not in plan
-    assert "TakeOrderedAndProject" in plan
-
-
-def test_q202_did_single_pass_no_join(spark, sf_dir):
-    """All eight DiD cells pivot in ONE partial+final aggregate pass
-    over a single scan."""
-    import re
-
-    from iceberg_daq_spark.queries.mining import q202
-
-    plan = plan_of(q202(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
-    assert plan.count("HashAggregate") >= 2
-    assert "Join" not in plan
-
-
-def test_q203_separation_one_explode_broadcast_protos(spark, sf_dir):
-    """Exactly one exploded pass builds the median prototypes; member
-    dots/norms are map-only array folds after a broadcast of the
-    10-row prototype table - the corpus is never shuffled for pairs."""
-    import re
-
-    from iceberg_daq_spark.queries.embedding_eval import q203
-
-    plan = plan_of(q203(spark, sf_dir))
-    # the (label x label) matrix is pinned, so the final margins plan
-    # reads the checkpoint - no parquet scan, no explode survives
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 0
-    assert "CartesianProduct" not in plan
 
 
 def test_q204_knn_sample_broadcasts(spark, sf_dir):
@@ -2087,29 +1534,10 @@ def test_q204_knn_sample_broadcasts(spark, sf_dir):
     (pair volume = sample x corpus, no corpus shuffle); the per-query
     winner is a max_by PARTIAL AGGREGATION (r14) - no ranked window
     shuffling/sorting every scored pair."""
-    import re
-
     from iceberg_daq_spark.queries.embedding_eval import q204
 
     plan = plan_of(q204(spark, sf_dir))
-    assert "BroadcastNestedLoopJoin" in plan
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 2
     assert "max_by" in plan
-    assert len(re.findall(r"\(\d+\) Window", plan)) == 0
-
-
-def test_q205_attribution_no_self_join_for_journeys(spark, sf_dir):
-    """Journey ids come from a reverse cumulative purchase count - one
-    user-partitioned sort, no events-vs-events self-join; the credit
-    join is (user, journey)-keyed over the same partitioning."""
-    import re
-
-    from iceberg_daq_spark.queries.attribution import q205
-
-    plan = plan_of(q205(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) <= 2
-    assert plan.count("Window") >= 2
-    assert "CartesianProduct" not in plan
 
 
 def test_q206_ri_audit_anti_joins(spark, sf_dir):
@@ -2119,143 +1547,25 @@ def test_q206_ri_audit_anti_joins(spark, sf_dir):
 
     plan = plan_of(q206(spark, sf_dir))
     assert plan.count("LeftAnti") >= 5
-    assert "CartesianProduct" not in plan
-
-
-def test_q207_yoy_pinned_week_grain(spark, sf_dir):
-    """Orders reduce to the week grain once (pinned) - the 52-week
-    shift self-join reads the checkpoint, no second orders scan."""
-    import re
-
-    from iceberg_daq_spark.queries.reporting import q207
-
-    plan = plan_of(q207(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 0
-    assert "CartesianProduct" not in plan
-
-
-def test_q208_backlog_is_sweep_not_interval_join(spark, sf_dir):
-    """Overlap counting must be the +1/-1 sweep: order-grain partial
-    agg below the orderkey join, a delta-grid union agg, one
-    grid-sized prefix window - and NO day-in-span interval join
-    (no range-condition join anywhere)."""
-    import re
-
-    from iceberg_daq_spark.queries.reporting import q208
-
-    plan = plan_of(q208(spark, sf_dir))
-    assert "TakeOrderedAndProject" in plan
-    assert "Union" in plan
-    assert "CartesianProduct" not in plan
-    # the order-grain span table is pinned: the lineitem x orders join
-    # ran once at checkpoint time, and the sweep itself adds NO join
-    assert len(re.findall(r"\(\d+\) \w*Join\w*", plan)) == 0
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 0
-
-
-def test_q209_burn_hour_grid(spark, sf_dir):
-    """One scan to the time-span-bounded hour grid, then a single
-    summary row; the burn test is integer (errs * 100 > n)."""
-    import re
-
-    from iceberg_daq_spark.queries.sre import q209
-
-    plan = plan_of(q209(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
-    assert "Join" not in plan
 
 
 def test_q210_incidents_error_substream_only(spark, sf_dir):
     """The islands windows run over the ERROR substream only - the
     type filter must push to the scan; no join anywhere."""
-    import re
-
     from iceberg_daq_spark.queries.sre import q210
 
     plan = plan_of(q210(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
     assert "event_type" in plan.split("PushedFilters")[1].split("]")[0]
-    assert "Join" not in plan
-
-
-def test_q211_burstiness_minute_grid(spark, sf_dir):
-    """One scan to the minute grid, exact percentiles over it, one
-    summary row."""
-    import re
-
-    from iceberg_daq_spark.queries.sre import q211
-
-    plan = plan_of(q211(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
-    assert "Join" not in plan
-
-
-def test_q212_scorecard_single_supplier_pass(spark, sf_dir):
-    """All four metric families reduce in ONE supplier-grain
-    aggregation (pinned - zero parquet re-scans); names broadcast;
-    top-20 is TakeOrdered on exact cents."""
-    import re
-
-    from iceberg_daq_spark.queries.scorecard import q212
-
-    plan = plan_of(q212(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1  # supplier dim
-    assert "TakeOrderedAndProject" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_q213_skew_audit_unions_key_grain(spark, sf_dir):
-    """Each audited column reduces to (key, count) BEFORE the union -
-    the union never carries raw fact rows; the heaviest key resolves
-    with a per-join-key window over the key-grain table."""
-    import re
-
-    from iceberg_daq_spark.queries.scorecard import q213
-
-    plan = plan_of(q213(spark, sf_dir))
-    assert "Union" in plan
-    assert "Join" not in plan
-    # five audited columns -> five scans, each feeding its own agg
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 5
-
-
-def test_q214_basket_reduces_to_order_grain(spark, sf_dir):
-    """Lineitem reduces through the orderkey join to ORDER grain
-    before the 5-segment percentile agg; no cartesian."""
-    import re
-
-    from iceberg_daq_spark.queries.retail import q214
-
-    plan = plan_of(q214(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 3
-    assert "CartesianProduct" not in plan
-
-
-def test_q215_ladder_pinned_single_scan(spark, sf_dir):
-    """The 11-rung ladder is pinned - the total and the display read
-    the checkpoint, lineitem scans once at checkpoint time."""
-    import re
-
-    from iceberg_daq_spark.queries.retail import q215
-
-    plan = plan_of(q215(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 0
-    assert "CartesianProduct" not in plan
 
 
 def test_q216_regularity_one_key_shuffle(spark, sf_dir):
     """The lag window and the moment agg share the custkey
     partitioning; variance numerators are integer (no float moment
     aggregates in the plan); top-20 is TakeOrdered."""
-    import re
-
     from iceberg_daq_spark.queries.retail import q216
 
     plan = plan_of(q216(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
-    assert "TakeOrderedAndProject" in plan
     assert "stddev" not in plan and "var_samp" not in plan
-    assert "Join" not in plan
 
 
 def test_grouped_exact_percentile_branch_plans(spark, sf_dir):
@@ -2287,28 +1597,11 @@ def test_q217_weighted_percentile_broadcast_single_scan(spark, sf_dir):
     """The weighted-percentile plan broadcasts the part dim and scans
     lineitem once; the frequency-weighted percentile aggregates
     (value, weight) pairs - no row expansion anywhere in the plan."""
-    import re
-
     from iceberg_daq_spark.queries.robust import q217
 
     plan = plan_of(q217(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan
     assert "percentile(" in plan
     assert "Generate explode" not in plan  # no expansion of weights
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 2  # li + part
-
-
-def test_q218_theil_single_pass(spark, sf_dir):
-    """Theil folds in one combinable aggregate pass: nation broadcasts,
-    partial + final hash aggregate, one fact scan."""
-    import re
-
-    from iceberg_daq_spark.queries.robust import q218
-
-    plan = plan_of(q218(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan
-    assert plan.count("HashAggregate") >= 2  # partial + final
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 2  # cust + nation
 
 
 def test_q219_rides_size_aware_percentile(spark, sf_dir):
@@ -2335,59 +1628,24 @@ def test_q111_funnel_reads_pinned_reduction(spark, sf_dir):
     """The four step-count legs must read the localCheckpoint-pinned
     funnel projection, not re-derive their chains: 0 parquet scans in
     the final plan (11 before the pin)."""
-    from iceberg_daq_spark.registry import all_queries
-
     plan = plan_of(all_queries()["q111_event_funnel"].fn(spark, sf_dir))
     assert "Scan parquet" not in plan
     assert "Scan ExistingRDD" in plan
 
 
-def test_q206_ri_audit_scans_each_fact_once(spark, sf_dir):
-    """The RI audit pins lineitem/orders/customer FK projections, so
-    only the pure-dim tables still scan parquet (<= 4 scans; 15
-    before the pins)."""
-    from iceberg_daq_spark.registry import all_queries
-
-    import re
-
-    plan = plan_of(
-        all_queries()["q206_referential_integrity"].fn(spark, sf_dir)
-    )
-    # count tree nodes (the detail section repeats each scan unnumbered)
-    assert len(re.findall(r"Scan parquet\s+\(\d+\)", plan)) <= 4
-
-
 def test_q226_kmeans_centroids_broadcast(spark, sf_dir):
     """Every Lloyd round's assignment joins a broadcast centroid
     table; no cartesian anywhere."""
-    from iceberg_daq_spark.registry import all_queries
-
     plan = plan_of(all_queries()["q226_kmeans_lloyd"].fn(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastExchange") >= 2  # one per round
 
 
 def test_q227_adamic_adar_no_cartesian(spark, sf_dir):
-    from iceberg_daq_spark.registry import all_queries
-
     plan = plan_of(all_queries()["q227_adamic_adar"].fn(spark, sf_dir))
     assert "CartesianProduct" not in plan
     # contrib valve table broadcasts onto the posting join
     assert "BroadcastExchange" in plan
-
-
-def test_q229_bootstrap_single_scan(spark, sf_dir):
-    """32 resamples must cost ONE orders scan (plus the point-mean
-    leg): the B-way expansion is a broadcast nested-loop against a
-    32-row range, never a re-scan per resample."""
-    from iceberg_daq_spark.registry import all_queries
-
-    import re
-
-    plan = plan_of(
-        all_queries()["q229_poisson_bootstrap_ci"].fn(spark, sf_dir)
-    )
-    assert len(re.findall(r"Scan parquet\s+\(\d+\)", plan)) <= 2
 
 
 def test_driver_window_composition():
@@ -2419,8 +1677,6 @@ def test_q242_span_dedup_plan(spark, sf_dir):
     """Span dedup: no cartesian, the flag join is an equi-join on the
     window hash, and the final doc join broadcasts the small per-doc
     aggregate side."""
-    from iceberg_daq_spark.registry import all_queries
-
     plan = plan_of(all_queries()["q242_duplicated_spans"].fn(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
@@ -2430,8 +1686,6 @@ def test_q246_containment_plan(spark, sf_dir):
     """Containment discovery: equi-join on the shingle hash only (the
     size/positional bounds are post-join filters, not join fan-out),
     no cartesian anywhere."""
-    from iceberg_daq_spark.registry import all_queries
-
     plan = plan_of(all_queries()["q246_containment_pairs"].fn(spark, sf_dir))
     assert "CartesianProduct" not in plan
 
@@ -2439,44 +1693,21 @@ def test_q246_containment_plan(spark, sf_dir):
 def test_q245_packing_shard_parallel(spark, sf_dir):
     """Sequence packing: ONE scan, one stratum-key shuffle into the
     applyInPandas fold - no window function, no driver loop."""
-    from iceberg_daq_spark.registry import all_queries
-
-    import re
-
     plan = plan_of(all_queries()["q245_sequence_packing"].fn(spark, sf_dir))
-    assert len(re.findall(r"Scan parquet\s+\(\d+\)", plan)) == 1
     assert "FlatMapGroupsInPandas" in plan or "FlatMapGroupsIn" in plan
-
-
-def test_q246_containment_count_test_plan(spark, sf_dir):
-    """Containment discovery: no cartesian, the extended-prefix count
-    test is a partial-aggregable count (HashAggregate with a count
-    over the posting join, NOT an ObjectHashAggregate of first()
-    buffers), and the verify joins stay equi-joins."""
-    from iceberg_daq_spark.registry import all_queries
-
-    plan = plan_of(all_queries()["q246_containment_pairs"].fn(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "ObjectHashAggregate" not in plan
 
 
 def test_q247_hdf5_pipeline_plan(spark, sf_dir):
     """HDF5 e2e: the decode side is a binaryFile scan feeding
     mapInArrow (ArrowEvalPython/MapInArrow, never a row-at-a-time
     PythonUDF), and the per-file aggregation is a partial agg."""
-    from iceberg_daq_spark.registry import all_queries
-
     plan = plan_of(all_queries()["q247_hdf5_event_files"].fn(spark, sf_dir))
-    assert "CartesianProduct" not in plan
     assert "MapInArrow" in plan or "ArrowEval" in plan
-    assert "BatchEvalPython" not in plan  # no pickled row UDF anywhere
 
 
 def test_q248_medoid_plan(spark, sf_dir):
     """Medoids: partial-agg shuffles only - no window over data-sized
     partitions (the argmax is a max(struct) aggregate), no cartesian."""
-    from iceberg_daq_spark.registry import all_queries
-
     plan = plan_of(all_queries()["q248_label_medoids"].fn(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "Window" not in plan  # argmax via max(struct), not row_number
@@ -2487,52 +1718,17 @@ def test_q249_sketch_plan(spark, sf_dir):
     after the scan carries the bounded per-partition sketch rows), and
     the kernels are Arrow-batched (mapInPandas/applyInPandas), not
     row-pickled UDFs."""
-    from iceberg_daq_spark.registry import all_queries
-
     plan = plan_of(all_queries()["q249_quantile_sketch"].fn(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
     # one partial-sketch python map over the scan, one grouped merge
     # (formatted plans print each node twice: tree + numbered details)
     assert plan.count("FlatMapGroupsInPandas (") == 1
     assert plan.count("MapInPandas (") == 1
 
 
-def test_q259_calibration_sample_pinned(spark, sf_dir):
-    """LSH band calibration: the ~1000-doc sample and its shingle
-    table are pinned, so the final plan reads NO parquet at all (one
-    eager scan happened at pin time) - the all-branches-rescan shape
-    (44 full scans unpinned) never reaches the cluster.  The only
-    nested-loop joins are 1-row broadcast scalars."""
-    from iceberg_daq_spark.registry import all_queries
-
-    plan = plan_of(all_queries()["q259_lsh_band_calibration"].fn(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert plan.count("Scan parquet") == 0
-    assert "BatchEvalPython" not in plan
-
-
-def test_q260_blocklist_map_only(spark, sf_dir):
-    """Blocklist filter: no explode, no join - per-doc hit counts are
-    array expressions on the unsplit row, then ONE source-keyed
-    partial+final agg.  Exactly one scan, no generator."""
-    from iceberg_daq_spark.registry import all_queries
-
-    plan = plan_of(all_queries()["q260_blocklist_filter"].fn(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "Join" not in plan
-    assert "Generate" not in plan  # no explode
-    # formatted plans print each node twice (tree + numbered details)
-    assert plan.count("Scan parquet") == 2
-    assert plan.count("HashAggregate") >= 4  # partial + final
-
-
 def test_q261_waterfill_single_scan(spark, sf_dir):
     """Token waterfill: corpus reduces to one pinned #sources-row
     table; the closed-form breakpoint scan (windows, candidate union,
     lambda broadcast) never touches parquet again."""
-    from iceberg_daq_spark.registry import all_queries
-
     plan = plan_of(all_queries()["q261_token_waterfill"].fn(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert plan.count("Scan parquet") == 0
@@ -2543,67 +1739,8 @@ def test_q262_sweep_no_new_pair_term(spark, sf_dir):
     once at the loosest threshold; the grid expansion is a 3-row
     broadcast against the verified pair table - no cartesian, no
     per-threshold re-discovery."""
-    from iceberg_daq_spark.registry import all_queries
-
     plan = plan_of(all_queries()["q262_dedup_threshold_sweep"].fn(spark, sf_dir))
     assert "CartesianProduct" not in plan
-
-
-def test_q263_phash_band_join_shape(spark, sf_dir):
-    """pHash near-dup: hashes leave the scan as one 64-bit row per
-    image (Arrow-batched mapInArrow, never a row-pickled UDF), and the
-    pair discovery is the (chunk, value)-keyed equi band join - no
-    cartesian."""
-    from iceberg_daq_spark.registry import all_queries
-
-    plan = plan_of(all_queries()["q263_image_phash_neardup"].fn(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan or "MapInArrow" in plan
-
-
-def test_q264_simhash_calibration_pinned(spark, sf_dir):
-    """SimHash calibration: sample, signature bits, and shingles are
-    pinned, so the final plan reads no parquet and every join term is
-    sample-bounded; no cartesian."""
-    from iceberg_daq_spark.registry import all_queries
-
-    plan = plan_of(
-        all_queries()["q264_simhash_hamming_calibration"].fn(spark, sf_dir)
-    )
-    assert "CartesianProduct" not in plan
-    assert plan.count("Scan parquet") == 0
-
-
-def test_q265_retrieval_eval_shape(spark, sf_dir):
-    """Retrieval eval: probe terms filter the token stream map-side
-    (df/stats/probe tables broadcast - no corpus reshuffle), phrase
-    labels are a second map-only substring pass, windows run per qid
-    over candidates only; no cartesian."""
-    from iceberg_daq_spark.registry import all_queries
-
-    plan = plan_of(all_queries()["q265_retrieval_ndcg"].fn(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-
-
-def test_q237_model_state_pinned(spark, sf_dir):
-    """AdaBoost: the ~61-row contingency tables and 1-row model tables
-    (w1, alphas) pin via localCheckpoint, so the FINAL plan reads only
-    pinned RDDs - the r12 shape re-executed the full upstream subtree
-    at every model-table reference (51 exchanges, 74 passes over the
-    pinned feature table, zero ReusedExchange).  A regression back to
-    subtree re-derivation trips the exchange bound loudly."""
-    from iceberg_daq_spark.registry import all_queries
-
-    plan = plan_of(all_queries()["q237_adaboost_stumps"].fn(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert plan.count("Scan parquet") == 0  # feature table pinned
-    # final plan: one single-row agg exchange + broadcasts of the
-    # pinned 1-row tables; the 51-exchange rederivation shape is gone
-    import re
-
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 3, plan[:2000]
 
 
 def test_q230_no_redundant_distinct(spark, sf_dir):
@@ -2613,11 +1750,5 @@ def test_q230_no_redundant_distinct(spark, sf_dir):
     anti-join, semi-join and hit join restate over them) 8.  The bound
     pins the r14 shape: a regression back to per-consumer re-shuffles
     of the incidence trips it."""
-    from iceberg_daq_spark.registry import all_queries
-
     plan = plan_of(all_queries()["q230_recsys_backtest"].fn(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    import re
-
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 8, plan[:2000]
     assert "collect_set" in plan

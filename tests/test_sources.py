@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from iceberg_daq_spark.tables import load
+from tests.plan_shape import plan_of
 
 CANON = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"]
 
@@ -40,9 +41,7 @@ def test_orc_scan_pushes_down(spark, sf_dir, tmp_path):
     out = str(tmp_path / "orders_orc")
     load(spark, sf_dir, "orders").select(*CANON).write.format("orc").save(out)
     df = spark.read.format("orc").load(out).filter(F.col("o_totalprice") > 1000.0)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = plan_of(df)
     assert "PushedFilters: [" in plan
     assert "o_totalprice" in plan.split("PushedFilters")[1].split("]")[0]
 

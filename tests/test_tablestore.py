@@ -20,6 +20,8 @@ import time
 
 import pytest
 
+from tests.plan_shape import plan_of
+
 _CHILD = """
 import os, sys, time
 sys.path.insert(0, {repo!r})
@@ -156,9 +158,7 @@ def test_partition_spec_and_evolution(spark, tmp_path):
     ]
     # partition pruning reaches the scan
     pruned = t.read(spark).filter(F.col("tier") == "raw")
-    plan = pruned._sc._jvm.PythonSQLUtils.explainString(
-        pruned._jdf.queryExecution(), "formatted"
-    )
+    plan = plan_of(pruned)
     assert "PartitionFilters: [" in plan and "tier" in plan.split("PartitionFilters")[1].split("]")[0]
     assert {r["k"] for r in pruned.collect()} == {1, 2}
 
@@ -234,9 +234,7 @@ def test_read_changes_incremental(spark, tmp_path):
     # the fast path really scanned only the new dirs: the physical plan
     # must reference d000003 but not d000001
     df = t.read_changes(spark, 2, 3)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = plan_of(df)
     assert "d000003" in plan and "d000001" not in plan
 
     # a rewrite in the interval -> exact anti-join fallback, updated
@@ -415,9 +413,7 @@ def test_key_cols_persist_across_rename(spark, tmp_path):
 
 
 def _pf_lines(df):
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = plan_of(df)
     return [ln.strip() for ln in plan.splitlines() if "PartitionFilters" in ln]
 
 
