@@ -445,32 +445,15 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(sh: DataFrame, seed: int = 42) -> DataFrame:
-    """(doc_id, sig array<long>): min over shingles of (a*h+b) mod p for
-    each of NUM_PERM seeded permutations.  One hash agg - the classic
-    map-side-combinable MinHash over an exploded (doc_id, shingle)
-    table.  Kept as the pure-SQL formulation; :func:`minhash_lsh_pairs`
-    uses the fused map-only numpy path below, which skips the explode
-    and this shuffle entirely."""
-    h = F.pmod(F.xxhash64("shingle"), F.lit(MERSENNE_P))
-    aggs = [
-        F.min(F.pmod(h * F.lit(a) + F.lit(b), F.lit(MERSENNE_P))).alias(f"h{i}")
-        for i, (a, b) in enumerate(_perm_coeffs(seed))
-    ]
-    sigs = sh.groupBy("doc_id").agg(*aggs)
-    return sigs.select(
-        "doc_id", F.array(*[f"h{i}" for i in range(NUM_PERM)]).alias("sig")
-    )
-
-
 def _minhash_bands(sets: DataFrame, seed: int = 42) -> DataFrame:
     """(doc_id, band, bucket) LSH band buckets, computed map-only.
 
     A document is one row of ``sets`` (doc_id, sh_set), so shingle
     hashing, the NUM_PERM permutation min-fold, and band bucketing all
     happen in one numpy pass per Arrow batch - nothing shuffles until
-    the bucket equi-join.  Docs with no shingles are skipped (same as
-    the exploded groupBy formulation, where they never produce rows).
+    the bucket equi-join.  Docs with no shingles are skipped (an
+    exploded (doc_id, shingle) groupBy would produce no row for them
+    either).
     """
     import numpy as np
     import pandas as pd

@@ -978,19 +978,11 @@ _PQ_ITERS = 10
 _PQ_REFINE = 4  # exact re-rank shortlist = k * _PQ_REFINE per query
 
 
-def _pq_codebooks(vecs: DataFrame) -> np.ndarray:
-    """(PQ_M, PQ_K, dim/PQ_M) product-quantizer codebooks: plain L2
-    k-means per subspace over the bounded deterministic training
-    sample of L2-NORMALIZED vectors, so asymmetric-distance lookups
-    approximate the cosine directly.  Same sample-cap posture as
-    :func:`_ivf_centroids` - quantizer quality needs a representative
-    sample, never the corpus."""
-    Vn, order, _ = _train_sample(vecs)
-    return _pq_codebooks_from(Vn, order)
-
-
 def _pq_codebooks_from(Vn: np.ndarray, order: np.ndarray) -> np.ndarray:
-    """Per-subspace L2 k-means on an already-collected sample."""
+    """(PQ_M, PQ_K, dim/PQ_M) product-quantizer codebooks: plain L2
+    k-means per subspace over an already-collected bounded training
+    sample of L2-NORMALIZED vectors (:func:`_train_sample`), so
+    asymmetric-distance lookups approximate the cosine directly."""
     dim = Vn.shape[1]
     if dim % PQ_M:
         # silent truncation would drop the trailing dim % PQ_M

@@ -30,8 +30,6 @@ from iceberg_daq_spark.tables import load
 
 _Q = 1_000_000
 _CHANNELS = ["click", "error", "signup", "view"]  # idx 0..3
-# |S|!(4-|S|-1)!  for |S| = 0..3  (denominator 4! = 24)
-_W24 = [6, 2, 2, 6]
 
 
 @register(

@@ -27,13 +27,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-# Dimension tables whose size does NOT scale with SF (region: 5 rows,
-# nation: 25 rows).  These are always broadcast-join candidates even at
-# 100 TB; the scaling tables must go through AQE's size estimate instead.
-CONSTANT_SIZE_DIMS = frozenset({"region", "nation"})
-
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table as a DataFrame.
@@ -91,18 +84,6 @@ def table_rows(sf_dir: str, name: str) -> int | None:
     except Exception:
         pass
     return None
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view (for spark.sql queries)."""
-    dfs = load_all(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
 
 
 def write_bucketed(

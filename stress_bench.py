@@ -593,15 +593,13 @@ def _count_q250_model(spark, d: str) -> int:
 
 def _count_q204_pairs(spark, d: str) -> int:
     """Growth driver for q204: the scored pair volume, exactly
-    n_sample x (n_corpus - 1) by the audit's join contract."""
-    from pyspark.sql import functions as F2
+    n_sample x (n_corpus - 1) by the audit's join contract, sampled
+    through q204's own predicate so the counter cannot drift from it."""
+    from iceberg_daq_spark.queries.embedding_eval import knn_query_sample
 
-    from iceberg_daq_spark.tables import load as _load
-
-    emb = _load(spark, d, "embeddings").select("vec_id")
-    row = emb.agg(
-        F2.count("*").alias("n"),
-        F2.sum(F2.when(F2.col("vec_id") % 100 == 0, 1).otherwise(0)).alias("s"),
+    row = load(spark, d, "embeddings").agg(
+        F.count("*").alias("n"),
+        F.sum(F.when(knn_query_sample(), 1).otherwise(0)).alias("s"),
     ).collect()[0]
     return int(row["s"]) * (int(row["n"]) - 1)
 

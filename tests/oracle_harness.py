@@ -19,53 +19,6 @@ import duckdb
 
 from iceberg_daq_spark.tables import TABLE_NAMES
 
-#: Test-profile switch (round-13 verdict item 1): the driver's verify
-#: window cannot fit the full ~900-test battery (the per-query DuckDB
-#: oracle sweep over 260+ queries, twice, is ~50 of the 62 minutes), so
-#: the DEFAULT profile runs a deterministic stratified sample of the
-#: oracle battery plus everything else, and the FULL battery - every
-#: oracle-backed query on both datasets - stays behind
-#: ``SPARK_GRAFT_FULL_TESTS=1`` for the builder's own loop.  The sample
-#: is stratified (every k-th name of the sorted inventory - every query
-#: family keeps coverage) and ALWAYS includes ``retest_names()``, the
-#: queries whose code moved, so a fast pass can never skip exactly the
-#: code that moved.
-FULL_TESTS = os.environ.get("SPARK_GRAFT_FULL_TESTS", "") not in ("", "0")
-
-
-def stratified_sample(
-    names: list[str], target: int, always: tuple[str, ...] = (), offset: int = 0
-) -> list[str]:
-    """Deterministic stratified sample of ``names`` (sorted order
-    assumed): every ``len/target``-th entry starting at ``offset``
-    (disjoint samples for different offsets while the stride allows),
-    unioned with ``always``.  Returns everything when FULL_TESTS."""
-    if FULL_TESTS or len(names) <= target:
-        return list(names)
-    stride = max(1, len(names) // target)
-    keep = {n for i, n in enumerate(names) if i % stride == offset % stride}
-    keep.update(n for n in always if n in names)
-    return sorted(keep)
-
-
-def retest_names() -> tuple[str, ...]:
-    """Queries every fast pass runs, derived from the driver artifacts
-    and git (``registry.driver_rotation``): those owed a driver row,
-    plus those whose source changed since the round before the newest
-    driver round - the driver has confirmed that code at most once, and
-    never on the perturbed dataset of ``test_oracle_alt``."""
-    from iceberg_daq_spark import registry
-
-    specs = registry.all_queries()
-    rotation = registry.driver_rotation()
-    rounds = sorted(set(rotation.last_round.values()))
-    recent = set()
-    if len(rounds) > 1:
-        recent = registry.changed_since(
-            registry.REPO_ROOT, specs, dict.fromkeys(specs, rounds[-2])
-        )
-    return tuple(sorted(rotation.owed | recent))
-
 
 def duckdb_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()

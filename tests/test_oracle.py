@@ -7,24 +7,11 @@ from __future__ import annotations
 import pytest
 
 from iceberg_daq_spark.registry import all_queries
-from tests.oracle_harness import compare, duckdb_connect, retest_names, stratified_sample
+from tests.oracle_harness import compare, duckdb_connect
 
 SPECS = all_queries()
-RETEST = retest_names()
-# Default profile: a stratified ~60-query sample + every query whose
-# code moved (oracle_harness.retest_names); SPARK_GRAFT_FULL_TESTS=1
-# runs all.
-# See oracle_harness.FULL_TESTS for the contract.
-ORACLE_NAMES = stratified_sample(
-    sorted(n for n, s in SPECS.items() if s.oracle is not None),
-    target=55,
-    always=RETEST,
-)
-ROWS_ONLY_NAMES = stratified_sample(
-    sorted(n for n, s in SPECS.items() if s.oracle is None),
-    target=8,
-    always=RETEST,
-)
+ORACLE_NAMES = sorted(n for n, s in SPECS.items() if s.oracle is not None)
+ROWS_ONLY_NAMES = sorted(n for n, s in SPECS.items() if s.oracle is None)
 
 
 @pytest.fixture(scope="module")

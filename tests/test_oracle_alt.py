@@ -17,21 +17,10 @@ import pyarrow.parquet as pq
 import pytest
 
 from iceberg_daq_spark.registry import all_queries
-from tests.oracle_harness import compare, duckdb_connect, retest_names, stratified_sample
+from tests.oracle_harness import compare, duckdb_connect
 
 SPECS = all_queries()
-RETEST = retest_names()
-# Default profile: a stratified sample DISJOINT from test_oracle's
-# (offset=1 picks the names the offset=0 stride skips, so the two fast
-# batteries together cover ~2x the single-file sample) + every query whose
-# code moved (oracle_harness.retest_names); SPARK_GRAFT_FULL_TESTS=1 runs
-# all (oracle_harness.FULL_TESTS).
-ORACLE_NAMES = stratified_sample(
-    sorted(n for n, s in SPECS.items() if s.oracle is not None),
-    target=30,
-    always=RETEST,
-    offset=1,
-)
+ORACLE_NAMES = sorted(n for n, s in SPECS.items() if s.oracle is not None)
 
 _TABLES = [
     "region", "nation", "customer", "supplier", "part",

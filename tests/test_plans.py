@@ -20,10 +20,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from iceberg_daq_spark.queries.aggregates import q12
-from iceberg_daq_spark.queries.joins import q04, q05
 from iceberg_daq_spark.queries.scans import q01
-from iceberg_daq_spark.queries.sort_setops import q21
-from iceberg_daq_spark.queries.windows import q30
 from iceberg_daq_spark.registry import all_queries
 from tests.plan_shape import check_snapshot, load_snapshot, plan_of, plan_shape, shape_of
 
@@ -71,30 +68,6 @@ def test_q12_partial_aggregation(spark, sf_dir):
     assert "partial_sum" in plan or "Partial" in plan
 
 
-def test_q04_broadcast_join(spark, sf_dir):
-    plan = plan_of(q04(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan
-
-
-def test_q05_dims_broadcast(spark, sf_dir):
-    """nation/region never shuffle the fact side."""
-    plan = plan_of(q05(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan
-
-
-def test_q21_topk_not_global_sort(spark, sf_dir):
-    plan = plan_of(q21(spark, sf_dir))
-    assert "TakeOrderedAndProject" in plan
-
-
-def test_q30_interval_join_is_equi(spark, sf_dir):
-    """The readout-window join must be a hash/sort-merge equi join on
-    the time bucket - BroadcastNestedLoopJoin is the 237s-at-sf0.1
-    plan that cannot scale."""
-    plan = plan_of(q30(spark, sf_dir))
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_wholestage_codegen_everywhere(spark, sf_dir):
     """The hot path stays inside whole-stage codegen (AQE off so the
     final plan with codegen spans is visible pre-execution)."""
@@ -105,48 +78,6 @@ def test_wholestage_codegen_everywhere(spark, sf_dir):
         spark.conf.set("spark.sql.adaptive.enabled", "true")
     # formatted explain marks codegen'd operators with a leading '*'
     assert "* HashAggregate" in plan and "* ColumnarToRow" in plan
-
-
-def test_q44_no_quadratic_pair_join(spark, sf_dir):
-    """Brute-force top-k must NOT materialize the n^2 pair join - the
-    plan is scan -> mapInPandas (broadcast-matrix block scoring)."""
-    from iceberg_daq_spark.queries.llm import q44
-
-    plan = plan_of(q44(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "MapInPandas" in plan
-
-
-def test_q45_lsh_is_equi_join_on_buckets(spark, sf_dir):
-    """ANN candidates come from an equi join on (table, bucket) - never
-    a cross join - and scoring shuffles only id pairs."""
-    from iceberg_daq_spark.queries.llm import q45
-
-    plan = plan_of(q45(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_q56_ivf_is_equi_join_on_cells(spark, sf_dir):
-    """IVF candidates come from an equi join on the cell id; no
-    quadratic join anywhere in the probe/score plan."""
-    from iceberg_daq_spark.queries.llm import q56
-
-    plan = plan_of(q56(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_q42_minhash_band_join_is_equi(spark, sf_dir):
-    """Band-bucket candidate generation is a hash equi join on
-    (band, bucket); the n^2 shingle self-join LSH exists to avoid must
-    not appear."""
-    from iceberg_daq_spark.queries.llm import q42
-
-    plan = plan_of(q42(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_q59_join_keys_are_salted(spark, sf_dir):
@@ -215,16 +146,6 @@ def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
     # count proves pruning produced only the one partition's rows
     expect = load(spark, sf_dir, "events").filter(F.col("event_type") == "error").count()
     assert scan.count() == expect
-
-
-def test_q62_subquery_decorrelates(spark, sf_dir):
-    """The correlated scalar subquery must plan as a decorrelated
-    aggregate + equi-join, never a per-row nested-loop re-scan."""
-    from iceberg_daq_spark.queries.joins import q62
-
-    plan = plan_of(q62(spark, sf_dir))
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_q41_shingles_single_split(spark, sf_dir):
@@ -303,16 +224,6 @@ def test_q69_single_wide_stage_before_agg(spark, sf_dir):
 
     plan = plan_of(q69(spark, sf_dir))
     assert "partial_count" in plan
-
-
-def test_q70_rates_broadcast(spark, sf_dir):
-    """Mixture rebalance: the per-language rate table must broadcast -
-    the corpus-side scan never shuffles for the join."""
-    from iceberg_daq_spark.queries.llm import q70
-
-    plan = plan_of(q70(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
 
 
 def test_q71_partial_agg_before_window(spark, sf_dir):
@@ -479,37 +390,6 @@ def test_q79_redaction_map_only(spark, sf_dir):
     plan = plan_of(q79(spark, sf_dir))
     body = plan.split("Sort")[0] if "Sort" in plan else plan
     assert "Exchange" not in body.replace("rangepartitioning", "")
-
-
-def test_q81_unigram_table_broadcasts(spark, sf_dir):
-    """The vocab-sized unigram table joins back to the token stream as
-    a broadcast - the corpus itself is never shuffled by vocabulary."""
-    from iceberg_daq_spark.queries.curation import q81
-
-    plan = plan_of(q81(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
-def test_q82_window_group_limit(spark, sf_dir):
-    """Top-3-per-doc plans as WindowGroupLimit (partial below the
-    shuffle), and the df table broadcasts."""
-    from iceberg_daq_spark.queries.curation import q82
-
-    plan = plan_of(q82(spark, sf_dir))
-    assert "WindowGroupLimit" in plan
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
-def test_q83_drift_broadcast_only(spark, sf_dir):
-    """Drift scoring joins only broadcast-sized stats tables back to
-    the (source, word) agg - no sort-merge join of corpus data."""
-    from iceberg_daq_spark.queries.curation import q83
-
-    plan = plan_of(q83(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    assert "SortMergeJoin" not in plan
 
 
 def test_dpp_through_mergetable_read(spark, tmp_path):
@@ -690,18 +570,6 @@ def test_q107_skyline_broadcasts_reduced_frontier(spark, sf_dir):
     assert "SinglePartition" not in plan
 
 
-def test_q108_rrf_legs_are_take_ordered(spark, sf_dir):
-    """Both retrieval legs must reduce with TakeOrderedAndProject
-    (fixed K), and the dense leg's query vector must broadcast - no
-    global sort of the corpus anywhere in the fused plan."""
-    from iceberg_daq_spark.queries.matching import q108
-
-    plan = plan_of(q108(spark, sf_dir))
-    assert plan.count("TakeOrderedAndProject") >= 2
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_q109_pagerank_round_is_join_plus_partial_agg(spark, sf_dir):
     """Each PageRank round must be an equi-join + partial/final hash
     aggregate on the node id - no cartesian, no single-partition
@@ -848,16 +716,6 @@ def test_q117_valve_bounds_edge_and_wedge_fanout(spark):
     assert row.n_triangles == math.comb(k, 3)
 
 
-def test_q118_trend_is_two_partial_aggs_no_window(spark, sf_dir):
-    """regr_slope/r2 must plan as combinable partial+final aggregates
-    over the (type, day) cells - no Window, no sort of the series."""
-    from iceberg_daq_spark.queries.timeseries import q118
-
-    plan = plan_of(q118(spark, sf_dir))
-    assert "Window" not in plan
-    assert plan.count("HashAggregate") >= 4  # two partial+final pairs
-
-
 def test_q119_full_outer_reuses_agg_partitioning(spark, sf_dir):
     """The full outer join must be sort-merge on (user_id, day) and
     reuse each side's aggregation exchange: exactly two data
@@ -874,18 +732,6 @@ def test_q119_full_outer_reuses_agg_partitioning(spark, sf_dir):
         if "Exchange hashpartitioning" in ln and "user_id" in ln
     ]
     assert len(data_exchanges) <= 2, data_exchanges
-
-
-def test_q120_vocab_overlap_broadcasts_sizes(spark, sf_dir):
-    """The intersection must be a token-keyed equi self-join (no
-    cartesian pair enumeration) and the union-size joins must
-    broadcast the tiny per-source table."""
-    from iceberg_daq_spark.queries.curation import q120
-
-    plan = plan_of(q120(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BroadcastHashJoin" in plan
 
 
 def test_q122_welch_is_single_agg_pair_no_join(spark, sf_dir):
@@ -997,18 +843,6 @@ def test_q130_decay_is_single_agg_topk(spark, sf_dir):
     assert "partial_sum" in plan or "Partial" in plan
 
 
-def test_q132_rfm_thresholds_broadcast(spark, sf_dir):
-    """The quantile-threshold row must broadcast back into the
-    customer-sized RFM table (never shuffle it), scoring must stay
-    map-side (no window), and no per-customer sort anywhere."""
-    from iceberg_daq_spark.queries.behavior import q132
-
-    plan = plan_of(q132(spark, sf_dir))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    assert "Window" not in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_q134_pit_join_is_equi_with_pushed_type_filters(spark, sf_dir):
     """The point-in-time join must key on user_id (equi join with the
     interval predicate as a residual - NEVER a nested loop), both
@@ -1116,30 +950,6 @@ def test_q145_twap_segmented_window(spark, sf_dir):
     assert re.search(r"hashpartitioning\(event_type[^)]*,\s*d", plan)
 
 
-def test_q146_band_table_broadcasts_back(spark, sf_dir):
-    """The per-type percentile band table must broadcast back onto
-    the stream (the stream never re-shuffles for the clamp), and the
-    clamped re-aggregation is a partial+final agg pair."""
-    from iceberg_daq_spark.queries.stats import q146
-
-    plan = plan_of(q146(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-
-
-def test_q147_psi_band_broadcast_then_cells(spark, sf_dir):
-    """The per-type range/midpoint row must broadcast back onto the
-    stream (q146's two-pass band pattern); binning is map-side, and
-    everything past the bin counts is types x 20 cells."""
-    from iceberg_daq_spark.queries.timeseries import q147
-
-    plan = plan_of(q147(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-
-
 def test_q149_feature_matrix_single_reduction(spark, sf_dir):
     """Events must be scanned exactly once (checkpointed per-user
     reduction feeds the observation-end scalar); all count-distincts
@@ -1161,18 +971,6 @@ def test_q150_entry_type_rides_session_agg(spark, sf_dir):
     for seg in plan.split("Window")[:-1]:
         lines = seg.splitlines()
         assert not lines or "SinglePartition" not in lines[-1]
-
-
-def test_q152_part_dim_broadcasts_cells_bounded(spark, sf_dir):
-    """The part dim must broadcast into the cell reduction; the
-    regression folds over (brand, level) cells - two agg layers, no
-    window over the raw stream."""
-    from iceberg_daq_spark.queries.commerce import q152
-
-    plan = plan_of(q152(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan
-    assert "Window" not in plan
-    assert plan.count("HashAggregate") >= 4
 
 
 def test_q153_hhi_dims_broadcast_window_per_nation(spark, sf_dir):
@@ -1211,18 +1009,6 @@ def test_q155_ltv_single_scan_bounded_windows(spark, sf_dir):
         assert not lines or "SinglePartition" not in lines[-1]
 
 
-def test_q156_bridge_two_broadcasts_one_reduction(spark, sf_dir):
-    """The midpoint scalar and the customer dim must both broadcast
-    into ONE (segment, half) reduction; the bridge algebra is a
-    projection over segments x 2 cells."""
-    from iceberg_daq_spark.queries.commerce import q156
-
-    plan = plan_of(q156(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-    assert "Window" not in plan
-
-
 def test_q158_doublefire_window_per_user_type(spark, sf_dir):
     """The gap window must partition by (user, type) - wider fan-out
     than per-user alone - with one scan and one grouped agg."""
@@ -1244,18 +1030,6 @@ def test_q157_kcore_valve_survives(spark, sf_dir):
 
     plan = plan_of(copresence_edges(load(spark, sf_dir, "events"), pin=False))
     assert "WindowGroupLimit" in plan
-
-
-def test_q159_qq_single_pass_two_decile_vectors(spark, sf_dir):
-    """Both decile vectors must fold in ONE aggregate over one scan
-    (conditional percentiles); the explode runs over a single row."""
-    import re
-
-    from iceberg_daq_spark.queries.timeseries import q159
-
-    plan = plan_of(q159(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
-    assert "Join" not in plan
 
 
 def test_q160_sketch_table_is_day_sized(spark, sf_dir):
@@ -1331,27 +1105,6 @@ def test_q170_uplift_single_scan_all_pushed(spark, sf_dir):
     assert "l_shipdate" in pushed and "l_quantity" in pushed
 
 
-def test_q171_volume_shipping_dims_broadcast(spark, sf_dir):
-    """Q7 analog: the two-nation supplier dim broadcasts onto the
-    lineitem scan before the orderkey shuffle; no cartesian."""
-    from iceberg_daq_spark.queries.tpch_ext import q171
-
-    plan = plan_of(q171(spark, sf_dir))
-    assert plan.count("BroadcastHashJoin") >= 3
-    assert "CartesianProduct" not in plan
-
-
-def test_q172_market_share_promo_broadcast(spark, sf_dir):
-    """Q8 analog: the PROMO part dim broadcasts onto the fact scan
-    (strongest selectivity first); EU membership is a semi/hash join,
-    never a cartesian."""
-    from iceberg_daq_spark.queries.tpch_ext import q172
-
-    plan = plan_of(q172(spark, sf_dir))
-    assert plan.count("BroadcastHashJoin") >= 4
-    assert "CartesianProduct" not in plan
-
-
 def test_q173_returned_items_takeordered(spark, sf_dir):
     """Q10 analog: return-flag and quarter filters push to the scans,
     top-20 is TakeOrdered on the exact revenue."""
@@ -1383,18 +1136,6 @@ def test_q175_promo_share_broadcast_part(spark, sf_dir):
 
     plan = plan_of(q175(spark, sf_dir))
     assert "l_shipdate" in plan.split("PushedFilters")[1].split("]")[0]
-
-
-def test_q176_small_qty_no_self_join(spark, sf_dir):
-    """Q17 analog: the per-part mean comes from a window over the
-    brand-pruned partkey shuffle - lineitem scans ONCE, no self-join."""
-    import re
-
-    from iceberg_daq_spark.queries.tpch_ext import q176
-
-    plan = plan_of(q176(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 2  # lineitem + part dim
-    assert plan.count("Window") >= 1
 
 
 def test_q177_large_volume_preagg_then_takeordered(spark, sf_dir):
@@ -1440,18 +1181,6 @@ def test_q180_seasonal_grid_sized_window(spark, sf_dir):
 
     plan = plan_of(q180(spark, sf_dir))
     assert "event_type" in plan.split("PushedFilters")[1].split("]")[0]
-
-
-def test_q181_backtest_pinned_grid(spark, sf_dir):
-    """The (type, day) grid is reduced once and pinned - the lag-7
-    self-join reads the checkpoint twice, events is never re-scanned."""
-    import re
-
-    from iceberg_daq_spark.queries.quant import q181
-
-    plan = plan_of(q181(spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 0
-    assert "CartesianProduct" not in plan
 
 
 def test_q183_drawdown_two_windows_one_sort(spark, sf_dir):
@@ -1624,30 +1353,6 @@ def test_q219_rides_size_aware_percentile(spark, sf_dir):
     assert "percentile(" not in giant and "_rank_pid" in giant
 
 
-def test_q111_funnel_reads_pinned_reduction(spark, sf_dir):
-    """The four step-count legs must read the localCheckpoint-pinned
-    funnel projection, not re-derive their chains: 0 parquet scans in
-    the final plan (11 before the pin)."""
-    plan = plan_of(all_queries()["q111_event_funnel"].fn(spark, sf_dir))
-    assert "Scan parquet" not in plan
-    assert "Scan ExistingRDD" in plan
-
-
-def test_q226_kmeans_centroids_broadcast(spark, sf_dir):
-    """Every Lloyd round's assignment joins a broadcast centroid
-    table; no cartesian anywhere."""
-    plan = plan_of(all_queries()["q226_kmeans_lloyd"].fn(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert plan.count("BroadcastExchange") >= 2  # one per round
-
-
-def test_q227_adamic_adar_no_cartesian(spark, sf_dir):
-    plan = plan_of(all_queries()["q227_adamic_adar"].fn(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    # contrib valve table broadcasts onto the posting join
-    assert "BroadcastExchange" in plan
-
-
 def test_driver_window_composition():
     """The driver hash-checks only the FIRST 50 entries of queries().
     The window is derived (registry.driver_rotation: never-checked
@@ -1673,23 +1378,6 @@ def test_driver_window_composition():
     )
 
 
-def test_q242_span_dedup_plan(spark, sf_dir):
-    """Span dedup: no cartesian, the flag join is an equi-join on the
-    window hash, and the final doc join broadcasts the small per-doc
-    aggregate side."""
-    plan = plan_of(all_queries()["q242_duplicated_spans"].fn(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-
-
-def test_q246_containment_plan(spark, sf_dir):
-    """Containment discovery: equi-join on the shingle hash only (the
-    size/positional bounds are post-join filters, not join fan-out),
-    no cartesian anywhere."""
-    plan = plan_of(all_queries()["q246_containment_pairs"].fn(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-
-
 def test_q245_packing_shard_parallel(spark, sf_dir):
     """Sequence packing: ONE scan, one stratum-key shuffle into the
     applyInPandas fold - no window function, no driver loop."""
@@ -1705,14 +1393,6 @@ def test_q247_hdf5_pipeline_plan(spark, sf_dir):
     assert "MapInArrow" in plan or "ArrowEval" in plan
 
 
-def test_q248_medoid_plan(spark, sf_dir):
-    """Medoids: partial-agg shuffles only - no window over data-sized
-    partitions (the argmax is a max(struct) aggregate), no cartesian."""
-    plan = plan_of(all_queries()["q248_label_medoids"].fn(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "Window" not in plan  # argmax via max(struct), not row_number
-
-
 def test_q249_sketch_plan(spark, sf_dir):
     """Quantile sketch: raw values never shuffle (the only exchange
     after the scan carries the bounded per-partition sketch rows), and
@@ -1723,24 +1403,6 @@ def test_q249_sketch_plan(spark, sf_dir):
     # (formatted plans print each node twice: tree + numbered details)
     assert plan.count("FlatMapGroupsInPandas (") == 1
     assert plan.count("MapInPandas (") == 1
-
-
-def test_q261_waterfill_single_scan(spark, sf_dir):
-    """Token waterfill: corpus reduces to one pinned #sources-row
-    table; the closed-form breakpoint scan (windows, candidate union,
-    lambda broadcast) never touches parquet again."""
-    plan = plan_of(all_queries()["q261_token_waterfill"].fn(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert plan.count("Scan parquet") == 0
-
-
-def test_q262_sweep_no_new_pair_term(spark, sf_dir):
-    """Threshold sweep: discovery is q41's lossless prefix filter run
-    once at the loosest threshold; the grid expansion is a 3-row
-    broadcast against the verified pair table - no cartesian, no
-    per-threshold re-discovery."""
-    plan = plan_of(all_queries()["q262_dedup_threshold_sweep"].fn(spark, sf_dir))
-    assert "CartesianProduct" not in plan
 
 
 def test_q230_no_redundant_distinct(spark, sf_dir):
