@@ -35,16 +35,22 @@ cluster:
                                      keep their layout, mixed-era
                                      reads union per-dir scans each
                                      with its own partition pruning
-  optimistic concurrency           lock-free staged data writes +
-    (commit conflict detection       an flock'd validate/rename/flip
-    and retry)                       section; merge rebases and
-                                     retries on conflict, appends
-                                     never conflict with appends
-                                     (the reference instead holds a
-                                     cron lockfile for the whole
-                                     pass, createMetadatafiles...
-                                     sh:45-47 - cluster-hostile; the
-                                     flock here guards metadata only)
+  optimistic concurrency           one commit loop for every data
+    (commit conflict detection       write: stage lock-free from the
+    and retry)                       pinned head, then an flock'd
+                                     check/rename/flip section.  The
+                                     check: rewrites (merge/update/
+                                     delete/compact) need the head to
+                                     still be their base, else they
+                                     rebase; append needs the head's
+                                     schema unchanged and commits on
+                                     top of any data commit;
+                                     overwrite needs nothing (the
+                                     reference instead holds a cron
+                                     lockfile for the whole pass,
+                                     createMetadatafiles...sh:45-47 -
+                                     cluster-hostile; the flock here
+                                     guards metadata only)
   hidden partitioning              partition-spec entries accept
     (hours/days/months/years/        Iceberg's transform grammar; the
     bucket/truncate transforms       write derives a _p_* directory
@@ -106,19 +112,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _POINTER = "_CURRENT"
-_DATA_DIR_RE = re.compile(r"^[dv]\d{6}$")
+_DATA_DIR_RE = re.compile(r"^d\d{6}$")
 _STAGED_RE = re.compile(r"^_staged_[0-9a-f]{12}$")
+# a data write that loses this many optimistic-commit races in a row
+# raises CommitConflict
+_COMMIT_ATTEMPTS = 6
 
 
 class CommitConflict(RuntimeError):
     """A concurrent commit invalidated this writer's staged snapshot
-    and retries were exhausted (Iceberg's CommitFailedException
-    analog)."""
-
-
-def _data_dirs(manifest: dict) -> list[str]:
-    """The snapshot's data dirs (accepts the older single-dir form)."""
-    return manifest.get("data_dirs") or [manifest["data_dir"]]
+    on every attempt (Iceberg's CommitFailedException analog)."""
 
 
 def _delete_entries(manifest: dict | None) -> list[dict]:
@@ -134,6 +137,24 @@ def _delete_entries(manifest: dict | None) -> list[dict]:
     numbers: a later append's rows are never affected by an earlier
     delete."""
     return list((manifest or {}).get("deletes") or [])
+
+
+def _append_only(m_from: dict | None, m_to: dict | None) -> bool:
+    """Whether the interval ``m_from`` -> ``m_to`` only appended data:
+    ``m_to``'s data-dir list extends ``m_from``'s, the column names
+    match, and the delete entries match (a merge-on-read delete in the
+    interval can remove rows from the NEW dirs too - its applies_to
+    covers them - so dir lineage alone no longer proves the delta).
+    A rewrite in the interval breaks dir lineage."""
+    if m_from is None or m_to is None:
+        return False
+    d_from = m_from["data_dirs"]
+    return (
+        m_to["data_dirs"][: len(d_from)] == d_from
+        and [f["name"] for f in m_from["schema"]]
+        == [f["name"] for f in m_to["schema"]]
+        and _delete_entries(m_from) == _delete_entries(m_to)
+    )
 
 
 _Z_BITS = 4  # quantile-bucket rank bits per z-order column (16 buckets)
@@ -763,10 +784,6 @@ class MergeTable:
         vs.extend(self._ref_heads().values())
         return max(vs) + 1
 
-    def _version_dir(self, v: int) -> str:
-        """Legacy (pre-manifest) layout: data directly in v{n}."""
-        return os.path.join(self.path, f"v{v:06d}")
-
     def _manifest_path(self, v: int) -> str:
         return os.path.join(self.path, f"v{v:06d}.json")
 
@@ -803,7 +820,7 @@ class MergeTable:
             v = cur if version is None else version
             m = self._load_manifest(v)
             if m is None or not all(
-                os.path.isdir(os.path.join(self.path, d)) for d in _data_dirs(m)
+                os.path.isdir(os.path.join(self.path, d)) for d in m["data_dirs"]
             ):
                 raise ValueError(
                     f"version {v} not retained (current {cur}, keep_versions "
@@ -854,9 +871,7 @@ class MergeTable:
             v = version if version is not None else self.current_version()
             if v is None:
                 raise ValueError(f"create_branch on uncommitted table {self.path}")
-            if self._load_manifest(v) is None and not os.path.isdir(
-                self._version_dir(v)
-            ):
+            if self._load_manifest(v) is None:
                 raise ValueError(f"version {v} not retained")
             _atomic_write(os.path.join(self.path, f"_BRANCH_{name}"), str(v))
             return v
@@ -914,9 +929,7 @@ class MergeTable:
         if cur is None:
             raise ValueError(f"table {self.path} has no commits")
         for v in self._ancestors(cur, 10**9):  # newest first
-            m = self._load_manifest(v)
-            c = (m or {}).get("committed_at")
-            if c is not None and _dt.datetime.fromisoformat(c) <= ts:
+            if _dt.datetime.fromisoformat(self._load_manifest(v)["committed_at"]) <= ts:
                 return v
         raise ValueError(
             f"no retained snapshot of {self.path} at or before {ts.isoformat()}"
@@ -980,21 +993,12 @@ class MergeTable:
             version = self.version_as_of(as_of)
         v = cur if version is None else version
         m = self._load_manifest(v)
-        if m is None:
-            # legacy layout (tables written before manifests existed)
-            if not os.path.isdir(self._version_dir(v)):
-                raise ValueError(
-                    f"version {v} not retained (current {cur}, keep_versions "
-                    f"{self.keep_versions})"
-                )
-            df = spark.read.parquet(self._version_dir(v))
-            return df.filter(F.expr(where)) if where else df
-        names = _data_dirs(m)
+        names = m["data_dirs"] if m else []
         dels = _delete_entries(m)
         dirs = [os.path.join(self.path, d) for d in names] + [
             os.path.join(self.path, e["dir"]) for e in dels
         ]
-        if not all(os.path.isdir(d) for d in dirs):
+        if m is None or not all(os.path.isdir(d) for d in dirs):
             raise ValueError(
                 f"version {v} not retained (current {cur}, keep_versions "
                 f"{self.keep_versions})"
@@ -1205,56 +1209,77 @@ class MergeTable:
         )
 
     # -- commit machinery ---------------------------------------------
-    def _commit(self, df: DataFrame) -> int:
-        """Write df as the next version and atomically flip the
-        pointer (write-tmp-then-rename, the reference's A8 protocol)."""
-        with _commit_lock(self.path):
-            return self._commit_locked(df)
+    def _head(self) -> dict | None:
+        """The manifest of this ref's current snapshot (None before
+        the first commit)."""
+        cur = self.current_version()
+        return self._load_manifest(cur) if cur else None
+
+    def _props(self, m: dict | None) -> dict[str, list[str]]:
+        """The table properties snapshot ``m`` carries - MERGE keys,
+        partition spec, sort order, bloom columns - or, before the
+        first commit (``m`` None), the constructor seeds.  The
+        manifest wins, INCLUDING a legitimately-empty spec or sort
+        (spec evolution can DROP partitioning: falling back on the
+        falsy [] would resurrect the seed); only keys fall back to the
+        seed when a manifest records none."""
+        if m is None:
+            return {
+                "key_cols": list(self.key_cols),
+                "partition_spec": list(self.partition_spec),
+                "sort_order": list(self.sort_order),
+                "bloom_cols": [],
+            }
+        return {
+            "key_cols": list(m.get("key_cols") or self.key_cols),
+            "partition_spec": list(m.get("partition_spec") or []),
+            "sort_order": list(m.get("sort_order") or []),
+            "bloom_cols": list(m.get("bloom_cols") or []),
+        }
 
     def _effective_keys(self) -> tuple[str, ...]:
-        """The MERGE keys in force: the manifest's persisted
+        """The MERGE keys in force: the head manifest's persisted
         ``key_cols`` (survives rename_column across instances) or, for
-        a new / legacy-manifest table, the constructor seed."""
-        cur = self.current_version()
-        m = self._load_manifest(cur) if cur else None
-        if m is not None and m.get("key_cols"):
-            return tuple(m["key_cols"])
-        return tuple(self.key_cols)
+        a new table, the constructor seed."""
+        return tuple(self._props(self._head())["key_cols"])
 
-    def _current_spec(self) -> list[str]:
-        """The active partition spec: the manifest's (the table's
-        persistent property) or, for a not-yet-committed table, the
-        constructor seed."""
-        cur = self.current_version()
-        m = self._load_manifest(cur) if cur else None
-        if m is not None:
-            return list(m.get("partition_spec") or [])
-        return list(self.partition_spec)
+    def _schema_for(self, df: DataFrame, prev: dict | None) -> list[dict]:
+        """Manifest schema entries for a full rewrite of ``df``.
+        Column defaults are table metadata (Iceberg keeps them across
+        snapshots): carry them forward through data rewrites so an
+        add_column default keeps applying to later old-shaped merges."""
+        defaults = (
+            {f["name"]: f.get("default") for f in prev["schema"]} if prev else {}
+        )
+        return [
+            {
+                "name": f.name,
+                "type": f.dataType.simpleString(),
+                "physical": f.name,
+                "default": defaults.get(f.name),
+            }
+            for f in df.schema.fields
+        ]
 
-    def _current_sort(self) -> list[str]:
-        """The active sort order (Iceberg SortOrder analog): the
-        manifest's, or the constructor seed for a new table."""
-        cur = self.current_version()
-        m = self._load_manifest(cur) if cur else None
-        if m is not None:
-            return list(m.get("sort_order") or [])
-        return list(self.sort_order)
-
-    def _current_bloom(self) -> list[str]:
-        """Columns with parquet bloom filters enabled for future data
-        commits (a table property, like the sort order)."""
-        cur = self.current_version()
-        m = self._load_manifest(cur) if cur else None
-        return list((m or {}).get("bloom_cols") or [])
-
-    def _write_data_dir(
+    # -- optimistic commits (lock-free data writes) ---------------------
+    def _stage(
         self,
         df: DataFrame,
-        data_dir: str,
         spec: list[str],
         sort: list[str] = (),
         sort_partitions: int | None = None,
-    ) -> None:
+        *,
+        bloom: list[str] = (),
+    ) -> str:
+        """Write df to an anonymous staged dir WITHOUT holding the
+        commit lock - the expensive part of a commit.
+        :meth:`_commit_data` later renames it to its final d{v} name
+        under the lock (a metadata-speed operation), so two writers'
+        data writes overlap freely.  ``spec``, ``sort`` and ``bloom``
+        are the pinned snapshot's layout properties (:meth:`_props`)."""
+        import uuid
+
+        name = f"_staged_{uuid.uuid4().hex[:12]}"
         cluster = [c for c in sort if c in df.columns]
         if cluster:
             # clustered write (Iceberg write.sort-order): range-
@@ -1281,7 +1306,7 @@ class MergeTable:
                     _transform_col(pf, F.col(pf.source), types.get(pf.source, "")),
                 )
         writer = df.write.mode("overwrite")
-        for c in self._current_bloom():
+        for c in bloom:
             if c in df.columns:
                 # parquet bloom filters (Iceberg write.parquet.bloom-
                 # filter-enabled.column.*): point lookups on high-
@@ -1293,61 +1318,8 @@ class MergeTable:
                 )
         if fields:
             writer = writer.partitionBy(*[pf.name for pf in fields])
-        writer.parquet(os.path.join(self.path, data_dir))
-
-    def _schema_for(self, df: DataFrame, prev: dict | None) -> list[dict]:
-        """Manifest schema entries for a full rewrite of ``df``.
-        Column defaults are table metadata (Iceberg keeps them across
-        snapshots): carry them forward through data rewrites so an
-        add_column default keeps applying to later old-shaped merges."""
-        defaults = (
-            {f["name"]: f.get("default") for f in prev["schema"]} if prev else {}
-        )
-        return [
-            {
-                "name": f.name,
-                "type": f.dataType.simpleString(),
-                "physical": f.name,
-                "default": defaults.get(f.name),
-            }
-            for f in df.schema.fields
-        ]
-
-    def _commit_locked(self, df: DataFrame) -> int:
-        cur = self.current_version()
-        v = self._next_version()
-        data_dir = f"d{v:06d}"
-        spec = self._current_spec()
-        self._write_data_dir(df, data_dir, spec, self._current_sort())
-        prev = self._load_manifest(cur) if cur else None
-        return self._commit_manifest(
-            v,
-            [data_dir],
-            self._schema_for(df, prev),
-            spec,
-            {data_dir: spec} if spec else {},
-            deletes=[],  # a full overwrite obsoletes pending deletes
-        )
-
-    # -- optimistic staging (lock-free data writes) ---------------------
-    def _stage(
-        self,
-        df: DataFrame,
-        spec: list[str],
-        sort: list[str] = (),
-        sort_partitions: int | None = None,
-    ) -> str:
-        """Write df to an anonymous staged dir WITHOUT holding the
-        commit lock - the expensive part of a commit.  The committer
-        later renames it to its final d{v} name under the lock (a
-        metadata-speed operation), so two writers' data writes overlap
-        freely - Iceberg's optimistic commit protocol, replacing the
-        reference's full-pass cron lockfile (A46)."""
-        import uuid
-
-        name = f"_staged_{uuid.uuid4().hex[:12]}"
         try:
-            self._write_data_dir(df, name, spec, sort, sort_partitions)
+            writer.parquet(os.path.join(self.path, name))
         except BaseException:
             # don't leak a partial table-sized dir until the staged-TTL
             # sweep when the Spark write itself dies
@@ -1358,85 +1330,114 @@ class MergeTable:
     def _discard_stage(self, name: str) -> None:
         shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
 
-    def _promote_stage_locked(self, staged: str, v: int) -> str:
-        """Rename a staged dir to its committed d{v} name (cheap; under
-        the commit lock)."""
-        data_dir = f"d{v:06d}"
-        os.rename(
-            os.path.join(self.path, staged), os.path.join(self.path, data_dir)
-        )
-        return data_dir
+    def _commit_data(self, op: str, stage, check=None) -> int:
+        """The optimistic commit every data write goes through -
+        Iceberg's commit protocol, replacing the reference's full-pass
+        cron lockfile (A46).  Each attempt pins the head and runs
+        ``stage(base, m)`` against it with NO lock held (the pinned
+        version and manifest; both None before the first commit), then
+        takes the lock only to run the writer's check, rename the
+        staged dir to its final d{v} name and write the manifest.
 
-    def _optimistic_rewrite(
-        self,
-        spark,
-        build,
-        op: str,
-        max_retries: int = 6,
-        sort_partitions: int | None = None,
-    ) -> int:
-        """The optimistic-commit protocol shared by every copy-on-write
-        rewrite (merge/delete/update/compact): pin a base snapshot,
-        compute+stage ``build(current_df, base_manifest)`` with NO lock
-        held, then take the lock only to validate the base is still
-        current and flip the pointer; a concurrent commit in between
-        rebases and retries (no lost updates - the loser recomputes on
-        the new base), raising :class:`CommitConflict` after
-        ``max_retries``."""
-        for _ in range(max_retries):
+        ``stage`` returns ``(staged_dir, fields)``, where
+        ``fields(data_dir, head)`` gives the :meth:`_commit_manifest`
+        arguments for the renamed dir on top of the head manifest - or
+        None when there is nothing to write (the pinned snapshot
+        stands).  ``check(m, head)`` validates the pinned manifest
+        against the head at commit time; the default is "the head is
+        still the base".  A failed check is a lost race, and so is a
+        staging failure while the head moved (the base GC'd
+        mid-scan): the attempt rebases on the new head, so the loser
+        recomputes and no update is lost.  A check may also raise to
+        fail the write outright.  The staged dir is discarded on any
+        failure; :data:`_COMMIT_ATTEMPTS` lost races raise
+        :class:`CommitConflict`."""
+        for _ in range(_COMMIT_ATTEMPTS):
             base = self.current_version()
-            if base is None:
-                raise ValueError(f"{op}() on uncommitted table {self.path}")
+            m = self._load_manifest(base) if base else None
             try:
-                current = self.read(spark, base)
-            except ValueError:
-                continue  # base expired under a concurrent commit: rebase
-            man = self._load_manifest(base)
-            new_df = build(current, man)
-            # manifest-wins, INCLUDING a legitimately-empty spec/sort
-            # (spec evolution can DROP partitioning: `or` on the falsy
-            # [] would resurrect the constructor seed - _current_spec's
-            # distinction applied here)
-            if man is not None:
-                spec = list(man.get("partition_spec") or [])
-                sort = list(man.get("sort_order") or [])
-            else:
-                spec = list(self.partition_spec)
-                sort = list(self.sort_order)
-            try:
-                staged: str | None = self._stage(new_df, spec, sort, sort_partitions)
+                out = stage(base, m)
             except Exception:
                 if self.current_version() != base:
-                    continue  # base GC'd mid-scan by a concurrent commit
+                    continue  # the base moved mid-stage: rebase
                 raise
-            committed = False
+            if out is None:
+                return base
+            staged, fields = out
             try:
                 with _commit_lock(self.path):
-                    if self.current_version() == base:
+                    cur = self.current_version()
+                    head = self._load_manifest(cur) if cur else None
+                    ok = check(m, head) if check else cur == base
+                    if ok:
                         v = self._next_version()
-                        data_dir = self._promote_stage_locked(staged, v)
-                        committed = True
+                        data_dir = f"d{v:06d}"
+                        os.rename(
+                            os.path.join(self.path, staged),
+                            os.path.join(self.path, data_dir),
+                        )
+                        staged = None
                         return self._commit_manifest(
                             v,
-                            [data_dir],
-                            self._schema_for(new_df, man),
-                            spec,
-                            {data_dir: spec} if spec else {},
-                            op=op,
-                            # build() read through read(), which already
-                            # applied pending equality deletes - the
-                            # rewrite MATERIALIZES them (Iceberg's
-                            # rewrite purging delete files)
-                            deletes=[],
+                            # a first commit is an overwrite, whichever
+                            # writer makes it
+                            op=op if base else "overwrite",
+                            **fields(data_dir, head),
                         )
             finally:
-                if not committed and staged is not None:
+                if staged is not None:
                     self._discard_stage(staged)
-            # conflict: loop rebases on the new current version
         raise CommitConflict(
-            f"{op}() on {self.path} lost {max_retries} optimistic-commit "
-            "races; raise max_retries or reduce writer contention"
+            f"{op} on {self.path} lost {_COMMIT_ATTEMPTS} optimistic-commit "
+            "races in a row; reduce writer contention or retry the write"
         )
+
+    def _stage_snapshot(
+        self, df: DataFrame, m: dict | None, sort_partitions: int | None = None
+    ):
+        """The ``stage`` of a write whose ``df`` is the whole next
+        snapshot (rewrites, overwrite, a first commit), laid out by the
+        pinned manifest ``m``'s properties.  It commits no pending
+        deletes: a rewrite read its rows through read(), which already
+        applied them, so it MATERIALIZES them (Iceberg's rewrite
+        purging delete files), and an overwrite obsoletes them."""
+        p = self._props(m)
+        spec = p["partition_spec"]
+        staged = self._stage(
+            df, spec, p["sort_order"], sort_partitions, bloom=p["bloom_cols"]
+        )
+        return staged, lambda data_dir, head: {
+            "data_dirs": [data_dir],
+            "schema": self._schema_for(df, head),
+            "dir_specs": {data_dir: spec} if spec else {},
+            "deletes": [],
+        }
+
+    def _rewrite(
+        self,
+        spark: SparkSession,
+        op: str,
+        build,
+        sort_partitions: int | None = None,
+        first: DataFrame | None = None,
+    ) -> int:
+        """Copy-on-write: commit ``build(rows, m)`` - a frame computed
+        from the pinned snapshot's rows and manifest - as the whole
+        next snapshot, with the default check (a concurrent commit
+        rebases the rewrite).  On an uncommitted table ``first`` is
+        committed as is (merge's bootstrap); without it the write
+        raises."""
+
+        def stage(base: int | None, m: dict | None):
+            if m is not None:
+                df = build(self.read(spark, base), m)
+            elif first is not None:
+                df = first
+            else:
+                raise ValueError(f"{op}() on uncommitted table {self.path}")
+            return self._stage_snapshot(df, m, sort_partitions)
+
+        return self._commit_data(op, stage)
 
     def _commit_manifest(
         self,
@@ -1458,8 +1459,10 @@ class MergeTable:
         leaves a stale manifest the next commit overwrites (and whose
         data dir the GC reclaims once unreferenced), never a pointer
         to a missing snapshot.  ``key_cols`` persists the MERGE keys
-        (logical names) so a rename survives reconstruction; None
-        carries the currently-effective keys forward.
+        (logical names) so a rename survives reconstruction.  None for
+        any table property - ``partition_spec``, ``key_cols``,
+        ``sort_order``, ``bloom_cols`` - carries the parent's forward
+        (:meth:`_props`; the constructor seed before the first commit).
 
         ``file_stats`` (per-dir per-file [min, max] column bounds, the
         Iceberg manifest-stats analog) defaults to: carry the previous
@@ -1474,10 +1477,11 @@ class MergeTable:
         deletes) survive.  Rewrites that materialize the deletes pass
         ``[]`` explicitly."""
         parent = self.current_version()  # pointer not yet flipped
+        prev = self._load_manifest(parent) if parent else None
+        props = self._props(prev)
         if deletes is None:
-            deletes = _delete_entries(self._load_manifest(parent) if parent else None)
+            deletes = _delete_entries(prev)
         if file_stats is None:
-            prev = self._load_manifest(parent) if parent else None
             prev_stats = (prev or {}).get("file_stats") or {}
             file_stats = {
                 d: (
@@ -1494,29 +1498,20 @@ class MergeTable:
                     "version": v,
                     "data_dirs": data_dirs,
                     "schema": schema,
-                    "partition_spec": partition_spec or [],
-                    "dir_specs": dir_specs or {},
-                    "key_cols": (
-                        key_cols
-                        if key_cols is not None
-                        else list(self._effective_keys())
+                    "partition_spec": (
+                        props["partition_spec"]
+                        if partition_spec is None
+                        else partition_spec
                     ),
+                    "dir_specs": dir_specs or {},
+                    "key_cols": props["key_cols"] if key_cols is None else key_cols,
                     "file_stats": file_stats,
                     "deletes": deletes,
-                    # like key_cols: None carries the current order
-                    # forward (manifest's, else the constructor seed)
                     "sort_order": (
-                        sort_order
-                        if sort_order is not None
-                        else self._current_sort()
+                        props["sort_order"] if sort_order is None else sort_order
                     ),
-                    # like sort_order: None carries the property
-                    # forward (pointer not yet flipped, so
-                    # _current_bloom() is the parent's)
                     "bloom_cols": (
-                        bloom_cols
-                        if bloom_cols is not None
-                        else self._current_bloom()
+                        props["bloom_cols"] if bloom_cols is None else bloom_cols
                     ),
                     # snapshot summary (Iceberg's snapshot operation +
                     # timestamp metadata)
@@ -1551,14 +1546,11 @@ class MergeTable:
 
     def _ancestors(self, v: int | None, n: int) -> list[int]:
         """Up to ``n`` versions of a ref's own history, newest first,
-        following each manifest's ``parent`` link (pre-lineage legacy
-        manifests - which EXIST but predate the ``parent`` field -
-        fall back to the numeric predecessor, which IS their parent;
-        they predate branching).  A MISSING manifest means snapshot
-        expiry truncated this ref's chain: stop there - guessing
-        ``v - 1`` would walk into a numerically-adjacent version that
-        may belong to ANOTHER branch's retained history (time travel
-        would then read unpublished branch data)."""
+        following each manifest's ``parent`` link.  A MISSING manifest
+        means snapshot expiry truncated this ref's chain: stop there -
+        guessing ``v - 1`` would walk into a numerically-adjacent
+        version that may belong to ANOTHER branch's retained history
+        (time travel would then read unpublished branch data)."""
         out: list[int] = []
         seen: set[int] = set()
         while v and len(out) < n and v not in seen:
@@ -1567,7 +1559,7 @@ class MergeTable:
                 break  # expired ancestor: chain truncated, never guess
             seen.add(v)
             out.append(v)
-            v = v - 1 if "parent" not in m else m["parent"]
+            v = m["parent"]
         return out
 
     def _expire_and_gc_locked(self, cur: int) -> list[str]:
@@ -1619,13 +1611,11 @@ class MergeTable:
             if v in keep:
                 man = self._load_manifest(v)
                 if man:
-                    referenced.update(_data_dirs(man))
+                    referenced.update(man["data_dirs"])
                     referenced.update(e["dir"] for e in _delete_entries(man))
             else:
                 os.unlink(os.path.join(self.path, entry))
                 removed.append(entry)
-        # legacy data dirs double as their own manifest
-        referenced.update(f"v{v:06d}" for v in keep)
         import time as _time
 
         now = _time.time()
@@ -1667,39 +1657,28 @@ class MergeTable:
         to_v = cur if to_version is None else to_version
         m_from = self._load_manifest(from_version)
         m_to = self._load_manifest(to_v)
-        if m_from is not None and m_to is not None:
-            d_from, d_to = _data_dirs(m_from), _data_dirs(m_to)
-            if (
-                d_to[: len(d_from)] == d_from
-                and len(d_to) > len(d_from)
-                and [f["name"] for f in m_from["schema"]]
-                == [f["name"] for f in m_to["schema"]]
-                # a merge-on-read delete in the interval can remove
-                # rows from the NEW dirs too (its applies_to covers
-                # them); dir lineage alone no longer proves the delta
-                and _delete_entries(m_from) == _delete_entries(m_to)
-            ):
-                new_dirs = [os.path.join(self.path, d) for d in d_to[len(d_from):]]
-                if all(os.path.isdir(d) for d in new_dirs):
-                    # per-dir scans unioned (same as read()): a single
-                    # multi-path scan cannot discover partition columns
-                    # when the delta dirs are partitionBy layouts
-
-                    phys = [
-                        f["physical"]
-                        for f in m_to["schema"]
-                        if f["physical"] is not None
-                    ]
-                    df = reduce(
-                        DataFrame.unionByName,
-                        (spark.read.parquet(d).select(*phys) for d in new_dirs),
-                    )
-                    cols = [
-                        F.col(f["physical"]).cast(f["type"]).alias(f["name"])
-                        for f in m_to["schema"]
-                        if f["physical"] is not None
-                    ]
-                    return df.select(*cols)
+        if _append_only(m_from, m_to):
+            new_dirs = [
+                os.path.join(self.path, d)
+                for d in m_to["data_dirs"][len(m_from["data_dirs"]) :]
+            ]
+            if new_dirs and all(os.path.isdir(d) for d in new_dirs):
+                # per-dir scans unioned (same as read()): a single
+                # multi-path scan cannot discover partition columns
+                # when the delta dirs are partitionBy layouts
+                phys = [
+                    f["physical"] for f in m_to["schema"] if f["physical"] is not None
+                ]
+                df = reduce(
+                    DataFrame.unionByName,
+                    (spark.read.parquet(d).select(*phys) for d in new_dirs),
+                )
+                cols = [
+                    F.col(f["physical"]).cast(f["type"]).alias(f["name"])
+                    for f in m_to["schema"]
+                    if f["physical"] is not None
+                ]
+                return df.select(*cols)
         after = self.read(spark, to_v)
         before = self.read(spark, from_version)
         shared = [c for c in after.columns if c in before.columns]
@@ -1737,17 +1716,8 @@ class MergeTable:
         inserts = self.read_changes(spark, from_version, to_v).select(
             "*", F.lit("insert").alias("_change_type")
         )
-        m_from, m_to = self._load_manifest(from_version), self._load_manifest(to_v)
-        if (
-            m_from is not None
-            and m_to is not None
-            and _data_dirs(m_to)[: len(_data_dirs(m_from))] == _data_dirs(m_from)
-            and [f["name"] for f in m_from["schema"]]
-            == [f["name"] for f in m_to["schema"]]
-            and _delete_entries(m_from) == _delete_entries(m_to)
-        ):
-            # append-only interval: nothing was deleted
-            return inserts
+        if _append_only(self._load_manifest(from_version), self._load_manifest(to_v)):
+            return inserts  # nothing was deleted
         after = self.read(spark, to_v)
         before = self.read(spark, from_version)
         shared = [c for c in before.columns if c in after.columns]
@@ -1786,14 +1756,13 @@ class MergeTable:
             out.append(
                 {
                     "version": m["version"],
-                    "data_dirs": _data_dirs(m),
+                    "data_dirs": m["data_dirs"],
                     "partition_spec": m.get("partition_spec") or [],
                     "columns": [f["name"] for f in m["schema"]],
                     "current": m["version"] == self.current_version(),
                     "tags": sorted(t for t, v in refs.items() if v == m["version"]),
-                    # summary (absent on legacy manifests)
-                    "operation": m.get("operation"),
-                    "committed_at": m.get("committed_at"),
+                    "operation": m["operation"],
+                    "committed_at": m["committed_at"],
                     "n_files": (
                         sum(len(files) for files in stats.values())
                         if stats
@@ -1822,7 +1791,7 @@ class MergeTable:
         if m is None:
             raise ValueError(f"version {v} has no manifest")
         rows = []
-        kinds = [("data", d) for d in _data_dirs(m)] + [
+        kinds = [("data", d) for d in m["data_dirs"]] + [
             (
                 "position-deletes"
                 if e.get("kind") == "position"
@@ -1879,7 +1848,7 @@ class MergeTable:
             raise ValueError(f"version {v} has no manifest")
         dir_specs = m.get("dir_specs") or {}
         agg: dict[tuple[str, str], list[int]] = {}
-        for d in _data_dirs(m):
+        for d in m["data_dirs"]:
             root = os.path.join(self.path, d)
             spec = ",".join(dir_specs.get(d) or [])
             for dirpath, _dirs, fns in os.walk(root):
@@ -1962,7 +1931,7 @@ class MergeTable:
             m = self._load_manifest(version)
             if m is None or not all(
                 os.path.isdir(os.path.join(self.path, d))
-                for d in _data_dirs(m)
+                for d in m["data_dirs"]
                 + [e["dir"] for e in _delete_entries(m)]
             ):
                 raise ValueError(
@@ -1971,7 +1940,7 @@ class MergeTable:
                 )
             return self._commit_manifest(
                 self._next_version(),
-                _data_dirs(m),
+                m["data_dirs"],
                 m["schema"],
                 m.get("partition_spec") or [],
                 m.get("dir_specs") or {},
@@ -1979,9 +1948,8 @@ class MergeTable:
                 # rollback across a key-column rename must not leave
                 # current-named keys pointing into the restored (old-
                 # named) schema
-                key_cols=m.get("key_cols") or list(self.key_cols),
-                # the target's stats travel with its dirs (a legacy
-                # no-stats target falls back to footer collection)
+                key_cols=self._props(m)["key_cols"],
+                # the target's stats travel with its dirs
                 file_stats=m.get("file_stats"),
                 sort_order=list(m.get("sort_order") or []),
                 op="rollback",
@@ -2027,10 +1995,7 @@ class MergeTable:
             )
 
             def fresh(v: int) -> bool:
-                m = self._load_manifest(v)
-                ts = (m or {}).get("committed_at")
-                if ts is None:
-                    return False  # legacy manifests have no timestamp
+                ts = self._load_manifest(v)["committed_at"]
                 return _dt.datetime.fromisoformat(ts) >= cutoff
 
             keep: set[int] = set()
@@ -2058,13 +2023,7 @@ class MergeTable:
         cur = self.current_version()
         if cur is None:
             raise ValueError(f"schema evolution on uncommitted table {self.path}")
-        m = self._load_manifest(cur)
-        if m is None:
-            raise ValueError(
-                f"legacy table {self.path} has no manifest; run compact() "
-                "once to materialize one before evolving the schema"
-            )
-        return m
+        return self._load_manifest(cur)
 
     def add_column(self, name: str, dtype: str, default=None) -> int:
         """Iceberg ``ALTER TABLE ADD COLUMN`` analog: a metadata-only
@@ -2080,7 +2039,7 @@ class MergeTable:
             ]
             return self._commit_manifest(
                 self._next_version(),
-                _data_dirs(m),
+                m["data_dirs"],
                 schema,
                 m.get("partition_spec") or [],
                 m.get("dir_specs") or {},
@@ -2105,7 +2064,7 @@ class MergeTable:
             # the manifest so a MergeTable constructed later (with the
             # pre-rename constructor seed) still resolves the right
             # columns via _effective_keys()
-            keys = [new if k == old else k for k in self._effective_keys()]
+            keys = [new if k == old else k for k in self._props(m)["key_cols"]]
             if old in self.key_cols:
                 self.key_cols = tuple(
                     new if k == old else k for k in self.key_cols
@@ -2150,7 +2109,7 @@ class MergeTable:
             ]
             return self._commit_manifest(
                 self._next_version(),
-                _data_dirs(m),
+                m["data_dirs"],
                 schema,
                 spec,
                 m.get("dir_specs") or {},
@@ -2168,7 +2127,7 @@ class MergeTable:
         Key and partition columns cannot be dropped."""
         with _commit_lock(self.path):
             m = self._require_manifest_locked()
-            if name in self._effective_keys():
+            if name in self._props(m)["key_cols"]:
                 raise ValueError(f"cannot drop key column {name!r}")
             if name in {
                 pf.source for pf in parse_partition_spec(m.get("partition_spec") or [])
@@ -2179,7 +2138,7 @@ class MergeTable:
             schema = [f for f in m["schema"] if f["name"] != name]
             return self._commit_manifest(
                 self._next_version(),
-                _data_dirs(m),
+                m["data_dirs"],
                 schema,
                 m.get("partition_spec") or [],
                 m.get("dir_specs") or {},
@@ -2207,7 +2166,7 @@ class MergeTable:
                 raise ValueError(f"partition spec references unknown columns {unknown}")
             return self._commit_manifest(
                 self._next_version(),
-                _data_dirs(m),
+                m["data_dirs"],
                 m["schema"],
                 list(cols),
                 m.get("dir_specs") or {},
@@ -2231,7 +2190,7 @@ class MergeTable:
                 raise ValueError(f"sort order references unknown columns {unknown}")
             return self._commit_manifest(
                 self._next_version(),
-                _data_dirs(m),
+                m["data_dirs"],
                 m["schema"],
                 list(m.get("partition_spec") or []),
                 m.get("dir_specs") or {},
@@ -2256,7 +2215,7 @@ class MergeTable:
                 raise ValueError(f"bloom filters reference unknown columns {unknown}")
             return self._commit_manifest(
                 self._next_version(),
-                _data_dirs(m),
+                m["data_dirs"],
                 m["schema"],
                 list(m.get("partition_spec") or []),
                 m.get("dir_specs") or {},
@@ -2266,19 +2225,14 @@ class MergeTable:
 
     # -- write API ----------------------------------------------------
     def overwrite(self, df: DataFrame) -> int:
-        return self._commit(df)
-
-    @staticmethod
-    def _check_append_schema(m: dict, updates: DataFrame, path: str) -> None:
-        names = [f["name"] for f in m["schema"]]
-        if sorted(names) != sorted(updates.columns) or any(
-            f["physical"] != f["name"] for f in m["schema"]
-        ):
-            raise ValueError(
-                f"append() to {path} needs a physical schema match "
-                f"(table {names}, updates {updates.columns}); use "
-                "merge() after schema evolution"
-            )
+        """Commit ``df`` as the whole next snapshot (write-tmp-then-
+        rename, the reference's A8 protocol).  No commit-time check: a
+        full replacement wins over whatever committed meanwhile."""
+        return self._commit_data(
+            "overwrite",
+            lambda base, m: self._stage_snapshot(df, m),
+            check=lambda m, head: True,
+        )
 
     def append(self, updates: DataFrame) -> int:
         """Iceberg fast-append: commit ONLY the new rows as an
@@ -2292,78 +2246,68 @@ class MergeTable:
         column set, no pending metadata-only adds/renames); otherwise
         raises - merge() materializes the evolved schema first.
 
-        OPTIMISTIC: the data write runs OUTSIDE the commit lock (a
-        staged dir), and the lock is taken only for revalidate +
-        rename + manifest/pointer flip - so two appenders (disjoint
-        partitions or not; appends never conflict with appends,
-        Iceberg's rule) write their data concurrently and serialize
-        only on metadata.  A concurrent schema rewrite that
-        invalidates the staged files raises :class:`CommitConflict`."""
-        cur = self.current_version()
-        if cur is None:
-            with _commit_lock(self.path):
-                if self.current_version() is None:
-                    return self._commit_locked(updates)
-            cur = self.current_version()  # lost the bootstrap race
-        m = self._load_manifest(cur)
-        if m is None:
-            raise ValueError(
-                f"legacy table {self.path} has no manifest; run compact() "
-                "once before append()"
-            )
-        self._check_append_schema(m, updates, self.path)
-        spec = list(m.get("partition_spec") or [])
-        # coerce to the table's recorded types (Iceberg appends
-        # write the table schema): without the cast, an int64-typed
-        # source landing beside an int32 dir poisons every
-        # subsequent multi-dir read with a parquet type mismatch
-        aligned = updates.select(
-            *[
-                F.col(f["name"]).cast(f["type"]).alias(f["name"])
-                for f in m["schema"]
-            ]
-        )
-        staged: str | None = self._stage(
-            aligned, spec, list(m.get("sort_order") or [])
-        )  # lock-free
-        try:
-            with _commit_lock(self.path):
-                cur2 = self.current_version()
-                m2 = self._load_manifest(cur2)
-                if m2 is None:
-                    raise CommitConflict(
-                        f"table {self.path} lost its manifest mid-append"
-                    )
-                if [
-                    (f["name"], f["physical"], f["type"]) for f in m2["schema"]
-                ] != [(f["name"], f["physical"], f["type"]) for f in m["schema"]]:
-                    raise CommitConflict(
-                        "a concurrent schema rewrite invalidated this "
-                        "append's staged files; re-run append()"
-                    )
-                v = self._next_version()
-                data_dir = self._promote_stage_locked(staged, v)
-                staged = None
-                dir_specs = dict(m2.get("dir_specs") or {})
-                if spec:
-                    dir_specs[data_dir] = spec
-                return self._commit_manifest(
-                    v,
-                    _data_dirs(m2) + [data_dir],
-                    m2["schema"],
-                    list(m2.get("partition_spec") or []),
-                    dir_specs,
-                    op="append",
+        OPTIMISTIC (:meth:`_commit_data`): the data write runs OUTSIDE
+        the commit lock, and the commit builds on whatever head it
+        finds - appends never conflict with other data commits
+        (Iceberg's rule), so concurrent appenders write their data
+        concurrently and serialize only on metadata.  Its check is
+        that the head's physical schema is the one the staged files
+        were written for: a concurrent schema change raises
+        :class:`CommitConflict`."""
+
+        def physical(man: dict) -> list[tuple]:
+            return [(f["name"], f["physical"], f["type"]) for f in man["schema"]]
+
+        def stage(base: int | None, m: dict | None):
+            if m is None:
+                return self._stage_snapshot(updates, None)
+            names = [f["name"] for f in m["schema"]]
+            if sorted(names) != sorted(updates.columns) or any(
+                f["physical"] != f["name"] for f in m["schema"]
+            ):
+                raise ValueError(
+                    f"append() to {self.path} needs a physical schema match "
+                    f"(table {names}, updates {updates.columns}); use "
+                    "merge() after schema evolution"
                 )
-        finally:
-            if staged is not None:
-                self._discard_stage(staged)
+            p = self._props(m)
+            spec = p["partition_spec"]
+            # coerce to the table's recorded types (Iceberg appends
+            # write the table schema): without the cast, an int64-typed
+            # source landing beside an int32 dir poisons every
+            # subsequent multi-dir read with a parquet type mismatch
+            aligned = updates.select(
+                *[
+                    F.col(f["name"]).cast(f["type"]).alias(f["name"])
+                    for f in m["schema"]
+                ]
+            )
+            staged = self._stage(aligned, spec, p["sort_order"], bloom=p["bloom_cols"])
+            return staged, lambda data_dir, head: {
+                "data_dirs": head["data_dirs"] + [data_dir],
+                "schema": head["schema"],
+                "dir_specs": {
+                    **(head.get("dir_specs") or {}),
+                    **({data_dir: spec} if spec else {}),
+                },
+            }
+
+        def check(m: dict | None, head: dict | None) -> bool:
+            if m is None:
+                return head is None  # lost the first-commit race: rebase
+            if head is None or physical(head) != physical(m):
+                raise CommitConflict(
+                    "a concurrent schema change invalidated this append's "
+                    "staged files; re-run append()"
+                )
+            return True
+
+        return self._commit_data("append", stage, check)
 
     def merge(
         self,
         updates: DataFrame,
         evolve_schema: bool = False,
-        max_retries: int = 6,
         when_not_matched_by_source: str = "keep",
     ) -> int:
         """MERGE INTO this table USING updates ON key_cols:
@@ -2391,21 +2335,16 @@ class MergeTable:
         still current and flip the pointer.  A concurrent commit in
         between invalidates the staged snapshot - the merge recomputes
         on the new base and retries (no lost updates: the loser always
-        rebases), raising :class:`CommitConflict` after
-        ``max_retries``."""
+        rebases), raising :class:`CommitConflict` after a fixed number
+        of lost races (:meth:`_commit_data`).  The first merge into an
+        uncommitted table commits ``updates`` as is."""
         if when_not_matched_by_source not in ("keep", "delete"):
             raise ValueError(
                 f"unknown when_not_matched_by_source "
                 f"{when_not_matched_by_source!r}"
             )
-        spark = updates.sparkSession
-        if self.current_version() is None:
-            with _commit_lock(self.path):
-                if self.current_version() is None:
-                    return self._commit_locked(updates)
-            # lost the bootstrap race: fall through as a real merge
 
-        def build(current: DataFrame, man: dict | None) -> DataFrame:
+        def build(current: DataFrame, man: dict) -> DataFrame:
             ups = updates
             # keys from the PINNED base manifest (like every other
             # base-pinned input here), not _effective_keys(): a
@@ -2413,7 +2352,7 @@ class MergeTable:
             # otherwise make the join target a column the base snapshot
             # doesn't have, failing with AnalysisException instead of
             # rebasing at the conflict check.
-            keys = list((man or {}).get("key_cols") or self.key_cols)
+            keys = self._props(man)["key_cols"]
             table_cols = current.columns
             extra = [c for c in ups.columns if c not in table_cols]
             if extra and not evolve_schema:
@@ -2424,11 +2363,7 @@ class MergeTable:
             missing = [c for c in table_cols if c not in ups.columns]
             types = {f.name: f.dataType for f in current.schema.fields}
             if missing:
-                defaults = (
-                    {f["name"]: f.get("default") for f in man["schema"]}
-                    if man
-                    else {}
-                )
+                defaults = {f["name"]: f.get("default") for f in man["schema"]}
                 for c in missing:
                     ups = ups.withColumn(c, F.lit(defaults.get(c)).cast(types[c]))
             # coerce shared columns to the table's recorded types (the
@@ -2453,7 +2388,7 @@ class MergeTable:
                 current.join(ups.select(*keys), keys, "left_anti")
             )
 
-        return self._optimistic_rewrite(spark, build, "merge", max_retries)
+        return self._rewrite(updates.sparkSession, "merge", build, first=updates)
 
     def delete_where(
         self,
@@ -2493,28 +2428,24 @@ class MergeTable:
             duplicate keys, and the reads need no key columns."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
         if mode == "copy-on-write":
-            return self._optimistic_rewrite(
+            return self._rewrite(
                 spark,
-                lambda df, man: df.filter(~F.coalesce(cond, F.lit(False))),
                 "delete_where",
+                lambda df, man: df.filter(~F.coalesce(cond, F.lit(False))),
             )
         if mode != "merge-on-read":
             raise ValueError(f"unknown delete mode {mode!r}")
         if form not in ("equality", "position"):
             raise ValueError(f"unknown delete form {form!r}")
 
-        def build(m: dict, base: int) -> DataFrame | None:
-            try:
-                current = self.read(spark, base, _pos=(form == "position"))
-            except ValueError:
-                return None  # base expired under a concurrent commit
+        def build(base: int, m: dict) -> DataFrame:
+            current = self.read(spark, base, _pos=(form == "position"))
             hit = current.filter(F.coalesce(cond, F.lit(False)))
             if form == "position":
                 return hit.select("_pos_file", "_pos_row")
-            keys = list(m.get("key_cols") or self.key_cols)
-            return hit.select(*keys).distinct()
+            return hit.select(*self._props(m)["key_cols"]).distinct()
 
-        return self._delete_mor(spark, build, form)
+        return self._commit_deletes(form, build)
 
     def delete_keys(self, spark: SparkSession, keys_df: DataFrame) -> int:
         """Merge-on-read delete BY KEY SET: commit ``keys_df`` (one
@@ -2525,8 +2456,8 @@ class MergeTable:
         (:func:`apply_changes_stream` uses this).  Keys for rows not
         present simply match nothing.  Optimistic like every writer."""
 
-        def build(m: dict, base: int) -> DataFrame:
-            keys = list(m.get("key_cols") or self.key_cols)
+        def build(base: int, m: dict) -> DataFrame:
+            keys = self._props(m)["key_cols"]
             missing = [k for k in keys if k not in keys_df.columns]
             if missing:
                 raise ValueError(f"delete_keys() missing key columns {missing}")
@@ -2535,68 +2466,37 @@ class MergeTable:
                 *[F.col(k).cast(types[k]).alias(k) for k in keys]
             ).distinct()
 
-        return self._delete_mor(spark, build, "equality")
+        return self._commit_deletes("equality", build)
 
-    def _delete_mor(
-        self, spark: SparkSession, build, form: str, max_retries: int = 6
-    ) -> int:
-        """Merge-on-read delete commit: stage the delete file
-        (``build(manifest, base_version)`` -> keys or positions) with
-        no lock held, take the lock only to validate the base snapshot
-        is still current and flip the pointer (the same optimistic
-        protocol as every writer here)."""
-        for _ in range(max_retries):
-            base = self.current_version()
-            if base is None:
-                raise ValueError(f"delete_where() on uncommitted table {self.path}")
-            m = self._load_manifest(base)
+    def _commit_deletes(self, form: str, build) -> int:
+        """Merge-on-read delete commit: stage the delete file -
+        ``build(base, m)``, the keys or positions to delete from the
+        pinned snapshot - and record it against the pinned snapshot's
+        data dirs, through :meth:`_commit_data` with its default check
+        (a concurrent commit rebases the delete, so its applies_to
+        covers every dir the head holds)."""
+
+        def stage(base: int | None, m: dict | None):
             if m is None:
-                raise ValueError(
-                    f"legacy table {self.path} has no manifest; run compact() "
-                    "once before merge-on-read deletes"
-                )
-            keys = list(m.get("key_cols") or self.key_cols)
-            dels = build(m, base)
-            if dels is None:
-                continue  # base expired under a concurrent commit: rebase
-            staged: str | None = self._stage(dels.coalesce(1), [])
-            committed = False
-            try:
-                with _commit_lock(self.path):
-                    if self.current_version() == base:
-                        v = self._next_version()
-                        ddir = self._promote_stage_locked(staged, v)
-                        committed = True
-                        entry = {
-                            "dir": ddir,
-                            "applies_to": _data_dirs(m),
-                            "kind": form,
-                        }
-                        if form == "equality":
-                            # the delete file was WRITTEN from the
-                            # logical frame, so its physical columns
-                            # carry the logical names as of now
-                            entry["cols"] = [
-                                {"name": k, "physical": k} for k in keys
-                            ]
-                        return self._commit_manifest(
-                            v,
-                            _data_dirs(m),
-                            m["schema"],
-                            list(m.get("partition_spec") or []),
-                            m.get("dir_specs") or {},
-                            file_stats=m.get("file_stats"),
-                            op="delete-mor",
-                            deletes=_delete_entries(m) + [entry],
-                        )
-            finally:
-                if not committed and staged is not None:
-                    self._discard_stage(staged)
-            # conflict: rebase on the new current version
-        raise CommitConflict(
-            f"delete_where(mode='merge-on-read') on {self.path} lost "
-            f"{max_retries} optimistic-commit races"
-        )
+                raise ValueError(f"merge-on-read delete on uncommitted table {self.path}")
+            staged = self._stage(build(base, m).coalesce(1), [])
+            entry = {"applies_to": m["data_dirs"], "kind": form}
+            if form == "equality":
+                # the delete file was WRITTEN from the logical frame,
+                # so its physical columns carry the logical names as
+                # of now
+                entry["cols"] = [
+                    {"name": k, "physical": k} for k in self._props(m)["key_cols"]
+                ]
+            return staged, lambda ddir, head: {
+                "data_dirs": m["data_dirs"],
+                "schema": m["schema"],
+                "dir_specs": m.get("dir_specs") or {},
+                "file_stats": m.get("file_stats"),
+                "deletes": _delete_entries(m) + [{"dir": ddir, **entry}],
+            }
+
+        return self._commit_data("delete-mor", stage)
 
     def update_where(self, spark: SparkSession, condition, assignments: dict) -> int:
         """Iceberg ``UPDATE t SET col = expr WHERE cond`` (copy-on-write):
@@ -2607,7 +2507,7 @@ class MergeTable:
         conflict)."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
 
-        def build(df: DataFrame, man: dict | None) -> DataFrame:
+        def build(df: DataFrame, man: dict) -> DataFrame:
             unknown = [c for c in assignments if c not in df.columns]
             if unknown:
                 raise ValueError(f"update_where() on unknown columns {unknown}")
@@ -2633,7 +2533,7 @@ class MergeTable:
                 ]
             )
 
-        return self._optimistic_rewrite(spark, build, "update_where")
+        return self._rewrite(spark, "update_where", build)
 
     def compact(
         self,
@@ -2688,20 +2588,16 @@ class MergeTable:
             total = self._data_bytes()
             target_files = max(1, -(-total // (target_mb * 1024 * 1024)))
 
-        if zorder:
-            if self._current_sort():
-                raise ValueError(
-                    "zorder compaction conflicts with the table sort order "
-                    f"{self._current_sort()}; set_sort_order() (no args) first"
-                )
-            return self._optimistic_rewrite(
-                spark,
-                lambda df, man: _zorder_layout(df, list(zorder), target_files),
-                "compact",
-            )
-
-        def build(df: DataFrame, man: dict | None) -> DataFrame:
-            if (man or {}).get("sort_order"):
+        def build(df: DataFrame, man: dict) -> DataFrame:
+            sort = self._props(man)["sort_order"]
+            if zorder:
+                if sort:
+                    raise ValueError(
+                        "zorder compaction conflicts with the table sort "
+                        f"order {sort}; set_sort_order() (no args) first"
+                    )
+                return _zorder_layout(df, list(zorder), target_files)
+            if sort:
                 return df  # the clustered write performs the layout
             # repartition, not coalesce: coalesce can only MERGE input
             # partitions, so it silently under-produces files when the
@@ -2711,9 +2607,7 @@ class MergeTable:
             # shrinks at the end)
             return df.repartition(target_files)
 
-        return self._optimistic_rewrite(
-            spark, build, "compact", sort_partitions=target_files
-        )
+        return self._rewrite(spark, "compact", build, sort_partitions=target_files)
 
     def _scoped_compact(
         self, spark: SparkSession, where: str, target_files: int
@@ -2743,17 +2637,15 @@ class MergeTable:
         conjs = _parse_conjuncts(where)
         if not conjs:
             raise ValueError(f"no projectable conjuncts in {where!r}")
-        for _ in range(6):
-            base = self.current_version()
-            if base is None:
-                raise ValueError(f"compact() on uncommitted table {self.path}")
-            m = self._load_manifest(base)
+
+        def stage(base: int | None, m: dict | None):
             if m is None:
-                raise ValueError("scoped compaction needs a manifest table")
-            spec = list(m.get("partition_spec") or [])
+                raise ValueError(f"compact() on uncommitted table {self.path}")
+            p = self._props(m)
+            spec = p["partition_spec"]
             if not spec:
                 raise ValueError("scoped compaction needs a partitioned table")
-            names = _data_dirs(m)
+            names = m["data_dirs"]
             dir_specs = m.get("dir_specs") or {}
             if any((dir_specs.get(n) or []) != spec for n in names):
                 raise ValueError(
@@ -2824,7 +2716,7 @@ class MergeTable:
                 for leaf in leaves:
                     (rewrite if leaf in hit else carry).append((n, leaf))
             if not rewrite:
-                return base  # nothing in scope: the snapshot stands
+                return None  # nothing in scope: the snapshot stands
             # read EXACTLY the rewrite leaves (explicit paths, so the
             # row partition between rewritten and carried files cannot
             # drift from the classification above), map to the logical
@@ -2846,76 +2738,50 @@ class MergeTable:
 
             # repartition, not coalesce (see compact()'s build note)
             new_df = reduce(DataFrame.unionByName, parts).repartition(target_files)
-            sort = list(m.get("sort_order") or [])
+            staged = self._stage(
+                new_df, spec, p["sort_order"], target_files, bloom=p["bloom_cols"]
+            )
+            # carry side: hardlink untouched leaves into the stage.
+            # Runs lock-free like the staging scan above, so a
+            # concurrent commit can GC the base snapshot's dirs
+            # mid-carry - FileNotFoundError then means "base moved:
+            # rebase", the same recovery as the staging step
             try:
-                staged = self._stage(new_df, spec, sort, target_files)
-            except Exception:
-                if self.current_version() != base:
-                    continue
+                for n, leaf in carry:
+                    src = os.path.join(self.path, n, leaf)
+                    dst = os.path.join(self.path, staged, leaf)
+                    os.makedirs(dst, exist_ok=True)
+                    for fn in os.listdir(src):
+                        sp = os.path.join(src, fn)
+                        if not (os.path.isfile(sp) and fn.endswith(".parquet")):
+                            continue
+                        dp = os.path.join(dst, fn)
+                        if os.path.exists(dp):  # same leaf from two dirs
+                            stem, ext = os.path.splitext(fn)
+                            dp = os.path.join(dst, f"{stem}-{n}{ext}")
+                        try:
+                            os.link(sp, dp)
+                        except OSError:
+                            shutil.copy2(sp, dp)  # cross-device fallback
+            except BaseException:
+                self._discard_stage(staged)
                 raise
-            committed = False
-            try:
-                # carry side: hardlink untouched leaves into the stage.
-                # Runs lock-free like the staging scan above, so a
-                # concurrent commit can GC the base snapshot's dirs
-                # mid-carry - FileNotFoundError then means "base moved:
-                # rebase", the same recovery as the staging step (the
-                # finally discards the stage on the way out)
-                try:
-                    for n, leaf in carry:
-                        src = os.path.join(self.path, n, leaf)
-                        dst = os.path.join(self.path, staged, leaf)
-                        os.makedirs(dst, exist_ok=True)
-                        for fn in os.listdir(src):
-                            sp = os.path.join(src, fn)
-                            if not (
-                                os.path.isfile(sp) and fn.endswith(".parquet")
-                            ):
-                                continue
-                            dp = os.path.join(dst, fn)
-                            if os.path.exists(dp):  # same leaf from two dirs
-                                stem, ext = os.path.splitext(fn)
-                                dp = os.path.join(dst, f"{stem}-{n}{ext}")
-                            try:
-                                os.link(sp, dp)
-                            except OSError:
-                                shutil.copy2(sp, dp)  # cross-device fallback
-                except FileNotFoundError:
-                    if self.current_version() != base:
-                        continue  # base GC'd mid-carry: rebase and retry
-                    raise
-                with _commit_lock(self.path):
-                    if self.current_version() == base:
-                        v = self._next_version()
-                        data_dir = self._promote_stage_locked(staged, v)
-                        committed = True
-                        carried_dels = [
-                            {**e, "applies_to": [data_dir]} for e in dels
-                        ]
-                        return self._commit_manifest(
-                            v,
-                            [data_dir],
-                            m["schema"],
-                            spec,
-                            {data_dir: spec},
-                            op="compact",
-                            deletes=carried_dels,
-                        )
-            finally:
-                if not committed:
-                    self._discard_stage(staged)
-        raise CommitConflict(
-            f"compact(where=...) on {self.path} lost 6 optimistic-commit races"
-        )
+            return staged, lambda data_dir, head: {
+                "data_dirs": [data_dir],
+                "schema": m["schema"],
+                "dir_specs": {data_dir: spec},
+                "deletes": [{**e, "applies_to": [data_dir]} for e in dels],
+            }
+
+        return self._commit_data("compact", stage)
 
     def _data_bytes(self) -> int:
         """Total parquet bytes of the current snapshot (driver-side
         walk of the manifest's data dirs; sizing input for
         :meth:`compact`'s target_mb mode)."""
-        cur = self.current_version()
-        m = self._load_manifest(cur) if cur else None
+        m = self._head()
         total = 0
-        for d in _data_dirs(m) if m else []:
+        for d in m["data_dirs"] if m else []:
             for dirpath, _dirs, files in os.walk(os.path.join(self.path, d)):
                 for fn in files:
                     if fn.endswith(".parquet"):

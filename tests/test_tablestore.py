@@ -328,7 +328,7 @@ def test_orphan_gc_after_crashed_commit(spark, tmp_path):
     open(os.path.join(orphan_data, "part-junk.parquet"), "wb").close()
     # crash B: manifest written for the same attempt, pointer not flipped
     with open(os.path.join(t.path, "v000003.json"), "w") as f:
-        json.dump({"version": 3, "data_dir": "d000003", "schema": []}, f)
+        json.dump({"version": 3, "data_dirs": ["d000003"], "schema": []}, f)
 
     assert t.current_version() == 2  # pointer never moved
     removed = t.remove_orphans()
@@ -1373,8 +1373,8 @@ def test_mor_delete_rebases_over_concurrent_commit(spark, tmp_path, monkeypatch)
     real_stage = ts.MergeTable._stage
     fired = {"done": False}
 
-    def stage_with_interloper(self, df, spec, sort=(), sort_partitions=None):
-        name = real_stage(self, df, spec, sort, sort_partitions)
+    def stage_with_interloper(self, df, spec, *args, **kw):
+        name = real_stage(self, df, spec, *args, **kw)
         if not fired["done"]:
             fired["done"] = True
             other = ts.MergeTable(self.path, key_cols=("k",), keep_versions=6)
@@ -1388,6 +1388,155 @@ def test_mor_delete_rebases_over_concurrent_commit(spark, tmp_path, monkeypatch)
     # both the old 'x' row AND the interloping appended 'x' row are
     # gone: the rebase re-evaluated the predicate on the new base
     assert got == {1}
+
+
+def _interloping_stage(monkeypatch, on_stage):
+    """Patch ``MergeTable._stage`` so every staged write (after its
+    data is staged) runs ``on_stage(n)`` - a concurrent commit, n
+    counting from 1.  Stages made inside ``on_stage`` run unpatched."""
+    from iceberg_daq_spark.tablestore import MergeTable
+
+    real_stage = MergeTable._stage
+    state = {"n": 0, "inside": False}
+
+    def stage(self, df, spec, *args, **kw):
+        name = real_stage(self, df, spec, *args, **kw)
+        if not state["inside"]:
+            state["inside"] = True
+            try:
+                state["n"] += 1
+                on_stage(state["n"])
+            finally:
+                state["inside"] = False
+        return name
+
+    monkeypatch.setattr(MergeTable, "_stage", stage)
+    return state
+
+
+_RACE_WRITES = {
+    "merge": lambda t, spark: t.merge(
+        spark.createDataFrame([(1, "raw", 50)], "k int, tier string, v int")
+    ),
+    "update_where": lambda t, spark: t.update_where(spark, "k = 1", {"v": "v + 1"}),
+    "delete_where_cow": lambda t, spark: t.delete_where(spark, "k = 1"),
+    "delete_where_mor": lambda t, spark: t.delete_where(
+        spark, "k = 1", mode="merge-on-read"
+    ),
+    "delete_keys": lambda t, spark: t.delete_keys(
+        spark, spark.createDataFrame([(1,)], "k int")
+    ),
+    "compact": lambda t, spark: t.compact(spark),
+    "compact_where": lambda t, spark: t.compact(spark, where="tier = 'raw'"),
+}
+
+
+@pytest.mark.parametrize("write", sorted(_RACE_WRITES))
+def test_lost_races_raise_commit_conflict(spark, tmp_path, monkeypatch, write):
+    """Every optimistic data write gives up after a fixed number of
+    lost races: a concurrent commit lands while each attempt stages,
+    so every attempt's check fails.  The write raises CommitConflict,
+    the head stays the interloper's last commit, and no staged dir is
+    left behind."""
+    from iceberg_daq_spark.tablestore import CommitConflict, MergeTable
+
+    path = str(tmp_path / "lost")
+    schema = "k int, tier string, v int"
+    t = MergeTable(path, key_cols=("k",), keep_versions=20, partition_spec=("tier",))
+    t.merge(spark.createDataFrame([(1, "raw", 10), (2, "tp", 20)], schema))
+    other = MergeTable(path, key_cols=("k",), keep_versions=20)
+    heads = []
+
+    def interloper(n):
+        heads.append(
+            other.append(spark.createDataFrame([(100 + n, "raw", n)], schema))
+        )
+
+    state = _interloping_stage(monkeypatch, interloper)
+    with pytest.raises(CommitConflict):
+        _RACE_WRITES[write](t, spark)
+    monkeypatch.undo()
+    assert state["n"] == 6
+    assert t.current_version() == heads[-1]
+    assert t._load_manifest(heads[-1])["operation"] == "append"
+    assert {r.k for r in t.read(spark).collect()} == {1, 2} | {
+        100 + n for n in range(1, 7)
+    }
+    assert not any(e.startswith("_staged_") for e in os.listdir(path))
+
+
+def test_append_racing_schema_change_raises(spark, tmp_path, monkeypatch):
+    """A rename_column landing while an append stages invalidates the
+    staged files' physical schema: the append raises CommitConflict
+    and leaves the renamed head and no staged dir."""
+    from iceberg_daq_spark.tablestore import CommitConflict, MergeTable
+
+    path = str(tmp_path / "ren")
+    t = MergeTable(path, key_cols=("k",), keep_versions=10)
+    t.merge(spark.createDataFrame([(1, "a")], ["k", "v"]))
+    other = MergeTable(path, key_cols=("k",), keep_versions=10)
+    _interloping_stage(monkeypatch, lambda n: other.rename_column("v", "w"))
+    with pytest.raises(CommitConflict):
+        t.append(spark.createDataFrame([(2, "b")], ["k", "v"]))
+    monkeypatch.undo()
+    assert t._load_manifest(t.current_version())["operation"] == "rename-column"
+    assert {(r.k, r.w) for r in t.read(spark).collect()} == {(1, "a")}
+    assert not any(e.startswith("_staged_") for e in os.listdir(path))
+
+
+def test_append_commits_on_top_of_concurrent_merge(spark, tmp_path, monkeypatch):
+    """Appends never conflict with other data commits: a merge that
+    lands while the append stages does not fail the append - the
+    append commits on top of the merge and both writes are visible."""
+    from iceberg_daq_spark.tablestore import MergeTable
+
+    path = str(tmp_path / "app")
+    t = MergeTable(path, key_cols=("k",), keep_versions=10)
+    t.merge(spark.createDataFrame([(1, "a")], ["k", "v"]))  # v1
+    other = MergeTable(path, key_cols=("k",), keep_versions=10)
+    state = _interloping_stage(
+        monkeypatch,
+        lambda n: other.merge(spark.createDataFrame([(1, "A"), (2, "b")], ["k", "v"])),
+    )
+    v = t.append(spark.createDataFrame([(3, "c")], ["k", "v"]))
+    monkeypatch.undo()
+    assert state["n"] == 1  # one attempt: the merge was no conflict
+    assert v == 3 and t._load_manifest(2)["operation"] == "merge"
+    assert t._load_manifest(3)["operation"] == "append"
+    got = {r.k: r.v for r in t.read(spark).collect()}
+    assert got == {1: "A", 2: "b", 3: "c"}
+    assert not any(e.startswith("_staged_") for e in os.listdir(path))
+
+
+def test_scoped_compact_rebases_over_concurrent_commit(spark, tmp_path, monkeypatch):
+    """compact(where=...) that loses one race rebases: the retry
+    classifies the new head's dirs, the concurrent append's rows
+    survive, and the table contents are unchanged by the rewrite."""
+    from iceberg_daq_spark.tablestore import MergeTable
+
+    path = str(tmp_path / "scr")
+    schema = "k int, tier string, v int"
+    t = MergeTable(path, key_cols=("k",), keep_versions=10, partition_spec=("tier",))
+    t.merge(
+        spark.createDataFrame([(i, "raw" if i % 2 else "tp", i) for i in range(10)], schema)
+    )
+    t.append(spark.createDataFrame([(10, "tp", 10)], schema))
+    other = MergeTable(path, key_cols=("k",), keep_versions=10)
+
+    def interloper(n):
+        if n == 1:
+            other.append(spark.createDataFrame([(11, "raw", 11), (12, "tp", 12)], schema))
+
+    state = _interloping_stage(monkeypatch, interloper)
+    v = t.compact(spark, where="tier = 'raw'")
+    monkeypatch.undo()
+    assert state["n"] == 2  # one lost race, one commit
+    m = t._load_manifest(v)
+    assert v == t.current_version() and m["operation"] == "compact"
+    assert len(m["data_dirs"]) == 1
+    got = sorted(map(tuple, t.read(spark).collect()))
+    assert got == [(i, "raw" if i % 2 else "tp", i) for i in range(13)]
+    assert not any(e.startswith("_staged_") for e in os.listdir(path))
 
 
 def test_mor_delete_incremental_read_falls_back(spark, tmp_path):
@@ -1603,7 +1752,6 @@ def test_catalog_warehouse(spark, tmp_path):
     same table across 'sessions', list/drop/exists work, and the view
     facade exposes the warehouse to spark.sql."""
     from iceberg_daq_spark.catalog import Catalog
-    from iceberg_daq_spark.tablestore import CommitConflict  # noqa: F401
 
     cat = Catalog(str(tmp_path / "wh"))
     t = cat.create_table(
@@ -1617,7 +1765,7 @@ def test_catalog_warehouse(spark, tmp_path):
     # a FRESH catalog instance (new session analog) sees properties
     t2 = Catalog(str(tmp_path / "wh")).load_table("daq.runs_cat")
     assert t2.key_cols == ("run",)
-    assert t2._current_spec() == ["mode"]
+    assert t2._head()["partition_spec"] == ["mode"]
     got = {r.run: r.n for r in t2.read(spark).collect()}
     assert got == {1: 10, 2: 20}
 
@@ -1728,14 +1876,14 @@ def test_bloom_filter_property_reaches_files(spark, tmp_path):
     bloomed = MergeTable(str(tmp_path / "wb"), key_cols=("k",))
     bloomed.merge(rows)
     bloomed.set_bloom_filters("k")
-    assert bloomed._current_bloom() == ["k"]
+    assert bloomed._head()["bloom_cols"] == ["k"]
     bloomed.compact(spark)  # first data commit under the property
 
     # the bloom payload is real bytes in the files
     assert table_bytes(bloomed) > table_bytes(plain) * 1.05
     # contents unaffected; property survives reconstruction
     assert bloomed.read(spark).count() == 50_000
-    assert MergeTable(bloomed.path, key_cols=("k",))._current_bloom() == ["k"]
+    assert MergeTable(bloomed.path, key_cols=("k",))._head()["bloom_cols"] == ["k"]
     with pytest.raises(ValueError, match="unknown columns"):
         bloomed.set_bloom_filters("nope")
 
