@@ -26,6 +26,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from iceberg_daq_spark.streaming import plan
 from iceberg_daq_spark.streaming.emulator import read_frame_stream
+from iceberg_daq_spark.tablestore import start_sink
 
 WATERMARK = "50 milliseconds"  # tpset_min_latency analog (A43)
 MLT_BUFFER_TIMEOUT_MS = 100  # iceberg_daq_eth.json:239
@@ -285,19 +286,7 @@ def run_to_parquet(
             os.path.join(out_dir, f"batch_id={batch_id}")
         )
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()  # bounded drain: returns when caught up
-        return q
-    # continuous trigger: the query is unbounded - awaiting here would
-    # block the caller forever with the handle unreachable; hand the
-    # live query back (caller stops/awaits it)
-    return writer.start()
+    return start_sink(stream_df, checkpoint_dir, write_batch, available_now)
 
 
 def flush_tail(

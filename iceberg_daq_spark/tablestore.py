@@ -23,9 +23,12 @@ cluster:
                                      createMetadatafiles_iceberg_
                                      dropbox.sh:144,215)
   ALTER TABLE ADD/RENAME COLUMN    :meth:`add_column` /
-    (metadata-only, field-id         :meth:`rename_column` - a new
-    name mapping, no rewrite)        manifest that reuses the current
-                                     data dir; logical->physical name
+    (metadata-only, field-id         :meth:`rename_column` - every
+    name mapping, no rewrite;        commit writes its base manifest
+    each metadata file a copy        edited: a metadata-only commit
+    of the previous, edited)         names only the properties it
+                                     changes and reuses the data
+                                     dirs; logical->physical name
                                      mapping applied on read
   partition spec + spec            ``partition_spec`` recorded per
     evolution (a new spec            manifest; data commits write
@@ -117,6 +120,9 @@ _STAGED_RE = re.compile(r"^_staged_[0-9a-f]{12}$")
 # a data write that loses this many optimistic-commit races in a row
 # raises CommitConflict
 _COMMIT_ATTEMPTS = 6
+# the per-commit fields of a manifest: set by every commit, never
+# carried over from its base (every other field is a table property)
+_LINEAGE = ("version", "operation", "parent", "abandoned_head", "committed_at")
 
 
 class CommitConflict(RuntimeError):
@@ -155,6 +161,13 @@ def _append_only(m_from: dict | None, m_to: dict | None) -> bool:
         == [f["name"] for f in m_to["schema"]]
         and _delete_entries(m_from) == _delete_entries(m_to)
     )
+
+
+def _require_columns(m: dict, cols, what: str) -> None:
+    names = {f["name"] for f in m["schema"]}
+    unknown = [c for c in cols if c not in names]
+    if unknown:
+        raise ValueError(f"{what} references unknown columns {unknown}")
 
 
 _Z_BITS = 4  # quantile-bucket rank bits per z-order column (16 buckets)
@@ -1340,9 +1353,9 @@ class MergeTable:
         staged dir to its final d{v} name and write the manifest.
 
         ``stage`` returns ``(staged_dir, fields)``, where
-        ``fields(data_dir, head)`` gives the :meth:`_commit_manifest`
-        arguments for the renamed dir on top of the head manifest - or
-        None when there is nothing to write (the pinned snapshot
+        ``fields(data_dir, head)`` gives the properties the commit
+        changes in the head manifest, its base (:meth:`_commit_manifest`)
+        - or None when there is nothing to write (the pinned snapshot
         stands).  ``check(m, head)`` validates the pinned manifest
         against the head at commit time; the default is "the head is
         still the base".  A failed check is a lost race, and so is a
@@ -1370,19 +1383,21 @@ class MergeTable:
                     head = self._load_manifest(cur) if cur else None
                     ok = check(m, head) if check else cur == base
                     if ok:
-                        v = self._next_version()
-                        data_dir = f"d{v:06d}"
-                        os.rename(
-                            os.path.join(self.path, staged),
-                            os.path.join(self.path, data_dir),
-                        )
-                        staged = None
+
+                        def edit(v: int) -> dict:
+                            nonlocal staged
+                            data_dir = f"d{v:06d}"
+                            os.rename(
+                                os.path.join(self.path, staged),
+                                os.path.join(self.path, data_dir),
+                            )
+                            staged = None
+                            return fields(data_dir, head)
+
+                        # a first commit is an overwrite, whichever
+                        # writer makes it
                         return self._commit_manifest(
-                            v,
-                            # a first commit is an overwrite, whichever
-                            # writer makes it
-                            op=op if base else "overwrite",
-                            **fields(data_dir, head),
+                            op if base else "overwrite", head, edit
                         )
             finally:
                 if staged is not None:
@@ -1439,107 +1454,57 @@ class MergeTable:
 
         return self._commit_data(op, stage)
 
-    def _commit_manifest(
-        self,
-        v: int,
-        data_dirs: list[str],
-        schema: list[dict],
-        partition_spec: list[str] | None = None,
-        dir_specs: dict[str, list[str]] | None = None,
-        key_cols: list[str] | None = None,
-        file_stats: dict[str, dict] | None = None,
-        sort_order: list[str] | None = None,
-        op: str = "overwrite",
-        deletes: list[dict] | None = None,
-        parent_override: int | None = None,
-        abandoned_head: int | None = None,
-        bloom_cols: list[str] | None = None,
-    ) -> int:
-        """Manifest first, pointer second: a crash between the two
-        leaves a stale manifest the next commit overwrites (and whose
-        data dir the GC reclaims once unreferenced), never a pointer
-        to a missing snapshot.  ``key_cols`` persists the MERGE keys
-        (logical names) so a rename survives reconstruction.  None for
-        any table property - ``partition_spec``, ``key_cols``,
-        ``sort_order``, ``bloom_cols`` - carries the parent's forward
-        (:meth:`_props`; the constructor seed before the first commit).
+    def _commit_manifest(self, op: str, base: dict | None, edit) -> int:
+        """Write the next snapshot as an edit of ``base``, the head
+        manifest the commit builds on (None for a first commit) -
+        Iceberg's commit, which copies the previous metadata file and
+        edits it.  ``edit(v)`` gets the allocated version (a data
+        commit names its ``d{v}`` dir after it) and returns the
+        properties the commit changes; every other property carries
+        over from ``base`` as :meth:`_props` reads it (the constructor
+        seeds before the first commit).
+
+        The lineage fields (:data:`_LINEAGE`) never carry over:
+        ``parent`` is the base's version - the ref head the commit was
+        built on, the ancestry branch GC and fast-forward walk - unless
+        the edit names another (a rollback names its target), and
+        ``abandoned_head`` is written only when the edit names it.
 
         ``file_stats`` (per-dir per-file [min, max] column bounds, the
-        Iceberg manifest-stats analog) defaults to: carry the previous
-        manifest's entry forward for every retained dir (dirs are
-        immutable once committed), collect from the parquet footers
-        for dirs it lacks (i.e. the dirs this commit wrote).
+        Iceberg manifest-stats analog) keeps the edited manifest's
+        entry for every dir it lists (dirs are immutable once
+        committed) and collects the parquet footers of the dirs it
+        lacks - the dirs this commit wrote.
 
-        ``deletes`` (equality-delete entries, see
-        :func:`_delete_entries`) defaults to carrying the parent
-        manifest's forward - right for metadata-only commits and
-        fast appends, where existing data dirs (and so their pending
-        deletes) survive.  Rewrites that materialize the deletes pass
-        ``[]`` explicitly."""
-        parent = self.current_version()  # pointer not yet flipped
-        prev = self._load_manifest(parent) if parent else None
-        props = self._props(prev)
-        if deletes is None:
-            deletes = _delete_entries(prev)
-        if file_stats is None:
-            prev_stats = (prev or {}).get("file_stats") or {}
-            file_stats = {
-                d: (
-                    prev_stats[d]
-                    if d in prev_stats
-                    else _collect_dir_stats(os.path.join(self.path, d))
-                )
-                for d in data_dirs
-            }
-        _atomic_write(
-            self._manifest_path(v),
-            json.dumps(
-                {
-                    "version": v,
-                    "data_dirs": data_dirs,
-                    "schema": schema,
-                    "partition_spec": (
-                        props["partition_spec"]
-                        if partition_spec is None
-                        else partition_spec
-                    ),
-                    "dir_specs": dir_specs or {},
-                    "key_cols": props["key_cols"] if key_cols is None else key_cols,
-                    "file_stats": file_stats,
-                    "deletes": deletes,
-                    "sort_order": (
-                        props["sort_order"] if sort_order is None else sort_order
-                    ),
-                    "bloom_cols": (
-                        props["bloom_cols"] if bloom_cols is None else bloom_cols
-                    ),
-                    # snapshot summary (Iceberg's snapshot operation +
-                    # timestamp metadata)
-                    "operation": op,
-                    # commit lineage: the ref head this commit was
-                    # built on (None for a bootstrap) - ancestry for
-                    # branch GC and fast-forward walks.  rollback
-                    # overrides it with the RESTORE TARGET (Iceberg:
-                    # the rolled-back-over snapshots leave the current
-                    # ancestry and age out of retention)
-                    "parent": parent if parent_override is None else parent_override,
-                    # rollback only: the head this commit abandoned
-                    # (keeps the rolled-back-over chain retained as a
-                    # roll-forward target while THIS manifest lives)
-                    **(
-                        {"abandoned_head": abandoned_head}
-                        if abandoned_head is not None
-                        else {}
-                    ),
-                    # microsecond precision: second-truncation made
-                    # TIMESTAMP AS OF resolve to snapshots committed
-                    # *later* within the same wall-clock second
-                    "committed_at": _dt.datetime.now(_dt.timezone.utc).isoformat(
-                        timespec="microseconds"
-                    ),
-                }
+        Manifest first, pointer second: a crash between the two leaves
+        a stale manifest the next commit overwrites (and whose data dir
+        the GC reclaims once unreferenced), never a pointer to a
+        missing snapshot.  Runs under the commit lock."""
+        v = self._next_version()
+        man = {k: x for k, x in (base or {}).items() if k not in _LINEAGE}
+        man.update(self._props(base), parent=(base or {}).get("version"))
+        man.update(edit(v))
+        stats = man.get("file_stats") or {}
+        man["file_stats"] = {
+            d: (
+                stats[d]
+                if d in stats
+                else _collect_dir_stats(os.path.join(self.path, d))
+            )
+            for d in man["data_dirs"]
+        }
+        man.update(
+            version=v,
+            # snapshot summary (Iceberg's snapshot operation + timestamp
+            # metadata); microsecond precision: second-truncation made
+            # TIMESTAMP AS OF resolve to snapshots committed *later*
+            # within the same wall-clock second
+            operation=op,
+            committed_at=_dt.datetime.now(_dt.timezone.utc).isoformat(
+                timespec="microseconds"
             ),
         )
+        _atomic_write(self._manifest_path(v), json.dumps(man))
         _atomic_write(self._pointer(), str(v))
         self._expire_and_gc_locked(v)
         return v
@@ -1570,16 +1535,24 @@ class MergeTable:
         crash between data write and manifest commit.  Runs under the
         commit lock, so an in-flight commit's dir can never be
         mistaken for an orphan."""
-        # retention is PER REF: each head (main + every branch) keeps
-        # keep_versions of ITS OWN ancestry (the manifest parent
-        # chain), so a commit on one ref can never reclaim another
-        # ref's history
+        return self._sweep_locked(
+            self._retained_locked(
+                cur, lambda head: self._ancestors(head, self.keep_versions)
+            )
+        )
+
+    def _retained_locked(self, cur: int, chain) -> set[int]:
+        """The versions expiry keeps, by one walk both expiry policies
+        share.  Retention is PER REF: ``chain(head)`` gives the part of
+        a ref head's own ancestry (the manifest parent chain, newest
+        first) that the policy retains, for main, every branch and
+        ``cur``, so a commit on one ref never reclaims another ref's
+        history.  Tagged snapshots are pinned past any policy until
+        the tag is dropped."""
         keep: set[int] = set()
         pending = list({cur, *self._ref_heads().values()})
         while pending:
-            head = pending.pop()
-            chain = self._ancestors(head, self.keep_versions)
-            for v in chain:
+            for v in chain(pending.pop()):
                 if v in keep:
                     continue
                 keep.add(v)
@@ -1592,10 +1565,7 @@ class MergeTable:
                 ab = (self._load_manifest(v) or {}).get("abandoned_head")
                 if ab is not None and ab not in keep:
                     pending.append(ab)
-        # tagged snapshots are pinned: their manifests and data dirs
-        # survive any retention window until the tag is dropped
-        keep |= set(self.tags().values())
-        return self._sweep_locked(keep)
+        return keep | set(self.tags().values())
 
     def _sweep_locked(self, keep: set[int]) -> list[str]:
         """Remove every manifest not in ``keep``, then every data /
@@ -1658,27 +1628,13 @@ class MergeTable:
         m_from = self._load_manifest(from_version)
         m_to = self._load_manifest(to_v)
         if _append_only(m_from, m_to):
-            new_dirs = [
-                os.path.join(self.path, d)
-                for d in m_to["data_dirs"][len(m_from["data_dirs"]) :]
-            ]
-            if new_dirs and all(os.path.isdir(d) for d in new_dirs):
-                # per-dir scans unioned (same as read()): a single
-                # multi-path scan cannot discover partition columns
-                # when the delta dirs are partitionBy layouts
-                phys = [
-                    f["physical"] for f in m_to["schema"] if f["physical"] is not None
-                ]
-                df = reduce(
-                    DataFrame.unionByName,
-                    (spark.read.parquet(d).select(*phys) for d in new_dirs),
-                )
-                cols = [
-                    F.col(f["physical"]).cast(f["type"]).alias(f["name"])
-                    for f in m_to["schema"]
-                    if f["physical"] is not None
-                ]
-                return df.select(*cols)
+            new_dirs = m_to["data_dirs"][len(m_from["data_dirs"]) :]
+            if new_dirs and all(
+                os.path.isdir(os.path.join(self.path, d)) for d in new_dirs
+            ):
+                # no delete applies to the delta: the deletes are the
+                # same at both ends and predate the new dirs
+                return self._read_subset(spark, m_to, new_dirs, [], {}, {})
         after = self.read(spark, to_v)
         before = self.read(spark, from_version)
         shared = [c for c in after.columns if c in before.columns]
@@ -1922,48 +1878,32 @@ class MergeTable:
     def rollback(self, version: int) -> int:
         """Iceberg ``rollback_to_snapshot``: make a retained prior
         ``version`` current again via a NEW metadata-only commit that
-        duplicates its manifest (versions stay monotonic; the bad
+        duplicates its manifest - every table property, its data and
+        delete dirs and their stats (versions stay monotonic; the bad
         snapshot ages out of retention instead of being erased)."""
-        with _commit_lock(self.path):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(f"rollback on uncommitted table {self.path}")
+
+        def edit(head: dict) -> dict:
             m = self._load_manifest(version)
             if m is None or not all(
                 os.path.isdir(os.path.join(self.path, d))
-                for d in m["data_dirs"]
-                + [e["dir"] for e in _delete_entries(m)]
+                for d in m["data_dirs"] + [e["dir"] for e in _delete_entries(m)]
             ):
                 raise ValueError(
-                    f"version {version} not retained (current {cur}, "
-                    f"keep_versions {self.keep_versions})"
+                    f"version {version} not retained (current "
+                    f"{head['version']}, keep_versions {self.keep_versions})"
                 )
-            return self._commit_manifest(
-                self._next_version(),
-                m["data_dirs"],
-                m["schema"],
-                m.get("partition_spec") or [],
-                m.get("dir_specs") or {},
-                # restore the TARGET snapshot's keys with its schema: a
-                # rollback across a key-column rename must not leave
-                # current-named keys pointing into the restored (old-
-                # named) schema
-                key_cols=self._props(m)["key_cols"],
-                # the target's stats travel with its dirs
-                file_stats=m.get("file_stats"),
-                sort_order=list(m.get("sort_order") or []),
-                op="rollback",
-                # restore the TARGET's pending deletes (its delete dirs
-                # are retention-checked above alongside its data dirs)
-                deletes=_delete_entries(m),
-                # lineage points at the restore target, not the bad
-                # head: the rolled-back-over snapshots are no longer
-                # current ancestors and expire on their own - but the
-                # abandoned chain stays retained (roll-forward target)
-                # while this rollback manifest is itself retained
-                parent_override=version,
-                abandoned_head=cur,
-            )
+            # lineage points at the restore target, not the bad head:
+            # the rolled-back-over snapshots are no longer current
+            # ancestors and expire on their own - but the abandoned
+            # chain stays retained (roll-forward target) while this
+            # rollback manifest is itself retained
+            return {
+                **{k: x for k, x in m.items() if k not in _LINEAGE},
+                "parent": version,
+                "abandoned_head": head["version"],
+            }
+
+        return self._commit_metadata("rollback", edit)
 
     def remove_orphans(self) -> list[str]:
         """Run expiry + orphan GC without committing (Iceberg
@@ -1998,152 +1938,123 @@ class MergeTable:
                 ts = self._load_manifest(v)["committed_at"]
                 return _dt.datetime.fromisoformat(ts) >= cutoff
 
-            keep: set[int] = set()
-            pending = list({cur, *self._ref_heads().values()})
-            while pending:
-                head = pending.pop()
-                chain = self._ancestors(head, 10**9)
-                for i, v in enumerate(chain):
-                    if v in keep:
-                        continue
-                    if i < retain_last or fresh(v):
-                        keep.add(v)
-                        ab = (self._load_manifest(v) or {}).get("abandoned_head")
-                        if ab is not None and ab not in keep:
-                            pending.append(ab)
-                    else:
-                        # ancestry older than the cutoff: everything
-                        # beyond this point on the chain is older still
-                        break
-            keep |= set(self.tags().values())
-            return self._sweep_locked(keep)
+            def chain(head: int) -> list[int]:
+                # the last retain_last, then ancestors until the first
+                # one older than the cutoff (everything beyond it on
+                # the chain is older still)
+                out = self._ancestors(head, 10**9)
+                n = retain_last
+                while n < len(out) and fresh(out[n]):
+                    n += 1
+                return out[:n]
+
+            return self._sweep_locked(self._retained_locked(cur, chain))
 
     # -- schema evolution (metadata-only commits) ---------------------
-    def _require_manifest_locked(self) -> dict:
-        cur = self.current_version()
-        if cur is None:
-            raise ValueError(f"schema evolution on uncommitted table {self.path}")
-        return self._load_manifest(cur)
+    def _commit_metadata(self, op: str, edit) -> int:
+        """A metadata-only commit (schema evolution, spec / sort-order
+        / bloom-filter changes, rollback): under the commit lock,
+        ``edit(head)`` validates the head manifest - raising refuses
+        the change - and returns the properties the commit changes.
+        No data is written; the data dirs carry over."""
+        with _commit_lock(self.path):
+            cur = self.current_version()
+            if cur is None:
+                raise ValueError(f"{op} on uncommitted table {self.path}")
+            head = self._load_manifest(cur)
+            changes = edit(head)
+            return self._commit_manifest(op, head, lambda v: changes)
 
     def add_column(self, name: str, dtype: str, default=None) -> int:
         """Iceberg ``ALTER TABLE ADD COLUMN`` analog: a metadata-only
         commit - no data is rewritten; existing rows read ``default``
         (null unless given; must be JSON-serializable).  ``dtype`` is a
         Spark DDL type string ("bigint", "string", ...)."""
-        with _commit_lock(self.path):
-            m = self._require_manifest_locked()
+
+        def edit(m: dict) -> dict:
             if any(f["name"] == name for f in m["schema"]):
                 raise ValueError(f"column {name!r} already exists")
-            schema = m["schema"] + [
-                {"name": name, "type": dtype, "physical": None, "default": default}
-            ]
-            return self._commit_manifest(
-                self._next_version(),
-                m["data_dirs"],
-                schema,
-                m.get("partition_spec") or [],
-                m.get("dir_specs") or {},
-                op="add-column",
-            )
+            field = {"name": name, "type": dtype, "physical": None, "default": default}
+            return {"schema": m["schema"] + [field]}
+
+        return self._commit_metadata("add-column", edit)
 
     def rename_column(self, old: str, new: str) -> int:
         """Iceberg ``ALTER TABLE RENAME COLUMN`` analog: metadata-only;
         the data files keep the old physical name and reads map it to
         the new logical name (the field-id trick, minus field ids)."""
-        with _commit_lock(self.path):
-            m = self._require_manifest_locked()
+
+        def ren(c: str) -> str:
+            return new if c == old else c
+
+        # the spec names logical columns (it applies at write time to
+        # logical-named DataFrames), so a rename follows through -
+        # including inside transform entries like hours(old).  Existing
+        # dirs keep their old-era layout; pruning matches them through
+        # the physical-name mapping.
+        def ren_spec(s: str) -> str:
+            pf = parse_partition_spec([s])[0]
+            if pf.source != old:
+                return s
+            if pf.transform == "identity":
+                return new
+            arg = f"{pf.arg}, " if pf.arg is not None else ""
+            return f"{pf.transform}({arg}{new})"
+
+        def edit(m: dict) -> dict:
             names = {f["name"] for f in m["schema"]}
             if old not in names:
                 raise ValueError(f"no column {old!r}")
             if new in names:
                 raise ValueError(f"column {new!r} already exists")
-            schema = [
-                {**f, "name": new} if f["name"] == old else f for f in m["schema"]
-            ]
-            # the keys are table metadata: persist the renamed form in
-            # the manifest so a MergeTable constructed later (with the
+            p = self._props(m)
+            # the keys are table metadata: the manifest persists the
+            # renamed form so a MergeTable constructed later (with the
             # pre-rename constructor seed) still resolves the right
             # columns via _effective_keys()
-            keys = [new if k == old else k for k in self._props(m)["key_cols"]]
-            if old in self.key_cols:
-                self.key_cols = tuple(
-                    new if k == old else k for k in self.key_cols
-                )
-            # the spec names logical columns (it applies at write time
-            # to logical-named DataFrames), so a rename follows through
-            # - including inside transform entries like hours(old).
-            # Existing dirs keep their old-era layout; pruning matches
-            # them through the physical-name mapping.
-            def _ren(s: str) -> str:
-                pf = parse_partition_spec([s])[0]
-                if pf.source != old:
-                    return s
-                if pf.transform == "identity":
-                    return new
-                arg = f"{pf.arg}, " if pf.arg is not None else ""
-                return f"{pf.transform}({arg}{new})"
-
-            spec = [_ren(c) for c in (m.get("partition_spec") or [])]
-            # sort order and bloom columns name LOGICAL columns too:
-            # left un-renamed they would silently stop clustering /
-            # filtering (the `c in df.columns` guard drops them) while
-            # still blocking zorder compaction on the stale name
-            sort = [new if c == old else c for c in (m.get("sort_order") or [])]
-            bloom = [new if c == old else c for c in (m.get("bloom_cols") or [])]
-            # pending equality deletes reference the keys by LOGICAL
-            # name; the delete files keep the old physical column (the
-            # same field-id trick as the data files)
-            dels = [
-                (
-                    {
-                        **e,
-                        "cols": [
-                            {**c, "name": new if c["name"] == old else c["name"]}
-                            for c in e["cols"]
-                        ],
-                    }
+            self.key_cols = tuple(map(ren, self.key_cols))
+            return {
+                "schema": [{**f, "name": ren(f["name"])} for f in m["schema"]],
+                "key_cols": [ren(k) for k in p["key_cols"]],
+                "partition_spec": [ren_spec(c) for c in p["partition_spec"]],
+                # sort order and bloom columns name LOGICAL columns too:
+                # left un-renamed they would silently stop clustering /
+                # filtering (the `c in df.columns` guard drops them)
+                # while still blocking zorder compaction on the stale
+                # name
+                "sort_order": [ren(c) for c in p["sort_order"]],
+                "bloom_cols": [ren(c) for c in p["bloom_cols"]],
+                # pending equality deletes reference the keys by
+                # LOGICAL name; the delete files keep the old physical
+                # column (the same field-id trick as the data files).
+                # Position deletes carry no key columns.
+                "deletes": [
+                    {**e, "cols": [{**c, "name": ren(c["name"])} for c in e["cols"]]}
                     if e.get("cols")
-                    else e  # position deletes carry no key columns
-                )
-                for e in _delete_entries(m)
-            ]
-            return self._commit_manifest(
-                self._next_version(),
-                m["data_dirs"],
-                schema,
-                spec,
-                m.get("dir_specs") or {},
-                key_cols=keys,
-                sort_order=sort,
-                bloom_cols=bloom,
-                op="rename-column",
-                deletes=dels,
-            )
+                    else e
+                    for e in _delete_entries(m)
+                ],
+            }
+
+        return self._commit_metadata("rename-column", edit)
 
     def drop_column(self, name: str) -> int:
         """Iceberg ``ALTER TABLE DROP COLUMN`` analog: metadata-only -
         the field leaves the manifest schema (reads stop projecting
         it), the data files keep their bytes until the next rewrite.
         Key and partition columns cannot be dropped."""
-        with _commit_lock(self.path):
-            m = self._require_manifest_locked()
-            if name in self._props(m)["key_cols"]:
+
+        def edit(m: dict) -> dict:
+            p = self._props(m)
+            if name in p["key_cols"]:
                 raise ValueError(f"cannot drop key column {name!r}")
-            if name in {
-                pf.source for pf in parse_partition_spec(m.get("partition_spec") or [])
-            }:
+            if name in {pf.source for pf in parse_partition_spec(p["partition_spec"])}:
                 raise ValueError(f"cannot drop partition column {name!r}")
             if not any(f["name"] == name for f in m["schema"]):
                 raise ValueError(f"no column {name!r}")
-            schema = [f for f in m["schema"] if f["name"] != name]
-            return self._commit_manifest(
-                self._next_version(),
-                m["data_dirs"],
-                schema,
-                m.get("partition_spec") or [],
-                m.get("dir_specs") or {},
-                op="drop-column",
-            )
+            return {"schema": [f for f in m["schema"] if f["name"] != name]}
+
+        return self._commit_metadata("drop-column", edit)
 
     def set_partition_spec(self, *cols: str) -> int:
         """Iceberg partition-spec evolution analog: a metadata-only
@@ -2156,22 +2067,13 @@ class MergeTable:
         ``months(ts)``, ``years(ts)``, ``bucket(N, col)``,
         ``truncate(W, col)``); the spec engages at the next data
         commit (merge/append/compact)."""
-        with _commit_lock(self.path):
-            m = self._require_manifest_locked()
-            names = {f["name"] for f in m["schema"]}
-            unknown = [
-                pf.spec for pf in parse_partition_spec(cols) if pf.source not in names
-            ]
-            if unknown:
-                raise ValueError(f"partition spec references unknown columns {unknown}")
-            return self._commit_manifest(
-                self._next_version(),
-                m["data_dirs"],
-                m["schema"],
-                list(cols),
-                m.get("dir_specs") or {},
-                op="set-partition-spec",
-            )
+
+        def edit(m: dict) -> dict:
+            sources = [pf.source for pf in parse_partition_spec(cols)]
+            _require_columns(m, sources, "partition spec")
+            return {"partition_spec": list(cols)}
+
+        return self._commit_metadata("set-partition-spec", edit)
 
     def set_sort_order(self, *cols: str) -> int:
         """Iceberg ``replace_sort_order`` analog: a metadata-only
@@ -2182,21 +2084,12 @@ class MergeTable:
         sort on these columns so each data file covers a narrow slice
         of the key - the layout that makes manifest min/max skipping
         selective."""
-        with _commit_lock(self.path):
-            m = self._require_manifest_locked()
-            names = {f["name"] for f in m["schema"]}
-            unknown = [c for c in cols if c not in names]
-            if unknown:
-                raise ValueError(f"sort order references unknown columns {unknown}")
-            return self._commit_manifest(
-                self._next_version(),
-                m["data_dirs"],
-                m["schema"],
-                list(m.get("partition_spec") or []),
-                m.get("dir_specs") or {},
-                sort_order=list(cols),
-                op="set-sort-order",
-            )
+
+        def edit(m: dict) -> dict:
+            _require_columns(m, cols, "sort order")
+            return {"sort_order": list(cols)}
+
+        return self._commit_metadata("set-sort-order", edit)
 
     def set_bloom_filters(self, *cols: str) -> int:
         """Enable parquet bloom filters on ``cols`` for FUTURE data
@@ -2207,21 +2100,12 @@ class MergeTable:
         (random keys span every file's range); the parquet reader
         consumes them transparently at row-group granularity.  Pass no
         cols to disable."""
-        with _commit_lock(self.path):
-            m = self._require_manifest_locked()
-            names = {f["name"] for f in m["schema"]}
-            unknown = [c for c in cols if c not in names]
-            if unknown:
-                raise ValueError(f"bloom filters reference unknown columns {unknown}")
-            return self._commit_manifest(
-                self._next_version(),
-                m["data_dirs"],
-                m["schema"],
-                list(m.get("partition_spec") or []),
-                m.get("dir_specs") or {},
-                op="set-bloom-filters",
-                bloom_cols=list(cols),
-            )
+
+        def edit(m: dict) -> dict:
+            _require_columns(m, cols, "bloom filter list")
+            return {"bloom_cols": list(cols)}
+
+        return self._commit_metadata("set-bloom-filters", edit)
 
     # -- write API ----------------------------------------------------
     def overwrite(self, df: DataFrame) -> int:
@@ -2285,7 +2169,6 @@ class MergeTable:
             staged = self._stage(aligned, spec, p["sort_order"], bloom=p["bloom_cols"])
             return staged, lambda data_dir, head: {
                 "data_dirs": head["data_dirs"] + [data_dir],
-                "schema": head["schema"],
                 "dir_specs": {
                     **(head.get("dir_specs") or {}),
                     **({data_dir: spec} if spec else {}),
@@ -2489,11 +2372,7 @@ class MergeTable:
                     {"name": k, "physical": k} for k in self._props(m)["key_cols"]
                 ]
             return staged, lambda ddir, head: {
-                "data_dirs": m["data_dirs"],
-                "schema": m["schema"],
-                "dir_specs": m.get("dir_specs") or {},
-                "file_stats": m.get("file_stats"),
-                "deletes": _delete_entries(m) + [{"dir": ddir, **entry}],
+                "deletes": _delete_entries(head) + [{"dir": ddir, **entry}]
             }
 
         return self._commit_data("delete-mor", stage)
@@ -2768,7 +2647,6 @@ class MergeTable:
                 raise
             return staged, lambda data_dir, head: {
                 "data_dirs": [data_dir],
-                "schema": m["schema"],
                 "dir_specs": {data_dir: spec},
                 "deletes": [{**e, "applies_to": [data_dir]} for e in dels],
             }
@@ -2812,6 +2690,28 @@ class MergeTable:
         shutil.rmtree(self.path, ignore_errors=True)
 
 
+def start_sink(
+    stream_df: DataFrame, checkpoint_dir: str, each_batch, available_now: bool = True
+):
+    """Start ``stream_df`` into a ``foreachBatch(each_batch)`` sink
+    checkpointed at ``checkpoint_dir`` - the one starter every sink
+    here shares.  ``available_now`` drains what is available and
+    returns the finished query; otherwise the trigger is continuous
+    and the query unbounded - awaiting it would block the caller
+    forever with the handle unreachable - so the live query comes
+    back for the caller to stop or await."""
+    writer = (
+        stream_df.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+        .foreachBatch(each_batch)
+    )
+    if not available_now:
+        return writer.start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
+
+
 def run_stream_to_table(
     stream_df: DataFrame,
     table: MergeTable,
@@ -2841,19 +2741,7 @@ def run_stream_to_table(
         if compact_every and (batch_id + 1) % compact_every == 0:
             table.compact(batch_df.sparkSession)
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(upsert)
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()  # bounded drain: returns when caught up
-        return q
-    # continuous trigger: the query is unbounded - awaiting here would
-    # block the caller forever with the handle unreachable; hand the
-    # live query back (caller stops/awaits it)
-    return writer.start()
+    return start_sink(stream_df, checkpoint_dir, upsert, available_now)
 
 
 def apply_changes_stream(
@@ -2915,16 +2803,4 @@ def apply_changes_stream(
         if table.current_version() is not None and dels.limit(1).count():
             table.delete_keys(batch_df.sparkSession, dels)
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(apply_batch)
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()  # bounded drain: returns when caught up
-        return q
-    # continuous trigger: the query is unbounded - awaiting here would
-    # block the caller forever with the handle unreachable; hand the
-    # live query back (caller stops/awaits it)
-    return writer.start()
+    return start_sink(stream_df, checkpoint_dir, apply_batch, available_now)

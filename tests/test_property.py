@@ -12,6 +12,7 @@ from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from iceberg_daq_spark.streaming import plan
+from tests.test_tablestore import manifest_properties
 
 # keep each example to one tiny Spark job; suite budget ~30 s
 _SETTINGS = dict(
@@ -208,6 +209,9 @@ def test_merge_table_op_sequences_match_model(_spark, ops, tmp_path_factory):
                 continue
             v = payload % (len(hist) - 1) + 1  # a committed version
             t.rollback(v)
+            assert manifest_properties(t, t.current_version()) == (
+                manifest_properties(t, v)
+            )
             hist.append(hist[v])
         elif tag == "compact":
             if not data:

@@ -255,6 +255,17 @@ def test_read_changes_incremental(spark, tmp_path):
     dp = {(r["k"], r["tier"], r["v"]) for r in tp.read_changes(spark, 1).collect()}
     assert dp == {(2, "tp", 20), (3, "raw", 30)}
 
+    # the fast path maps the delta through the snapshot's schema, as
+    # read() does: a column added after the delta was written reads as
+    # its default
+    tc = MergeTable(str(tmp_path / "inc_c"), key_cols=("k",), keep_versions=10)
+    tc.merge(spark.createDataFrame([(1, 10, 5)], "k int, v int, c int"))  # v1
+    tc.drop_column("c")  # v2
+    tc.append(spark.createDataFrame([(2, 20)], "k int, v int"))  # v3
+    tc.add_column("c", "int", default=7)  # v4: v1's columns again
+    rows = tc.read_changes(spark, 1).collect()
+    assert [r.asDict() for r in rows] == [{"k": 2, "v": 20, "c": 7}]
+
 
 def test_update_where(spark, tmp_path):
     """UPDATE ... SET ... WHERE (copy-on-write): assignments apply only
@@ -782,6 +793,49 @@ def test_rollback_across_key_rename_restores_keys(spark, tmp_path):
     t.merge(spark.createDataFrame([(1, "A"), (2, "b")], ["k", "v"]))
     rows = {r["k"]: r["v"] for r in t.read(spark).collect()}
     assert rows == {1: "A", 2: "b"}
+
+
+# the per-commit fields of a manifest; every other field is a table
+# property a rollback must restore
+_LINEAGE = ("version", "operation", "parent", "abandoned_head", "committed_at")
+
+
+def manifest_properties(t, v: int) -> dict:
+    """Snapshot ``v``'s manifest without its lineage fields."""
+    return {k: x for k, x in t._load_manifest(v).items() if k not in _LINEAGE}
+
+
+_PROPERTY_OPS = {
+    "set_partition_spec": lambda t, spark: t.set_partition_spec("tier"),
+    "set_sort_order": lambda t, spark: t.set_sort_order("v"),
+    "set_bloom_filters": lambda t, spark: t.set_bloom_filters("k"),
+    "rename_column": lambda t, spark: t.rename_column("k", "kk"),
+    "add_column": lambda t, spark: t.add_column("extra", "int", default=7),
+    "delete_where_mor": lambda t, spark: t.delete_where(
+        spark, "k = 1", mode="merge-on-read"
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_PROPERTY_OPS))
+def test_rollback_restores_every_property(spark, tmp_path, op):
+    """A rollback over ``op`` leaves a head manifest equal to the
+    target's apart from the lineage fields: every table property
+    (spec, sort order, bloom columns, keys, schema, pending deletes,
+    stats) is the target's, so later data commits are laid out by
+    it.  The rollback's own lineage points at the target and records
+    the abandoned head."""
+    from iceberg_daq_spark.tablestore import MergeTable
+
+    t = MergeTable(str(tmp_path / "rbp"), key_cols=("k",), keep_versions=10)
+    schema = "k int, tier string, v int"
+    t.merge(spark.createDataFrame([(1, "raw", 10), (2, "tp", 20)], schema))  # v1
+    _PROPERTY_OPS[op](t, spark)  # v2
+    assert manifest_properties(t, 2) != manifest_properties(t, 1)
+    v = t.rollback(1)
+    assert manifest_properties(t, v) == manifest_properties(t, 1)
+    head = t._load_manifest(v)
+    assert (head["parent"], head["abandoned_head"]) == (1, 2)
 
 
 def test_tags_pin_snapshots_past_retention(spark, tmp_path):
