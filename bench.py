@@ -29,6 +29,77 @@ import time
 from iceberg_daq_spark.registry import all_queries
 from iceberg_daq_spark.session import get_spark
 
+sys.path.append(os.path.join(os.path.dirname(os.path.abspath(__file__)), "perfbench"))
+from workloads import SparkCounters, noop  # noqa: E402
+
+_ROWS_METRIC = "number of output rows"
+
+
+def run_query(spark, counters: SparkCounters, build) -> dict:
+    """One run of ``build()`` into the noop sink, the step every
+    harness times: ``build()`` runs under one job group and the action
+    under another, then the DataFrame cache is cleared.  Returns build
+    and exec seconds, build and exec job counts, and ``peak_rows``: the
+    most rows any plan node output, over every SQL execution the run
+    started (build included)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    _drain_listeners(spark)
+    first = _last_execution_id(store) + 1
+    g_build = counters.new_group()
+    t0 = time.perf_counter()
+    df = build()
+    t1 = time.perf_counter()
+    g_exec = counters.new_group()
+    t2 = time.perf_counter()
+    noop(df)
+    t3 = time.perf_counter()
+    spark.catalog.clearCache()
+    _drain_listeners(spark)
+    return {
+        "build_s": t1 - t0,
+        "exec_s": t3 - t2,
+        "build_jobs": len(counters.jobs(g_build)),
+        "exec_jobs": len(counters.jobs(g_exec)),
+        "peak_rows": _peak_rows(store, first),
+    }
+
+
+def wall(run: dict) -> float:
+    return run["build_s"] + run["exec_s"]
+
+
+def _drain_listeners(spark) -> None:
+    """The status stores are fed from the listener bus: wait until it
+    has delivered every event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def _last_execution_id(store) -> int:
+    execs = store.executionsList()
+    return execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+
+
+def _peak_rows(store, first: int) -> int:
+    """The largest output-row count of any plan node, over the SQL
+    executions numbered ``first`` and later."""
+    peak = 0
+    execs = store.executionsList()
+    for k in range(execs.size() - 1, -1, -1):
+        eid = execs.apply(k).executionId()
+        if eid < first:
+            break
+        metrics = store.executionMetrics(eid)
+        nodes = store.planGraph(eid).allNodes()
+        for i in range(nodes.size()):
+            node_metrics = nodes.apply(i).metrics()
+            for j in range(node_metrics.size()):
+                m = node_metrics.apply(j)
+                if m.name() == _ROWS_METRIC:
+                    v = metrics.get(m.accumulatorId())
+                    if v.isDefined():
+                        peak = max(peak, int(v.get().replace(",", "")))
+    return peak
+
 
 def sf_from_dir(sf_dir: str) -> float:
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -75,25 +146,23 @@ def main() -> None:
 
     from iceberg_daq_spark.queries import llm
 
+    counters = SparkCounters(spark)
     timings: dict[str, float] = {}
+    profile: dict[str, dict] = {}
     for name in names:
         fn = specs[name].fn
-        best = None
+        runs = []
         for _ in range(repeat):
             if name.startswith("q57"):
                 # q57 owns the shared pair/CC stage: reset the handle so
                 # every q57 repeat times the FULL closure (no
                 # self-reuse across repeats - same honesty rule as
-                # clearCache below).  q73, which runs later in sorted
-                # order, then reuses the stage q57's last repeat left -
-                # the stored-dedup-groups-table shape of a real
+                # run_query's clearCache).  q73, which runs later in
+                # sorted order, then reuses the stage q57's last repeat
+                # left - the stored-dedup-groups-table shape of a real
                 # pipeline, deliberately reflected here.
                 llm._DEDUP_GROUPS_CACHE.clear()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-            spark.catalog.clearCache()
+            runs.append(run_query(spark, counters, lambda: fn(spark, sf_dir)))
         # NOTE on GC: stress_bench GCs between repeats because at 10x
         # rows the heavy pair joins otherwise time their repeats under
         # the previous run's dead 30M-row shuffle (3-4x inflation).
@@ -101,7 +170,9 @@ def main() -> None:
         # explicit System.gc() here leaks concurrent G1 phases INTO
         # the next timed region (+0.1-0.2s on every one of 229
         # queries, measured) - so this loop deliberately does NOT gc.
-        timings[name] = round(best, 3)
+        best = min(runs, key=wall)
+        timings[name] = round(wall(best), 3)
+        profile[name] = {k: round(v, 3) for k, v in best.items()}
         print(f"# {name}: {timings[name]:.3f}s", file=sys.stderr)
 
     # regression tripwire: a per-query slowdown > 2x vs the previous
@@ -136,7 +207,7 @@ def main() -> None:
 
     streaming = None
     if os.environ.get("BENCH_STREAMING", "1") != "0" and not only:
-        streaming = measure_streaming(spark)
+        streaming = measure_streaming(spark, counters)
 
     total = round(sum(timings.values()), 3)
     out = {
@@ -155,6 +226,8 @@ def main() -> None:
     # total and (b) an empty-plan floor estimate - n_queries times the
     # best-of-5 noop cost of a plan that scans nothing - so a consumer
     # can separate engine time from floor without a second bench leg.
+    # floor_sec's plan is one single-stage job; floor_shuffle_sec's adds
+    # one shuffle, the least a query with any exchange pays.
     out["subset_q01_q61"] = round(
         sum(
             v
@@ -163,24 +236,24 @@ def main() -> None:
         ),
         3,
     )
-    floor_one = None
-    for _ in range(5):
-        t0 = time.perf_counter()
-        spark.range(1).write.mode("overwrite").format("noop").save()
-        dt = time.perf_counter() - t0
-        floor_one = dt if floor_one is None else min(floor_one, dt)
-    out["floor_sec"] = round(len(timings) * floor_one, 3)
+    for key, build in (
+        ("floor_sec", lambda: spark.range(1)),
+        ("floor_shuffle_sec", lambda: spark.range(1).repartition(1)),
+    ):
+        floor_one = min(wall(run_query(spark, counters, build)) for _ in range(5))
+        out[key] = round(len(timings) * floor_one, 3)
     if streaming:
         out["streaming"] = streaming
     if regressions:
         out["regressions"] = regressions
     # Full-precision record on disk: the driver captures only the last
     # 2000 chars of stdout, so round-over-round comparison must not
-    # depend on that window.  Focused runs (BENCH_QUERIES) must not
-    # clobber the full-suite record.
+    # depend on that window; it alone carries each query's best-repeat
+    # run_query record.  Focused runs (BENCH_QUERIES) must not clobber
+    # the full-suite record.
     if not only:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_last.json"), "w") as fh:
-            json.dump(out, fh, indent=1)
+        with open(last_path, "w") as fh:
+            json.dump({**out, "profile": profile}, fh, indent=1)
             fh.write("\n")
     print(emit_line(out))
 
@@ -245,7 +318,7 @@ def _emit_variants(out: dict):
             }
 
 
-def measure_streaming(spark) -> dict:
+def measure_streaming(spark, counters: SparkCounters) -> dict:
     """Data-plane throughput (the BASELINE 'sustained >= source rate'
     gate), two legs:
 
@@ -293,13 +366,7 @@ def measure_streaming(spark) -> dict:
         # pass 1 pays Python-worker spin-up + whole-stage-codegen JIT
         # for the decode UDF, and a single noisy pass on a loaded host
         # must not read the plane below its nominal source rate
-        dt = None
-        for _ in range(repeat):
-            t0 = time.perf_counter()
-            df_builder().write.mode("overwrite").format("noop").save()
-            d1 = time.perf_counter() - t0
-            dt = d1 if dt is None else min(dt, d1)
-        return dt
+        return min(wall(run_query(spark, counters, df_builder)) for _ in range(repeat))
 
     d = tempfile.mkdtemp(prefix="bench_frames_")
     try:

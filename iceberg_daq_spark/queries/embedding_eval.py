@@ -16,7 +16,7 @@ accumulation exists anywhere in the chain.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from iceberg_daq_spark.registry import register
@@ -186,12 +186,6 @@ def q203(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def knn_query_sample() -> Column:
-    """q204's fixed-rate 1% query sample over ``vec_id``; the stress
-    growth counter sizes q204's pair volume with the same predicate."""
-    return F.col("vec_id") % 100 == 0
-
-
 @register(
     "q204_knn_label_agreement",
     oracle="""
@@ -261,7 +255,7 @@ def q204(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda acc, x: acc + x,
     )
     vecs = emb.select("vec_id", "label", "embedding", nano_norm.alias("nn"))
-    s = vecs.filter(knn_query_sample()).select(
+    s = vecs.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("q"),
         F.col("label").alias("qlabel"),
         F.col("embedding").alias("qemb"),

@@ -529,10 +529,7 @@ def q65(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def contamination_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q65's pair-discovery stage, factored so the stress bench's
-    true-output counter measures EXACTLY the quantity the query
-    computes (any tuning of the split rule / shingle hash / shared
-    gate changes both in lockstep): (eval_doc, train_doc, n_shared)
+    """q65's pair-discovery stage: (eval_doc, train_doc, n_shared)
     for held-out docs (doc_id % 10 == 0) sharing >= 5 distinct 3-gram
     shingles with a training doc."""
     from iceberg_daq_spark.operators.dedup import shingles

@@ -317,10 +317,7 @@ def q189(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_bigram_types(spark: SparkSession, sf_dir: str):
     """``(tok, dtri)``: the posexploded token stream and the per-doc
     bigram-TYPE reduction (multiplicity ``m``) that q190 and q250 pin
-    and every LM model table re-aggregates from.  Factored so the
-    stress harness measures the bigram-vocabulary growth (the model-
-    table size driving those cells' 10x ratios) through the queries'
-    own stage - the counter can never drift from the plan it gates."""
+    and every LM model table re-aggregates from."""
     d = load(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "w")

@@ -31,18 +31,14 @@ from iceberg_daq_spark.tables import load
 _MAX_D = 2  # merge records whose names are within this edit distance
 
 
-def match_pairs(
-    spark: SparkSession, sf_dir: str, part: DataFrame | None = None
-) -> DataFrame:
-    """q239's SNM match-pair stage, exposed standalone: (u, v) part-key
-    pairs with u < v whose names are within edit distance {_MAX_D}
-    inside (first-token, brand) blocks.  stress_bench counts this to
-    measure the TRUE output growth of the survivorship pipeline at 10x
-    rows (clone families are mutually within distance 2, so edges grow
-    ~copies^2 per family - the wall ratio must be judged against that
-    growth, not against rows).  ``part`` lets q239 pass its pinned
-    scan so the table is read once."""
-    t = (part if part is not None else load(spark, sf_dir, "part")).select(
+def match_pairs(part: DataFrame) -> DataFrame:
+    """q239's SNM match-pair stage over the ``part`` scan: (u, v)
+    part-key pairs with u < v whose names are within edit distance
+    {_MAX_D} inside (first-token, brand) blocks.  Clone families are
+    mutually within distance 2, so at 10x rows the edges grow
+    ~copies^2 per family - the stress wall ratio is judged against
+    that growth, not against rows."""
+    t = part.select(
         "p_partkey",
         "p_name",
         "p_brand",
@@ -146,7 +142,7 @@ def q239(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_type",
         "p_retailprice",
     ).localCheckpoint()
-    pairs = match_pairs(spark, sf_dir, part=t)
+    pairs = match_pairs(t)
     cc = connected_components(pairs, "u", "v")
     golden = (
         cc.join(t, cc.node == t.p_partkey)

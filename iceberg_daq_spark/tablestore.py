@@ -941,8 +941,8 @@ class MergeTable:
         cur = self.current_version()
         if cur is None:
             raise ValueError(f"table {self.path} has no commits")
-        for v in self._ancestors(cur, 10**9):  # newest first
-            if _dt.datetime.fromisoformat(self._load_manifest(v)["committed_at"]) <= ts:
+        for v, m in self._ancestors(cur, 10**9).items():  # newest first
+            if _dt.datetime.fromisoformat(m["committed_at"]) <= ts:
                 return v
         raise ValueError(
             f"no retained snapshot of {self.path} at or before {ts.isoformat()}"
@@ -1509,21 +1509,20 @@ class MergeTable:
         self._expire_and_gc_locked(v)
         return v
 
-    def _ancestors(self, v: int | None, n: int) -> list[int]:
+    def _ancestors(self, v: int | None, n: int) -> dict[int, dict]:
         """Up to ``n`` versions of a ref's own history, newest first,
-        following each manifest's ``parent`` link.  A MISSING manifest
-        means snapshot expiry truncated this ref's chain: stop there -
-        guessing ``v - 1`` would walk into a numerically-adjacent
-        version that may belong to ANOTHER branch's retained history
-        (time travel would then read unpublished branch data)."""
-        out: list[int] = []
-        seen: set[int] = set()
-        while v and len(out) < n and v not in seen:
+        each mapped to the manifest the walk read for its ``parent``
+        link.  A MISSING manifest means snapshot expiry truncated this
+        ref's chain: stop there - guessing ``v - 1`` would walk into a
+        numerically-adjacent version that may belong to ANOTHER
+        branch's retained history (time travel would then read
+        unpublished branch data)."""
+        out: dict[int, dict] = {}
+        while v and len(out) < n and v not in out:
             m = self._load_manifest(v)
             if m is None:
                 break  # expired ancestor: chain truncated, never guess
-            seen.add(v)
-            out.append(v)
+            out[v] = m
             v = m["parent"]
         return out
 
@@ -1541,49 +1540,48 @@ class MergeTable:
             )
         )
 
-    def _retained_locked(self, cur: int, chain) -> set[int]:
-        """The versions expiry keeps, by one walk both expiry policies
-        share.  Retention is PER REF: ``chain(head)`` gives the part of
-        a ref head's own ancestry (the manifest parent chain, newest
-        first) that the policy retains, for main, every branch and
-        ``cur``, so a commit on one ref never reclaims another ref's
-        history.  Tagged snapshots are pinned past any policy until
-        the tag is dropped."""
-        keep: set[int] = set()
+    def _retained_locked(self, cur: int, chain) -> dict[int, dict | None]:
+        """The versions expiry keeps, each with its manifest, by one
+        walk both expiry policies share.  Retention is PER REF:
+        ``chain(head)`` gives the part of a ref head's own ancestry (as
+        :meth:`_ancestors` returns it) that the policy retains, for
+        main, every branch and ``cur``, so a commit on one ref never
+        reclaims another ref's history.  Tagged snapshots are pinned
+        past any policy until the tag is dropped."""
+        keep: dict[int, dict | None] = {}
         pending = list({cur, *self._ref_heads().values()})
         while pending:
-            for v in chain(pending.pop()):
+            for v, m in chain(pending.pop()).items():
                 if v in keep:
                     continue
-                keep.add(v)
+                keep[v] = m
                 # a rollback manifest records the head it abandoned:
                 # the rolled-back-over chain stays a roll-forward
                 # target until the rollback itself ages out of
                 # retention ("ages out, not erased") - crashed
                 # never-current manifests have no such link and are
                 # reclaimed as before
-                ab = (self._load_manifest(v) or {}).get("abandoned_head")
+                ab = m.get("abandoned_head")
                 if ab is not None and ab not in keep:
                     pending.append(ab)
-        return keep | set(self.tags().values())
+        for v in self.tags().values():
+            if v not in keep:
+                keep[v] = self._load_manifest(v)
+        return keep
 
-    def _sweep_locked(self, keep: set[int]) -> list[str]:
+    def _sweep_locked(self, keep: dict[int, dict | None]) -> list[str]:
         """Remove every manifest not in ``keep``, then every data /
         delete dir no retained manifest references, then stale staged
         dirs.  The physical half of both expiry policies."""
         removed: list[str] = []
         referenced: set[str] = set()
+        for man in keep.values():
+            if man:
+                referenced.update(man["data_dirs"])
+                referenced.update(e["dir"] for e in _delete_entries(man))
         for entry in sorted(os.listdir(self.path)):
             mm = re.match(r"^v(\d{6})\.json$", entry)
-            if not mm:
-                continue
-            v = int(mm.group(1))
-            if v in keep:
-                man = self._load_manifest(v)
-                if man:
-                    referenced.update(man["data_dirs"])
-                    referenced.update(e["dir"] for e in _delete_entries(man))
-            else:
+            if mm and int(mm.group(1)) not in keep:
                 os.unlink(os.path.join(self.path, entry))
                 removed.append(entry)
         import time as _time
@@ -1697,10 +1695,12 @@ class MergeTable:
     def snapshots(self) -> list[dict]:
         """The retained snapshots, oldest first (Iceberg's
         ``snapshots`` metadata table): version, data dirs, partition
-        spec, column names, and the snapshot summary (operation,
-        commit timestamp, data-file count) per retained manifest."""
+        spec, column names, parent version, and the snapshot summary
+        (operation, commit timestamp, data-file count) per retained
+        manifest."""
         out = []
         refs = self.tags()
+        cur = self.current_version()
         for entry in sorted(os.listdir(self.path)):
             mm = re.match(r"^v(\d{6})\.json$", entry)
             if not mm:
@@ -1715,7 +1715,8 @@ class MergeTable:
                     "data_dirs": m["data_dirs"],
                     "partition_spec": m.get("partition_spec") or [],
                     "columns": [f["name"] for f in m["schema"]],
-                    "current": m["version"] == self.current_version(),
+                    "current": m["version"] == cur,
+                    "parent": m.get("parent"),
                     "tags": sorted(t for t, v in refs.items() if v == m["version"]),
                     "operation": m["operation"],
                     "committed_at": m["committed_at"],
@@ -1856,19 +1857,26 @@ class MergeTable:
         cur = self.current_version()
         if cur is None:
             raise ValueError(f"history() on uncommitted table {self.path}")
-        ancestry = set(self._ancestors(cur, 10**9))
-        rows = []
-        for s in self.snapshots():
-            m = self._load_manifest(s["version"])
-            rows.append(
-                (
-                    s["version"],
-                    (m or {}).get("parent"),
-                    s.get("committed_at"),
-                    s.get("operation"),
-                    s["version"] in ancestry,
-                )
+        snaps = self.snapshots()
+        # the ancestry walk of _ancestors over the manifests snapshots()
+        # already read: every retained manifest is among them, so a
+        # parent missing here is one expiry truncated
+        parents = {s["version"]: s["parent"] for s in snaps}
+        ancestry: set[int] = set()
+        v = cur
+        while v in parents and v not in ancestry:
+            ancestry.add(v)
+            v = parents[v]
+        rows = [
+            (
+                s["version"],
+                s["parent"],
+                s["committed_at"],
+                s["operation"],
+                s["version"] in ancestry,
             )
+            for s in snaps
+        ]
         return spark.createDataFrame(
             rows,
             "version bigint, parent bigint, committed_at string, "
@@ -1934,19 +1942,17 @@ class MergeTable:
                 seconds=older_than_s
             )
 
-            def fresh(v: int) -> bool:
-                ts = self._load_manifest(v)["committed_at"]
-                return _dt.datetime.fromisoformat(ts) >= cutoff
-
-            def chain(head: int) -> list[int]:
+            def chain(head: int) -> dict[int, dict]:
                 # the last retain_last, then ancestors until the first
                 # one older than the cutoff (everything beyond it on
                 # the chain is older still)
-                out = self._ancestors(head, 10**9)
+                out = list(self._ancestors(head, 10**9).items())
                 n = retain_last
-                while n < len(out) and fresh(out[n]):
+                while n < len(out) and (
+                    _dt.datetime.fromisoformat(out[n][1]["committed_at"]) >= cutoff
+                ):
                     n += 1
-                return out[:n]
+                return dict(out[:n])
 
             return self._sweep_locked(self._retained_locked(cur, chain))
 

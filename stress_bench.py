@@ -37,6 +37,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from bench import SparkCounters, run_query, wall
 from iceberg_daq_spark.operators import dedup
 from iceberg_daq_spark.registry import all_queries
 from iceberg_daq_spark.session import get_spark
@@ -403,10 +404,13 @@ def base_pair_volume(spark, base_dir: str, df_max: int = 128) -> int:
     )
 
 
-def time_queries(spark, specs, names, sf_dir, repeat):
-    from iceberg_daq_spark.queries import llm
+def time_queries(spark, counters, specs, names, sf_dir, repeat):
+    """name -> the ``run_query`` record of its fastest repeat on
+    ``sf_dir``."""
+    import gc
 
     from iceberg_daq_spark.operators import ranking
+    from iceberg_daq_spark.queries import llm
 
     out = {}
     for name in names:
@@ -415,11 +419,10 @@ def time_queries(spark, specs, names, sf_dir, repeat):
         # the switch threshold so the distributed rank selection runs
         # at both scales (the small branch is plain F.percentile -
         # nothing to stress)
-        pin_giant = name.startswith("q214")
         saved_thr = ranking.GIANT_GROUP_ROWS
-        if pin_giant:
+        if name.startswith("q214"):
             ranking.GIANT_GROUP_ROWS = 0
-        best = None
+        runs = []
         for _ in range(repeat):
             if name.startswith("q57"):
                 # same honesty rule as bench.py: every q57 repeat times
@@ -427,11 +430,7 @@ def time_queries(spark, specs, names, sf_dir, repeat):
                 # the stage the last repeat left - the stored-table
                 # pipeline shape
                 llm._DEDUP_GROUPS_CACHE.clear()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-            spark.catalog.clearCache()
+            runs.append(run_query(spark, counters, lambda: fn(spark, sf_dir)))
             # reclaim the run's shuffle/broadcast/checkpoint debris
             # BETWEEN repeats, not just between queries: the
             # ContextCleaner only frees blocks after a GC, and the
@@ -440,14 +439,11 @@ def time_queries(spark, specs, names, sf_dir, repeat):
             # (measured: q41 at 10x reads 8-13s post-GC vs 33-50s
             # under debris - the cost being measured must be the
             # query's, not the allocator's)
-            import gc as _gc
-
-            _gc.collect()
+            gc.collect()
             spark.sparkContext._jvm.System.gc()
-        if pin_giant:
-            ranking.GIANT_GROUP_ROWS = saved_thr
-        out[name] = round(best, 3)
-        print(f"# {sf_dir.rsplit('/', 1)[-1]} {name}: {best:.3f}s", file=sys.stderr)
+        ranking.GIANT_GROUP_ROWS = saved_thr
+        out[name] = min(runs, key=wall)
+        print(f"# {sf_dir.rsplit('/', 1)[-1]} {name}: {wall(out[name]):.3f}s", file=sys.stderr)
         if name.startswith("q57"):
             # measurement-artifact separation (round-10 verdict #3):
             # the rebuild-every-repeat number above charges q57 the
@@ -456,13 +452,11 @@ def time_queries(spark, specs, names, sf_dir, repeat):
             # the stored groups table.  Record that consumer-read cost
             # too, so the stress ratio of the ALGORITHM (stage build)
             # and of the PIPELINE SHAPE (stage reuse) are both visible.
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            reused = time.perf_counter() - t0
-            out[name + "__stage_reused"] = round(reused, 3)
+            reused = run_query(spark, counters, lambda: fn(spark, sf_dir))
+            out[name + "__stage_reused"] = reused
             print(
                 f"# {sf_dir.rsplit('/', 1)[-1]} {name} (stage reused): "
-                f"{reused:.3f}s",
+                f"{wall(reused):.3f}s",
                 file=sys.stderr,
             )
     return out
@@ -505,24 +499,26 @@ ANN_GEOMETRY_NOTE = (
 # Cells whose TRUE OUTPUT grows superlinearly on this corpus by
 # construction (the 10x near-dup clone families are mutually matching
 # /containing), so rows-scaled wall ratios carry the wrong
-# denominator.  The growth is MEASURED AT RUN TIME (OUTPUT_COUNTERS
-# below counts the output-driving quantity at both dirs) and recorded
-# per cell as output_base/output_stress/output_growth plus
-# ratio_per_output = ratio / output_growth - the honest per-output-row
-# scaling.  A cell whose wall ratio is at or below its measured output
-# growth is sublinear in the work it was asked to produce.
+# denominator.  Every cell records rows_base/rows_stress/rows_growth -
+# the timed runs' peak_rows, the most rows any plan node output - and
+# these cells add ratio_per_output = ratio / rows_growth, the
+# per-output-row scaling.  A cell whose wall ratio is at or below its
+# rows growth is sublinear in the work it was asked to produce, and
+# only these cells can be excused from MAX_RATIO by that growth.
 OUTPUT_BOUND = {
     "q239_survivorship": (
         "output-bound: the ' v{c}' clone suffixes are mutually within "
         "edit distance 2, so TRUE match pairs grow ~copies^2 per "
-        "family (output_growth measures it); the closure stays on the "
-        "numpy driver branch at stress scale since the memory-sized "
-        "CC_DRIVER_EDGE_MAX raise"
+        "family; the match-pair table is the cell's largest plan "
+        "node, so rows_growth counts exactly those pairs; the closure "
+        "stays on the numpy driver branch at stress scale since the "
+        "memory-sized CC_DRIVER_EDGE_MAX raise"
     ),
     "q246_containment_pairs": (
         "output-bound: clone families are mutually containing, so "
-        "TRUE verified pairs grow ~copies^2 per family "
-        "(output_growth measures it); the wall ratio rides that "
+        "TRUE verified pairs grow ~copies^2 per family; rows_growth "
+        "reads the prefix-candidate join that feeds verification (the "
+        "cell's largest plan node), and the wall ratio rides that "
         "output"
     ),
     "q65_contamination_check": (
@@ -531,92 +527,83 @@ OUTPUT_BOUND = {
         "the growth comes from CROSS-family products - every "
         "(eval original, train original) pair that already shared "
         ">= 5 shingles expands to ~copies x copies near-dup clone "
-        "pairs that still share them (output_growth measures the "
-        "realized count); the >= 5-shared gate must see every shared "
-        "shingle to stay exact, so the join fanout rides that growth"
+        "pairs that still share them (rows_growth reads the "
+        "largest plan node of the cell's runs); the >= 5-shared gate "
+        "must see every shared shingle to stay exact, so the join "
+        "fanout rides that growth"
     ),
     "q204_knn_label_agreement": (
         "pair-growth-bound: the audit scores a FIXED-RATE 1% query "
         "sample against the whole corpus, so 10x rows is 100x scored "
-        "pairs BY CONSTRUCTION (output_growth counts the exact "
-        "sample x (corpus-1) pair volume); the max_by partial agg "
-        "keeps the shuffle sample-sized, so the wall must track the "
-        "in-kernel pair fold - read the ratio against the measured "
-        "pair growth"
+        "pairs, which follows from n by arithmetic (sample x "
+        "(corpus-1)); the broadcast nested-loop join that forms the "
+        "pairs outputs exactly that many rows, so rows_growth reads "
+        "the 100x.  The dot-product fold runs per pair inside the "
+        "projection over that join and the max_by partial agg keeps "
+        "the shuffle sample-sized, so the wall must track the pair "
+        "fold - read the ratio against rows_growth"
     ),
     "q250_kneser_ney_bigram": (
-        "model-growth-bound: the growth-driving quantity counted here "
-        "is the bigram-TYPE vocabulary (the KN model tables big/ctx/"
+        "model-growth-bound: the growth-driving quantity is the "
+        "bigram-TYPE vocabulary (the KN model tables big/ctx/"
         "cont that broadcast onto every scored row and whose build is "
         "the cell's superlinear term).  The c{c}w{i} perturbation "
         "tokens each clone copy injects mint NEW types at every "
         "perturbed position, so the synthetic corpus grows bigram "
-        "vocabulary far faster than Heaps's law would on real text - "
-        "the wall ratio must be read against that measured growth"
+        "vocabulary far faster than Heaps's law would on real text.  "
+        "rows_growth reads the cell's largest plan node, the token "
+        "stream (~10x), which bounds that vocabulary's growth"
     ),
 }
 
-
-def _count_q239_output(spark, d: str) -> int:
-    """True-output driver for q239: SNM match-pair (edge) count."""
-    from iceberg_daq_spark.queries.survivorship import match_pairs
-
-    return match_pairs(spark, d).count()
-
-
-def _count_q246_output(spark, d: str) -> int:
-    """True-output driver for q246: verified containment pairs (the
-    query's own unlimited result set)."""
-    from iceberg_daq_spark.registry import all_queries
-
-    return all_queries()["q246_containment_pairs"].fn(spark, d).count()
-
-
-def _count_q65_output(spark, d: str) -> int:
-    """True-output driver for q65: contaminated (eval, train) pairs
-    BEFORE the per-eval rollup, counted through q65's own factored
-    pair stage so the gate can never drift from the query."""
-    from iceberg_daq_spark.queries.llm import contamination_pairs
-
-    return contamination_pairs(spark, d).count()
-
-
-def _count_q250_model(spark, d: str) -> int:
-    """Growth driver for q250: bigram-TYPE count (the KN model-table
-    size), measured through the query's own factored stage."""
-    from iceberg_daq_spark.queries.sequence import doc_bigram_types
-
-    return (
-        doc_bigram_types(spark, d)[1].select("prev", "cur").distinct().count()
-    )
-
-
-def _count_q204_pairs(spark, d: str) -> int:
-    """Growth driver for q204: the scored pair volume, exactly
-    n_sample x (n_corpus - 1) by the audit's join contract, sampled
-    through q204's own predicate so the counter cannot drift from it."""
-    from iceberg_daq_spark.queries.embedding_eval import knn_query_sample
-
-    row = load(spark, d, "embeddings").agg(
-        F.count("*").alias("n"),
-        F.sum(F.when(knn_query_sample(), 1).otherwise(0)).alias("s"),
-    ).collect()[0]
-    return int(row["s"]) * (int(row["n"]) - 1)
-
-
-OUTPUT_COUNTERS = {
-    "q239_survivorship": _count_q239_output,
-    "q246_containment_pairs": _count_q246_output,
-    "q65_contamination_check": _count_q65_output,
-    "q250_kneser_ney_bigram": _count_q250_model,
-    "q204_knn_label_agreement": _count_q204_pairs,
-}
 
 # screen ratio above which a cell is re-measured with the controlled
 # warm-JIT paired loop before being recorded (kept slightly under the
 # 2.5x review threshold so borderline cells get adjudicated too)
 CONTROLLED_TRIGGER = 2.4
 CONTROLLED_PASSES = 5
+
+
+def stress_cell(pairs: list[list[dict]], estimator: str) -> dict:
+    """One query's cell from its [base, stress] ``run_query`` pairs,
+    each pair timed back-to-back in one time window.  The ratio is the
+    MIN over pairs of that pair's stress/base quotient: a steal burst
+    inflates both sides of a pair together, so the quotient stays
+    meaningful, while min-of-absolutes across pairs would re-decouple
+    them (the shorter base cells land fully inside quiet gaps more
+    often, biasing every ratio upward).  The exact per-pair
+    [base_sec, stress_sec] are kept so a consumer can re-derive the
+    ratio; rows_* are the peak plan-node rows at each scale."""
+    secs = [[round(wall(b), 3), round(wall(s), 3)] for b, s in pairs]
+    ratios = [s / max(b, 1e-9) for b, s in secs]
+    rows_base = max(b["peak_rows"] for b, _ in pairs)
+    rows_stress = max(s["peak_rows"] for _, s in pairs)
+    return {
+        "base_sec": min(b for b, _ in secs),
+        "stress_sec": min(s for _, s in secs),
+        "ratio": round(min(ratios), 2),
+        "estimator": estimator,
+        "pass_pairs": secs,
+        "ratio_pass": ratios.index(min(ratios)),
+        "rows_base": rows_base,
+        "rows_stress": rows_stress,
+        "rows_growth": round(rows_stress / max(rows_base, 1), 2),
+    }
+
+
+def superlinear(queries: dict) -> list[str]:
+    """The cells whose ratio exceeds MAX_RATIO and so fail the run.
+    BY_DESIGN cells are never gated (q44 is ~copies^2 by declaration:
+    a larger STRESS_COPIES would trip MAX_RATIO on a cell the harness
+    itself says is not a plan signal), and only an OUTPUT_BOUND cell
+    is excused by a ratio at or below its rows_growth."""
+    return [
+        n
+        for n, cell in queries.items()
+        if cell["ratio"] > MAX_RATIO
+        and n not in BY_DESIGN
+        and not (n in OUTPUT_BOUND and cell["ratio"] <= cell["rows_growth"])
+    ]
 
 
 def main() -> None:
@@ -684,6 +671,7 @@ def main() -> None:
         else:
             groups.append([names[i]])
             i += 1
+    counters = SparkCounters(spark)
     base_passes: list[dict] = []
     stress_passes: list[dict] = []
     for p in range(passes):
@@ -692,52 +680,16 @@ def main() -> None:
         sp: dict = {}
         for grp in groups:
             for acc, d in ((bp, base_dir), (sp, stress_dir)):
-                acc.update(time_queries(spark, specs, grp, d, repeat))
+                acc.update(time_queries(spark, counters, specs, grp, d, repeat))
         base_passes.append(bp)
         stress_passes.append(sp)
-    base_t = {k: min(bp[k] for bp in base_passes) for k in base_passes[0]}
-    stress_t = {k: min(sp[k] for sp in stress_passes) for k in stress_passes[0]}
-    # ratio per query = MIN over passes of that pass's paired
-    # stress/base - both cells of a pair share one time window, so a
-    # steal burst inflates them together and the quotient stays
-    # meaningful; min-of-absolutes across passes would re-decouple
-    # them (the shorter base cells land fully inside quiet gaps more
-    # often, biasing every ratio upward).  The per-pass pairs are
-    # recorded verbatim so a consumer can re-derive every ratio.
-    pass_pairs = {
-        k: [
-            [bp[k], sp[k]]
-            for bp, sp in zip(base_passes, stress_passes)
-        ]
-        for k in base_passes[0]
+    queries = {
+        n: stress_cell(
+            [[bp[n], sp[n]] for bp, sp in zip(base_passes, stress_passes)],
+            f"screen-{passes}x-paired",
+        )
+        for n in sorted(base_passes[0])
     }
-    paired_ratio = {
-        k: min(s / max(b, 1e-9) for b, s in pairs)
-        for k, pairs in pass_pairs.items()
-    }
-
-    queries = {}
-    for n in sorted(base_t):
-        ratio = round(paired_ratio[n], 2)
-        pairs = pass_pairs[n]
-        ratios = [s / max(b, 1e-9) for b, s in pairs]
-        queries[n] = {
-            "base_sec": base_t[n],
-            "stress_sec": stress_t[n],
-            "ratio": ratio,
-            "estimator": f"screen-{passes}x-paired",
-            # auditability (round-12 advice): the exact per-pass
-            # [base_sec, stress_sec] pairs the ratio came from, and
-            # which pass won - ratio == pairs[ratio_pass] quotient
-            "pass_pairs": pairs,
-            "ratio_pass": ratios.index(min(ratios)),
-        }
-        if n in BY_DESIGN:
-            queries[n]["by_design"] = BY_DESIGN[n]
-        if n in ANN_GEOMETRY:
-            queries[n]["geometry_note"] = ANN_GEOMETRY_NOTE
-        if n in OUTPUT_BOUND:
-            queries[n]["output_bound_note"] = OUTPUT_BOUND[n]
 
     # Controlled re-measure (round-12 verdict #2): cells whose screen
     # ratio clears CONTROLLED_TRIGGER get the warm-JIT paired loop -
@@ -755,69 +707,43 @@ def main() -> None:
     ]
     for n in offenders:
         print(f"# controlled re-measure: {n}", file=sys.stderr)
-        cpairs = []
-        for _ in range(CONTROLLED_PASSES):
-            b = time_queries(spark, specs, [n], base_dir, 1)[n]
-            s = time_queries(spark, specs, [n], stress_dir, 1)[n]
-            cpairs.append([b, s])
-        cratios = [s / max(b, 1e-9) for b, s in cpairs]
-        cell = queries[n]
-        cell["screen_ratio"] = cell["ratio"]
-        cell["estimator"] = f"controlled-{CONTROLLED_PASSES}x-paired-warm"
-        cell["pass_pairs"] = cpairs
-        cell["ratio_pass"] = cratios.index(min(cratios))
-        cell["ratio"] = round(min(cratios), 2)
-        cell["base_sec"] = min(b for b, _ in cpairs)
-        cell["stress_sec"] = min(s for _, s in cpairs)
+        cpairs = [
+            [time_queries(spark, counters, specs, [n], d, 1)[n] for d in (base_dir, stress_dir)]
+            for _ in range(CONTROLLED_PASSES)
+        ]
+        queries[n] = {
+            **stress_cell(cpairs, f"controlled-{CONTROLLED_PASSES}x-paired-warm"),
+            "screen_ratio": queries[n]["ratio"],
+        }
         print(
-            f"# {n}: screen {cell['screen_ratio']} -> controlled "
-            f"{cell['ratio']}",
+            f"# {n}: screen {queries[n]['screen_ratio']} -> controlled "
+            f"{queries[n]['ratio']}",
             file=sys.stderr,
         )
 
-    # Output-bound cells: measure the true-output growth at run time
-    # and record the output-normalized ratio alongside the wall ratio
-    # (round-12 verdict: adjudications must live in the artifact, not
-    # commit prose).  One count per dir per cell, warm JVM.
-    for n, counter in OUTPUT_COUNTERS.items():
-        if n not in queries:
-            continue
-        ob = counter(spark, base_dir)
-        osn = counter(spark, stress_dir)
-        growth = osn / max(ob, 1)
-        cell = queries[n]
-        cell["output_base"] = ob
-        cell["output_stress"] = osn
-        cell["output_growth"] = round(growth, 2)
-        cell["ratio_per_output"] = round(
-            cell["ratio"] / max(growth, 1e-9), 4
-        )
-        if cell["ratio"] <= growth:
-            cell["gate"] = (
-                "output-normalized: wall ratio <= measured true-output "
-                "growth (sublinear per output row)"
-            )
-
-    failed = [
-        n
-        for n in names
-        if queries[n]["ratio"] > MAX_RATIO
-        and n not in BY_DESIGN  # 'never gated' cells (q44 is ~copies^2
-        # by declaration: a larger STRESS_COPIES would trip MAX_RATIO
-        # on a cell the harness itself says is not a plan signal)
-        and not (
-            queries[n].get("output_growth")
-            and queries[n]["ratio"] <= queries[n]["output_growth"]
-        )
-    ]
-    # a ratio's denominator is only meaningful when the base cell is
-    # compute-bound: below ~0.5 s the base is mostly scheduler / job
-    # fixed overhead, so a healthy linear operator can show a 4-6x
-    # "ratio" on sub-2s absolutes (q73's consumer read).  Tag those
-    # cells so the artifact itself carries the caveat.
     for n, cell in queries.items():
+        if n in BY_DESIGN:
+            cell["by_design"] = BY_DESIGN[n]
+        if n in ANN_GEOMETRY:
+            cell["geometry_note"] = ANN_GEOMETRY_NOTE
+        if n in OUTPUT_BOUND:
+            cell["output_bound_note"] = OUTPUT_BOUND[n]
+            cell["ratio_per_output"] = round(
+                cell["ratio"] / max(cell["rows_growth"], 1e-9), 4
+            )
+            if cell["ratio"] <= cell["rows_growth"]:
+                cell["gate"] = (
+                    "output-normalized: wall ratio <= measured peak-rows "
+                    "growth (sublinear per output row)"
+                )
+        # a ratio's denominator is only meaningful when the base cell
+        # is compute-bound: below ~0.5 s the base is mostly scheduler /
+        # job fixed overhead, so a healthy linear operator can show a
+        # 4-6x "ratio" on sub-2s absolutes (q73's consumer read).  Tag
+        # those cells so the artifact itself carries the caveat.
         if cell["base_sec"] < 0.5:
             cell["overhead_bound_base"] = True
+    failed = superlinear(queries)
 
     out = {
         "metric": "dedup_similarity_stress_suite",
@@ -874,14 +800,15 @@ def main() -> None:
             "CC_DRIVER_EDGE_MAX (Arrow both ways, no edge shuffle). "
             "q57__stage_reused is the consumer-read cost of the "
             "already-built stage (never gated: pipeline shape, not "
-            "algorithm). OUTPUT-BOUND CELLS (output_bound_note "
-            "present) additionally record output_base/output_stress/"
-            "output_growth - the output-driving quantity counted AT "
-            "RUN TIME at both dirs - and ratio_per_output = ratio / "
-            "output_growth; on this clone-family corpus their true "
-            "output grows ~copies^2, so the wall ratio must be read "
-            "against output_growth, and a cell with ratio <= "
-            "output_growth is sublinear per output row (gate field "
+            "algorithm). Every cell records rows_base/rows_stress/"
+            "rows_growth: the most rows any plan node output in the "
+            "cell's timed runs at each scale, read from Spark's SQL "
+            "metrics. OUTPUT-BOUND CELLS (output_bound_note present) "
+            "additionally record ratio_per_output = ratio / "
+            "rows_growth; on this clone-family corpus their true "
+            "output grows superlinearly, so the wall ratio must be "
+            "read against rows_growth, and a cell with ratio <= "
+            "rows_growth is sublinear per output row (gate field "
             "says so explicitly)."
             % (repeat, passes, copies)
         ),

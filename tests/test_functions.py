@@ -94,16 +94,17 @@ def test_text_sql_functions_match_column_api(spark, sf_dir):
     assert "PythonUDF" not in plan and "BatchEvalPython" not in plan
 
 
-def _load_bench():
+def _load_script(name: str):
+    """The repo-root script ``name``.py as a module."""
     import importlib.util
     import os
 
     spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py")
+        name, os.path.join(os.path.dirname(__file__), "..", f"{name}.py")
     )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-    return bench
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
 def test_bench_regression_tripwire():
@@ -111,7 +112,7 @@ def test_bench_regression_tripwire():
     noise-band priors (<50 ms), new queries, and improvements - and
     compares nothing against a record from another (or an unstated)
     core count."""
-    bench = _load_bench()
+    bench = _load_script("bench")
 
     queries = {"q_slow": 1.0, "q_noise": 0.01, "q_fast": 2.0, "q_same": 0.5}
     now = {"q_slow": 2.5, "q_noise": 0.4, "q_fast": 0.3, "q_same": 0.6, "q_new": 9.0}
@@ -121,13 +122,51 @@ def test_bench_regression_tripwire():
     assert bench.find_regressions({"queries": queries}, now, cpus=8) == {}
 
 
+def test_run_query_splits_build_and_exec(spark):
+    """bench.run_query, the one timed run of every harness: a lazy
+    build launches no job and the noop action at least one; peak_rows
+    is the most rows any plan node output (the range, ahead of its
+    filter); an eager count() inside the build is one build job (one
+    partition, so no shuffle: under AQE the count of a multi-partition
+    frame runs its shuffle stage as a job of its own)."""
+    bench = _load_script("bench")
+    counters = bench.SparkCounters(spark)
+
+    lazy = bench.run_query(spark, counters, lambda: spark.range(1000).filter("id % 3 = 0"))
+    assert lazy["build_jobs"] == 0 and lazy["exec_jobs"] >= 1
+    assert lazy["peak_rows"] == 1000
+    assert lazy["build_s"] >= 0 and lazy["exec_s"] > 0
+
+    def eager():
+        df = spark.range(0, 1000, 1, 1).filter("id % 3 = 0")
+        assert df.count() == 334
+        return df
+
+    assert bench.run_query(spark, counters, eager)["build_jobs"] == 1
+
+
+def test_stress_gate_scope():
+    """The MAX_RATIO gate: a BY_DESIGN cell never fails; growth excuses
+    an OUTPUT_BOUND cell whose ratio is within its rows_growth, and no
+    other cell."""
+    stress = _load_script("stress_bench")
+    over = {"ratio": stress.MAX_RATIO + 10, "rows_growth": 100.0}
+    by_design = next(iter(stress.BY_DESIGN))
+    output_bound = next(iter(stress.OUTPUT_BOUND))
+    assert stress.superlinear({by_design: dict(over, rows_growth=1.0)}) == []
+    assert stress.superlinear({output_bound: over}) == []
+    assert stress.superlinear({output_bound: dict(over, rows_growth=10.0)}) == [output_bound]
+    assert stress.superlinear({"q41_dedup_ngram_jaccard": over}) == ["q41_dedup_ngram_jaccard"]
+    assert stress.superlinear({"q41_dedup_ngram_jaccard": dict(over, ratio=4.0)}) == []
+
+
 def test_bench_emit_line_keeps_per_query_timings():
     """A full suite with a long regression list (r14: 262 queries, 59
     regressions) still emits per-query timings inside the tail window:
     the regression list shrinks before any timing does."""
     import json
 
-    bench = _load_bench()
+    bench = _load_script("bench")
     queries = {f"q{i:03d}_some_query_family_name": 1.0 + i / 1000 for i in range(1, 263)}
     regressions = {n: [0.5 + i / 100, 1.0 + i / 10] for i, n in enumerate(list(queries)[:60])}
     out = {

@@ -320,6 +320,57 @@ def test_snapshots_and_rollback(spark, tmp_path):
     assert {r["k"]: r["v"] for r in t.read(spark).collect()} == {1: "a", 3: "c"}
 
 
+def _fifty_version_chain(spark, path):
+    """One data commit, then 49 metadata-only commits: a 50-manifest
+    parent chain, all of it inside ``keep_versions``."""
+    from iceberg_daq_spark.tablestore import MergeTable
+
+    t = MergeTable(path, key_cols=("k",), keep_versions=50)
+    t.merge(spark.createDataFrame([(1, "a")], ["k", "v"]))
+    for i in range(49):
+        t.set_sort_order(*(("k",) if i % 2 == 0 else ()))
+    assert t.current_version() == 50
+    return t
+
+
+def _count_calls(monkeypatch, obj, name: str) -> list:
+    calls: list = []
+    real = getattr(obj, name)
+
+    def counted(*args):
+        calls.append(args)
+        return real(*args)
+
+    monkeypatch.setattr(obj, name, counted)
+    return calls
+
+
+def test_expiry_loads_each_retained_manifest_once(spark, tmp_path, monkeypatch):
+    """Expiry + orphan GC reads each retained manifest once: the
+    ancestry walk's reads serve the rollback links and the sweep."""
+    t = _fifty_version_chain(spark, str(tmp_path / "gcload"))
+    loads = _count_calls(monkeypatch, t, "_load_manifest")
+    assert t.remove_orphans() == []
+    assert len(loads) <= 51
+
+
+def test_snapshots_and_history_read_each_file_once(spark, tmp_path, monkeypatch):
+    """snapshots() reads the head pointer once; history() builds on the
+    manifests snapshots() read, loading none twice."""
+    t = _fifty_version_chain(spark, str(tmp_path / "hist"))
+    pointer = _count_calls(monkeypatch, t, "current_version")
+    loads = _count_calls(monkeypatch, t, "_load_manifest")
+    snaps = t.snapshots()
+    assert len(snaps) == 50 and len(pointer) == 1
+    assert [s["version"] for s in snaps if s["current"]] == [50]
+
+    del pointer[:], loads[:]
+    h = t.history(spark).collect()
+    assert len(loads) == 50 and len(pointer) <= 2
+    assert all(r.is_current_ancestor for r in h)
+    assert [r.parent for r in h] == [None] + list(range(1, 50))
+
+
 def test_orphan_gc_after_crashed_commit(spark, tmp_path):
     """Crash-mid-commit cleanup (Iceberg expire_snapshots +
     remove_orphan_files): a data dir written without a manifest, and a
@@ -2151,10 +2202,10 @@ def test_ancestors_stop_at_expired_manifest(tmp_path, spark):
     for i in range(4):
         t.merge(spark.createDataFrame([(i, i)], "k int, v int"))
     head = t.current_version()
-    chain = t._ancestors(head, 10)
+    chain = list(t._ancestors(head, 10))
     assert len(chain) == 4
     # simulate expiry of a mid-chain manifest
     victim = chain[2]
     os.remove(t._manifest_path(victim))
-    truncated = t._ancestors(head, 10)
+    truncated = list(t._ancestors(head, 10))
     assert truncated == chain[:2], (truncated, chain)

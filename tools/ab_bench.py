@@ -2,8 +2,8 @@
 """Interleaved paired A/B benchmark (the round-13 protocol): variants
 alternate inside ONE session, one execution each per round, so host
 drift cancels in the pairing; report per-round pairs and the min per
-variant.  The timed action is the noop sink (guide section 1.4) and the
-DataFrame cache is cleared between executions, exactly like bench.py.
+variant.  Each execution is one ``bench.run_query``: the noop sink, with
+the DataFrame cache cleared after it, exactly like bench.py.
 
 Usage:
     python tools/ab_bench.py ROUNDS label_a=mod.path:fn label_b=mod.path:fn ...
@@ -18,10 +18,10 @@ from __future__ import annotations
 import importlib
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import SparkCounters, run_query, wall  # noqa: E402
 from iceberg_daq_spark.session import get_spark  # noqa: E402
 
 
@@ -39,17 +39,11 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     # warm JVM + parquet footers once, outside timing (bench.py protocol)
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
-    best: dict[str, float] = {}
+    counters = SparkCounters(spark)
     times: dict[str, list[float]] = {lab: [] for lab, _ in variants}
     for r in range(rounds):
         for label, fn in variants:
-            spark.sparkContext.setJobDescription(f"ab:{label}:r{r}")
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            dt = time.perf_counter() - t0
-            times[label].append(dt)
-            best[label] = min(best.get(label, dt), dt)
-            spark.catalog.clearCache()
+            times[label].append(wall(run_query(spark, counters, lambda: fn(spark, sf_dir))))
         print(
             f"round {r}: "
             + "  ".join(f"{lab}={times[lab][-1]:.3f}s" for lab, _ in variants),
@@ -57,7 +51,7 @@ def main() -> None:
         )
     print("---")
     for lab, _ in variants:
-        print(f"{lab}: min={best[lab]:.3f}s  all={[round(t, 3) for t in times[lab]]}")
+        print(f"{lab}: min={min(times[lab]):.3f}s  all={[round(t, 3) for t in times[lab]]}")
 
 
 if __name__ == "__main__":
