@@ -341,7 +341,6 @@ def measure_streaming(spark, counters: SparkCounters) -> dict:
     from iceberg_daq_spark.streaming.emulator import frame_plan, with_packed_payload
     from iceberg_daq_spark.streaming.pipeline import (
         MLT_BUFFER_TIMEOUT_MS,
-        MLT_MAX_TD_TICKS,
         READOUT_AFTER_TICKS,
         READOUT_BEFORE_TICKS,
     )
@@ -382,7 +381,6 @@ def measure_streaming(spark, counters: SparkCounters) -> dict:
             tds = plan.merge_decisions(
                 plan.ta_windows(plan.decode_hits(frames)),
                 max_gap_ticks=MLT_BUFFER_TIMEOUT_MS * 62_500,
-                max_td_ticks=MLT_MAX_TD_TICKS,
             ).select(
                 F.col("src_id").alias("td_src"), "td_start_tick", "td_end_tick"
             )

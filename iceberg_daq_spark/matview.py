@@ -23,7 +23,9 @@ refreshes are ordinary MERGE commits: atomic, versioned, time-travel-
 able, and safe under the optimistic-writer protocol.  The refresh
 watermark (last folded source snapshot version) is stored in a
 sidecar ``_mv_state.json`` next to the view so any process can resume
-maintenance.
+maintenance; it also names the view head that fold produced, so a
+crash between a view commit and the state write is seen by the next
+refresh, which then recomputes instead of folding the delta twice.
 
 Exactness: count/sum over integral columns and all min/max results
 are exactly equal to a full recompute (model-tested against random
@@ -82,16 +84,27 @@ class MaterializedAggView:
     def _state_path(self) -> str:
         return os.path.join(self.path, "_mv_state.json")
 
-    def refreshed_version(self) -> int | None:
-        """The last source snapshot folded into the view."""
+    def _state(self) -> dict:
         try:
             with open(self._state_path) as f:
-                return json.load(f)["source_version"]
-        except (OSError, KeyError, ValueError):
-            return None
+                return json.load(f)
+        except (OSError, ValueError):
+            return {}
+
+    def refreshed_version(self) -> int | None:
+        """The last source snapshot folded into the view."""
+        return self._state().get("source_version")
 
     def _save_state(self, v: int) -> None:
-        _atomic_write(self._state_path, json.dumps({"source_version": v}))
+        """Record the folded source version together with the view head
+        it produced: a view commit the state file does not name (a
+        crash between the commit and this write) is detectable."""
+        _atomic_write(
+            self._state_path,
+            json.dumps(
+                {"source_version": v, "view_version": self.view.current_version()}
+            ),
+        )
 
     # -- aggregate expressions ----------------------------------------
     def _full_aggs(self) -> list:
@@ -130,8 +143,11 @@ class MaterializedAggView:
         stored summary.  Cost is O(changed rows) + O(affected groups);
         the only source rows re-read are those of groups whose min/max
         a delete may have invalidated."""
-        v0 = self.refreshed_version()
-        if v0 is None:
+        state = self._state()
+        v0 = state.get("source_version")
+        if v0 is None or state.get("view_version") != self.view.current_version():
+            # never seeded, or the view committed a fold the state does
+            # not record: folding from v0 again would double-apply it
             return self.full_refresh(spark)
         v1 = self.source.current_version()
         if v1 == v0:

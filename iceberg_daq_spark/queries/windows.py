@@ -180,6 +180,7 @@ def q29(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from iceberg_daq_spark.streaming import pipeline
     from iceberg_daq_spark.streaming.emulator import write_frame_chunks
+    from iceberg_daq_spark.tablestore import MergeTable, append_stream_to_table
 
     # stable scratch dir, cleaned at the START of the next invocation:
     # the returned DataFrame stays a lazy parquet read (no driver-side
@@ -195,16 +196,13 @@ def q29(spark: SparkSession, sf_dir: str) -> DataFrame:
     for name, jitter in (("ord", None), ("late", 40)):
         frames_dir = f"{work}/frames_{name}"
         write_frame_chunks(spark, frames_dir, shuffle_within_ms=jitter, **kw)
-        pipeline.run_to_parquet(
+        table = MergeTable(f"{work}/{name}_out", key_cols=("src_id", "window_start"))
+        append_stream_to_table(
             pipeline.ta_stream(spark, frames_dir, watermark="100 milliseconds"),
-            f"{work}/{name}_out",
+            table,
             f"{work}/{name}_ckpt",
         )
-        results[name] = (
-            spark.read.option("basePath", f"{work}/{name}_out")
-            .parquet(f"{work}/{name}_out")
-            .drop("batch_id")
-        )
+        results[name] = table.read(spark)
     o, l = results["ord"].alias("o"), results["late"].alias("l")
     joined = o.join(l, ["src_id", "window_start"]).select(
         "src_id",

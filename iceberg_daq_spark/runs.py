@@ -12,8 +12,8 @@ Spark re-design of the reference's run-control path (SURVEY section
     N wait T stop_run scrap           awaitTermination, stop; each
     terminate (:154-176)              transition appended to the runs
                                       audit (A45)
-  log-dir harvest (:133-147)         the runs row carries sink paths +
-                                      row counts
+  log-dir harvest (:133-147)         the runs row carries the row
+                                      counts of the run's sink tables
 
 The reference's directory-probe allocation is race-prone by design
 (SURVEY 3.2 step 2); here allocation reads a single runs table whose
@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from iceberg_daq_spark.streaming import pipeline, plan
-from iceberg_daq_spark.tablestore import MergeTable
+from iceberg_daq_spark.tablestore import MergeTable, append_stream_to_table
 
 # run/run_iceberg_daq.sh:116 (main), :125 (hermes)
 RUN_FLOORS = {"main": 16091, "hermes": 21}
@@ -105,16 +105,24 @@ class DaqRun:
     def execute(self) -> dict:
         """boot -> conf -> start_run N -> (stream drained) -> stop_run.
 
-        Two sinks, mirroring the raw/trigprim split (A4/A5,
+        Three MergeTable sinks written by the append-once stream sink,
+        mirroring the raw/trigprim split (A4/A5,
         iceberg_daq_eth.json:62-82): trigger-record assembly (readout
-        interval join) to raw/, windowed TAs to trigprim/.  availableNow
-        triggers drain the emulated stream deterministically - the
-        batch-duration analog of `wait T`."""
+        interval join) to raw/, windowed TAs to trigprim/, trigger
+        decisions to trigdec/.  availableNow triggers drain the
+        emulated stream deterministically - the batch-duration analog
+        of `wait T`."""
         self._mark("boot")
         run = allocate_run(self.spark, os.path.join(self.out_dir, "runs"), self.mode)
-        raw_dir = os.path.join(self.out_dir, f"run_{run}", "raw")
-        tp_dir = os.path.join(self.out_dir, f"run_{run}", "trigprim")
-        ckpt = os.path.join(self.out_dir, f"run_{run}", "ckpt")
+        run_dir = os.path.join(self.out_dir, f"run_{run}")
+        raw = MergeTable(os.path.join(run_dir, "raw"), key_cols=())
+        tp = MergeTable(
+            os.path.join(run_dir, "trigprim"), key_cols=("src_id", "window_start")
+        )
+        td = MergeTable(
+            os.path.join(run_dir, "trigdec"), key_cols=("src_id", "td_start_tick")
+        )
+        ckpt = os.path.join(run_dir, "ckpt")
         self._mark("conf")
 
         from iceberg_daq_spark.streaming.monitor import OpmonMonitor
@@ -125,15 +133,13 @@ class DaqRun:
         # (the reference's CERN Kafka opmon stream analog)
         mon = OpmonMonitor(self.spark, os.path.join(self.out_dir, "opmon")).attach()
         try:
-            pipeline.run_to_parquet(
+            append_stream_to_table(
                 pipeline.readout_assembly_stream(self.spark, self.frames_dir),
-                raw_dir,
+                raw,
                 ckpt + "_raw",
             )
-            pipeline.run_to_parquet(
-                pipeline.ta_stream(self.spark, self.frames_dir),
-                tp_dir,
-                ckpt + "_tp",
+            append_stream_to_table(
+                pipeline.ta_stream(self.spark, self.frames_dir), tp, ckpt + "_tp"
             )
             # stop_run flushes the windows still open when the
             # watermark froze at drain (the mlt buffer-timeout flush,
@@ -141,44 +147,34 @@ class DaqRun:
             batch_tas = plan.ta_windows(
                 plan.decode_hits(self.spark.read.parquet(self.frames_dir))
             )
-            pipeline.flush_tail(tp_dir, batch_tas, ["src_id", "window_start"])
+            pipeline.flush_tail(tp, batch_tas, ["src_id", "window_start"])
             # A27: trigger decisions.  The TD merge consumes the
             # persisted TA table through a queue boundary (exactly how
             # the reference's MLT consumes the TC queue), then the same
             # stop_run tail flush emits the still-open decision per
             # stream so the TD table equals the batch interval merge.
-            td_dir = os.path.join(self.out_dir, f"run_{run}", "trigdec")
             gap = plan.TA_WINDOW_TICKS
-            tas_read = self.spark.read.option("basePath", tp_dir).parquet(
-                os.path.join(tp_dir, "batch_id=*")
-            ).drop("batch_id")
-            ta_stage = os.path.join(self.out_dir, f"run_{run}", "ta_stage")
+            tas_read = tp.read(self.spark)
+            ta_stage = os.path.join(run_dir, "ta_stage")
             tas_read.write.mode("overwrite").parquet(ta_stage)
             tas_stream = self.spark.readStream.schema(tas_read.schema).parquet(ta_stage)
-            pipeline.run_to_parquet(
+            append_stream_to_table(
                 pipeline.merge_decisions_stream(tas_stream, max_gap_ticks=gap),
-                td_dir,
+                td,
                 ckpt + "_td",
             )
             batch_tds = plan.merge_decisions(
                 self.spark.read.parquet(ta_stage).drop("window_end"),
                 max_gap_ticks=gap,
-                max_td_ticks=pipeline.MLT_MAX_TD_TICKS,
             )
-            pipeline.flush_tail(td_dir, batch_tds, ["src_id", "td_start_tick"])
+            pipeline.flush_tail(td, batch_tds, ["src_id", "td_start_tick"])
         finally:
             mon.flush()
             mon.detach()
         self._mark("stop_run")
         wall = time.time() - t0
 
-        def _count(d: str) -> int:
-            try:
-                return self.spark.read.option("recursiveFileLookup", "true").parquet(d).count()
-            except Exception:
-                return 0
-
-        raw_rows, tp_rows = _count(raw_dir), _count(tp_dir)
+        raw_rows, tp_rows = (t.read(self.spark).count() for t in (raw, tp))
         row = {
             "run": run,
             "subrun": run * 100000 + 1,  # createMetadatafiles...sh:132

@@ -162,10 +162,11 @@ def stamp_replay_order(out_dir: str) -> None:
 
 
 def read_frame_stream(spark: SparkSession, dir: str, max_files_per_trigger: int = 1) -> DataFrame:
-    """Replay the chunks as a stream with deterministic micro-batches."""
-    schema = spark.read.parquet(dir).schema
+    """Replay the chunks as a stream with deterministic micro-batches.
+    The schema is the one :func:`with_packed_payload` writes, so the
+    stream starts with no inference job."""
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(_pack_schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(dir)
     )

@@ -8,13 +8,12 @@ Reference mapping (SURVEY section 3.2):
   - TD merge buffer timeout 100 ms = mlt_buffer_timeout (:239), max TD
     length 1000 ms = mlt_max_td_length_ms (:241)
   - readout window -1000/+1001 ticks = mlt_td_readout_map (:255-256)
-  - dual raw/trigprim sinks (:62-82) -> two parquet table sinks via
-    idempotent foreachBatch writes
+  - dual raw/trigprim sinks (:62-82) -> two MergeTables written by
+    the append-once stream sink (tablestore.append_stream_to_table)
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 from typing import Any
 
@@ -26,11 +25,10 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from iceberg_daq_spark.streaming import plan
 from iceberg_daq_spark.streaming.emulator import read_frame_stream
-from iceberg_daq_spark.tablestore import start_sink
+from iceberg_daq_spark.tablestore import MergeTable
 
 WATERMARK = "50 milliseconds"  # tpset_min_latency analog (A43)
 MLT_BUFFER_TIMEOUT_MS = 100  # iceberg_daq_eth.json:239
-MLT_MAX_TD_TICKS = 62_500_000  # 1000 ms cap, :241
 READOUT_BEFORE_TICKS = 1000  # :255
 READOUT_AFTER_TICKS = 1001  # :256 (asymmetric)
 
@@ -58,30 +56,10 @@ def ta_stream(
     return plan.ta_windows(hits, window_ticks=window_ticks)
 
 
-_td_out_schema = T.StructType(
-    [
-        T.StructField("src_id", T.IntegerType()),
-        T.StructField("td_start_tick", T.LongType()),
-        T.StructField("td_end_tick", T.LongType()),
-        T.StructField("n_tps", T.LongType()),
-        T.StructField("n_tas", T.LongType()),
-    ]
-)
-
-_td_state_schema = T.StructType(
-    [
-        T.StructField("start_tick", T.LongType()),
-        T.StructField("end_tick", T.LongType()),
-        T.StructField("n_tps", T.LongType()),
-        T.StructField("n_tas", T.LongType()),
-    ]
-)
-
-
 def _merge_td_func(
     max_gap_ticks: int,
     flush_horizon_ticks: int,
-    max_td_ticks: int = MLT_MAX_TD_TICKS,
+    max_td_ticks: int = plan.MLT_MAX_TD_TICKS,
 ):
     """State machine per src_id: extend the open decision while TAs
     overlap (within gap), emit it when a gap appears or the max-TD-length
@@ -90,20 +68,22 @@ def _merge_td_func(
     more - the deterministic analog of the mlt buffer timeout).
 
     Cross-batch disorder: the batch's TAs and the OPEN island from
-    state fold together in ONE globally-sorted gaps-and-islands pass
-    (the open island participates at its sorted position, exactly
-    where the batch-twin fold would have its running island), so a
-    group of stragglers that only CONNECTS to the open island through
-    each other still merges - a row-by-row test against the island
-    would drop the early rows of the group before the connecting row
-    arrived (found in review).  Islands that complete entirely BEFORE
-    the fold reaches the open island belong to ALREADY-EMITTED
-    decisions: append mode cannot retract, so they are dropped rather
-    than emitted as overlapping fragments (flush_tail's batch
-    complement is the documented repair).  The max-TD cap is applied
-    inside the same fold, mirroring the batch twin's split points
-    (the cap makes merging non-associative, so folding the batch
-    separately first would diverge)."""
+    state fold together in ONE :func:`plan.fold_decisions` pass (the
+    open island participates at its sorted position, exactly where the
+    batch-twin fold would have its running island), so a group of
+    stragglers that only CONNECTS to the open island through each
+    other still merges - a row-by-row test against the island would
+    drop the early rows of the group before the connecting row arrived
+    (found in review).  The cap splits at the batch twin's points for
+    the same reason (it makes merging non-associative, so folding the
+    batch separately first would diverge).
+
+    Two rules are the stream's own.  Islands that complete entirely
+    BEFORE the open island belong to ALREADY-EMITTED decisions: append
+    mode cannot retract, so they are dropped rather than emitted as
+    overlapping fragments (flush_tail's batch complement is the
+    documented repair).  The last island is the new open decision and
+    stays in state."""
 
     def fn(
         key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -111,63 +91,29 @@ def _merge_td_func(
         (src_id,) = key
         if state.hasTimedOut:
             if state.exists:
-                s, e, n_tps, n_tas = state.get
+                open_td = state.get
                 state.remove()
-                yield pd.DataFrame(
-                    [{"src_id": src_id, "td_start_tick": s, "td_end_tick": e, "n_tps": n_tps, "n_tas": n_tas}]
-                )
+                yield plan.td_frame(src_id, [open_td])
             return
 
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        # items: (first, last, n_tps, n_tas, holds_state); the open
-        # island from state is one item folded at its sorted position
-        items = [
-            (r.first_tick, r.last_tick, r.n_tps, 1, False)
-            for r in rows.itertuples(index=False)
-        ]
-        had_state = state.exists
-        if had_state:
-            s, e, n_tps, n_tas = state.get
-            items.append((s, e, n_tps, n_tas, True))
-        items.sort(key=lambda t: (t[0], t[1]))
-        out = []
-        cur = None  # [first, last, n_tps, n_tas, holds_state]
-        seen_state = not had_state  # no state -> nothing to drop
-        for first, last, tps, tas, is_state in items:
-            if cur is None:
-                cur = [first, last, tps, tas, is_state]
-            elif (
-                first <= cur[1] + max_gap_ticks
-                and max(cur[1], last) - min(cur[0], first) <= max_td_ticks
-            ):
-                cur[0] = min(cur[0], first)
-                cur[1] = max(cur[1], last)
-                cur[2] += tps
-                cur[3] += tas
-                cur[4] = cur[4] or is_state
-            else:
-                if cur[4] or seen_state:
-                    # the open island just closed, or a later island
-                    # did: emit.  (Pre-state islands fall through to
-                    # the drop below.)
-                    seen_state = True
-                    out.append(
-                        {"src_id": src_id, "td_start_tick": cur[0], "td_end_tick": cur[1], "n_tps": cur[2], "n_tas": cur[3]}
-                    )
-                # else: island completed before the open island -
-                # straggler fragment of an emitted decision: drop
-                cur = [first, last, tps, tas, is_state]
-        if cur is not None:
-            # the final island is always the new open decision: the
-            # state item is consumed by the fold, so it either sits in
-            # cur (cur[4]) or closed earlier and was emitted
-            state.update(tuple(cur[:4]))
-            # flush once the watermark proves no TA can extend this
-            # decision; ticks are epoch-based (T0_TICKS), /62500 -> ms
-            timeout_ms = (cur[1] + flush_horizon_ticks) // 62_500 + 1
-            state.setTimeoutTimestamp(max(timeout_ms, state.getCurrentWatermarkMs() + 1))
-        if out:
-            yield pd.DataFrame(out)
+        open_td = state.get if state.exists else None
+        islands = plan.fold_decisions(
+            pd.concat(list(pdfs), ignore_index=True),
+            max_gap_ticks,
+            max_td_ticks,
+            open_td,
+        )
+        if open_td is not None:
+            # drop the straggler islands that close before the open one
+            islands = islands[next(i for i, isl in enumerate(islands) if isl[4]):]
+        *closed, open_td = islands
+        state.update(tuple(open_td[:4]))
+        # flush once the watermark proves no TA can extend this
+        # decision; ticks are epoch-based (T0_TICKS), /62500 -> ms
+        timeout_ms = (open_td[1] + flush_horizon_ticks) // 62_500 + 1
+        state.setTimeoutTimestamp(max(timeout_ms, state.getCurrentWatermarkMs() + 1))
+        if closed:
+            yield plan.td_frame(src_id, closed)
 
     return fn
 
@@ -178,7 +124,7 @@ def merge_decisions_stream(
     window_ticks: int = plan.TA_WINDOW_TICKS,
     watermark: str = WATERMARK,
     time_col: str = "window_end",
-    max_td_ticks: int = MLT_MAX_TD_TICKS,
+    max_td_ticks: int = plan.MLT_MAX_TD_TICKS,
 ) -> DataFrame:
     """Streaming trigger-decision merge: applyInPandasWithState keyed
     by src_id with an EVENT-time timeout.
@@ -201,8 +147,9 @@ def merge_decisions_stream(
             _merge_td_func(
                 max_gap_ticks, max_gap_ticks + window_ticks, max_td_ticks
             ),
-            outputStructType=_td_out_schema,
-            stateStructType=_td_state_schema,
+            outputStructType=plan.TD_SCHEMA,
+            # the open decision: TD_SCHEMA without its src_id key
+            stateStructType=T.StructType(plan.TD_SCHEMA.fields[1:]),
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
@@ -267,30 +214,8 @@ def dedup_stream(frames: DataFrame, watermark: str = WATERMARK) -> DataFrame:
     )
 
 
-def run_to_parquet(
-    stream_df: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Run a streaming query into a parquet table sink (A4/A5 analog:
-    the raw/trigprim table writers) and await termination.
-
-    foreachBatch + per-batch idempotent write: the checkpoint records
-    committed batch ids, so a replayed batch overwrites its own output
-    (exactly-once table contents, the Iceberg-commit analog available
-    in this container)."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-
-    return start_sink(stream_df, checkpoint_dir, write_batch, available_now)
-
-
 def flush_tail(
-    out_dir: str,
+    table: MergeTable,
     batch_twin: DataFrame,
     key_cols: list[str],
     strict: bool = False,
@@ -303,45 +228,33 @@ def flush_tail(
     window(s)/decision per key never emit (ADVICE round 1).  Because
     every streaming transform here is batch-equivalent by construction
     (plan.py is shared), the missing rows are exactly the batch twin's
-    rows whose keys the stream never wrote.  This computes that
-    left-anti complement and lands it as the ``batch_id=-1`` partition
-    of the same sink, so run outputs equal the batch plan end to end
-    PROVIDED the replay was in-watermark lossless: a key the stream
-    wrote with watermark-dropped late data keeps its streamed value
-    (the complement is key-granular; it repairs MISSING keys, not
-    diverged ones).  ``strict=True`` additionally full-row-compares
-    EVERY streamed row against the batch twin (multiset semantics) and
-    raises if any streamed row is absent from it - value divergence,
-    phantom/shifted keys the twin never produced, and double emission
-    all fail - the assertion to run when the replay is supposed to be
-    lossless.
+    rows whose keys the stream never wrote.  This appends that
+    left-anti complement to the sink ``table`` as one commit, so run
+    outputs equal the batch plan end to end PROVIDED the replay was
+    in-watermark lossless: a key the stream wrote with
+    watermark-dropped late data keeps its streamed value (the
+    complement is key-granular; it repairs MISSING keys, not diverged
+    ones).  A re-flush finds an empty complement and commits nothing.
+    ``strict=True`` additionally full-row-compares EVERY table row
+    against the batch twin (multiset semantics) and raises if any is
+    absent from it - value divergence, phantom/shifted keys the twin
+    never produced, and double emission all fail - the assertion to
+    run when the replay is supposed to be lossless.
 
-    Returns the number of tail rows flushed.  One bounded batch job per
-    run stop - the "final batch merge over the unflushed tail" shape,
-    deterministic at any scale (no sentinel rows in the data path).
-    """
-    import glob as _glob
-
-    spark = batch_twin.sparkSession
-    # exclude a previous tail flush from the "streamed" set so a
-    # re-flush recomputes the identical complement (idempotent) instead
-    # of erasing it
-    parts = sorted(
-        p
-        for p in _glob.glob(os.path.join(out_dir, "batch_id=*"))
-        if not p.endswith("batch_id=-1")
-    )
-    if parts:
-        streamed_full = spark.read.option("basePath", out_dir).parquet(*parts)
-        streamed = streamed_full.select(*key_cols)
-        tail = batch_twin.join(streamed, key_cols, "left_anti")
+    Returns the number of tail rows appended.  One bounded batch job
+    per run stop - the "final batch merge over the unflushed tail"
+    shape, deterministic at any scale (no sentinel rows in the data
+    path)."""
+    streamed = table.read(batch_twin.sparkSession)
+    tail = batch_twin
+    if streamed is not None:
+        tail = batch_twin.join(streamed.select(*key_cols), key_cols, "left_anti")
         if strict:
-            # every streamed row must appear in the twin (multiset):
-            # a key-intersected compare would let phantom keys the
-            # twin never produced pass the "lossless" assertion
-            cols = [c for c in batch_twin.columns]
+            # every table row must appear in the twin (multiset): a
+            # key-intersected compare would let phantom keys the twin
+            # never produced pass the "lossless" assertion
             diverged = (
-                streamed_full.select(*cols).exceptAll(batch_twin).count()
+                streamed.select(*batch_twin.columns).exceptAll(batch_twin).count()
             )
             if diverged:
                 raise ValueError(
@@ -349,7 +262,8 @@ def flush_tail(
                     "diverge from the batch twin - the replay was not "
                     "in-watermark lossless"
                 )
-    else:
-        tail = batch_twin
-    tail.write.mode("overwrite").parquet(os.path.join(out_dir, "batch_id=-1"))
-    return spark.read.parquet(os.path.join(out_dir, "batch_id=-1")).count()
+    tail = tail.localCheckpoint()  # one computation, counted and appended
+    n = tail.count()
+    if n:
+        table.append(tail)
+    return n

@@ -22,6 +22,7 @@ TA_ADC_THRESHOLD = 10000  # :268 adc_threshold
 TA_N_CHANNELS = 8  # :277 number_of_channels
 TA_WINDOW_TICKS = 625_000  # 10 ms windows (window_length analog, :283)
 PRESCALE = 100  # :278
+MLT_MAX_TD_TICKS = 62_500_000  # 1000 ms max TD length, :241
 
 _decode_schema = T.StructType(
     [
@@ -251,113 +252,96 @@ def prescale_hash(df: DataFrame, n: int = PRESCALE, key_cols: tuple[str, ...] = 
     return df.filter(F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n)) == 0)
 
 
-def merge_decisions(
-    tas: DataFrame, max_gap_ticks: int, max_td_ticks: int | None = None
-) -> DataFrame:
-    """Trigger-decision interval merge (A27, mlt_* keys
-    iceberg_daq_eth.json:239-258): overlapping/adjacent TA windows
-    coalesce into one trigger decision per src_id.
-
-    Batch form: gaps-and-islands via window functions (exactly q20's
-    plan).  The streaming form lives in pipeline.merge_decisions_stream
-    (applyInPandasWithState with the mlt buffer-timeout semantics).
-
-    ``max_td_ticks`` is the mlt_max_td_length cap (:241): a decision
-    that would exceed it is closed and a new one opened - the same rule
-    the streaming state machine applies, so streamed + tail == batch
-    even on unbroken activity.  The cap couples each decision's extent
-    to its own running start (non-associative), so the capped form is a
-    per-src_id sequential fold via applyInPandas; post-TA decision
-    rates are Hz per stream, so each group is tiny at any scale.  The
-    default (None) keeps the pure window-function plan.
-    """
-    from pyspark.sql import Window
-
-    if max_td_ticks is not None:
-        return _merge_decisions_capped(tas, max_gap_ticks, max_td_ticks)
-
-    w_prev = (
-        Window.partitionBy("src_id")
-        .orderBy("first_tick", "last_tick")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_run = (
-        Window.partitionBy("src_id")
-        .orderBy("first_tick", "last_tick")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    flagged = tas.withColumn(
-        "new_island",
-        F.when(
-            F.col("first_tick") > F.max("last_tick").over(w_prev) + max_gap_ticks, 1
-        ).otherwise(0),
-    )
-    islands = flagged.withColumn("island", F.sum("new_island").over(w_run))
-    return (
-        islands.groupBy("src_id", "island")
-        .agg(
-            F.min("first_tick").alias("td_start_tick"),
-            F.max("last_tick").alias("td_end_tick"),
-            F.sum("n_tps").alias("n_tps"),
-            F.count("*").alias("n_tas"),
-        )
-        .drop("island")
-    )
+TD_SCHEMA = T.StructType(
+    [
+        T.StructField("src_id", T.IntegerType()),
+        T.StructField("td_start_tick", T.LongType()),
+        T.StructField("td_end_tick", T.LongType()),
+        T.StructField("n_tps", T.LongType()),
+        T.StructField("n_tas", T.LongType()),
+    ]
+)
 
 
-def _merge_decisions_capped(
-    tas: DataFrame, max_gap_ticks: int, max_td_ticks: int
-) -> DataFrame:
-    """merge_decisions with the mlt_max_td_length cap: sequential fold
-    per src_id (the cap rule references the open decision's start, so
-    it cannot be a window function).  Mirrors pipeline._merge_td_func's
-    extend condition exactly."""
-    import pandas as pd
-    from pyspark.sql import types as T
+def fold_decisions(
+    tas: pd.DataFrame,
+    max_gap_ticks: int,
+    max_td_ticks: int = MLT_MAX_TD_TICKS,
+    open_td: tuple | None = None,
+) -> list[list]:
+    """The trigger-decision extend rule (A27), the one fold the batch
+    merge and the streaming state machine share.
 
-    schema = T.StructType(
+    In ``(first_tick, last_tick)`` order, a TA extends the open
+    decision while it starts within ``max_gap_ticks`` of the
+    decision's end and would not stretch it past ``max_td_ticks`` from
+    its start (the mlt_max_td_length cap - it ties each decision to its
+    own running start, which makes the merge non-associative, so it
+    cannot be a window function).  ``open_td`` - ``(start, end, n_tps,
+    n_tas)``, the decision a stream carries in state - folds in at its
+    sorted position like one more TA.  Returns the decisions in order
+    as ``[start, end, n_tps, n_tas, holds_open_td]``."""
+    items = [
+        (r.first_tick, r.last_tick, r.n_tps, 1, False)
+        for r in tas.itertuples(index=False)
+    ]
+    if open_td is not None:
+        items.append((*open_td, True))
+    out: list[list] = []
+    cur = None
+    for first, last, tps, n, is_open in sorted(items, key=lambda t: (t[0], t[1])):
+        if (
+            cur is not None
+            and first <= cur[1] + max_gap_ticks
+            and last - cur[0] <= max_td_ticks
+        ):
+            cur[1] = max(cur[1], last)
+            cur[2] += tps
+            cur[3] += n
+            cur[4] = cur[4] or is_open
+        else:
+            cur = [first, last, tps, n, is_open]
+            out.append(cur)
+    return out
+
+
+def td_frame(src_id: int, decisions) -> pd.DataFrame:
+    """One stream's decisions ``(first, last, n_tps, n_tas, ...)`` as
+    :data:`TD_SCHEMA` rows."""
+    return pd.DataFrame(
         [
-            T.StructField("src_id", T.IntegerType()),
-            T.StructField("td_start_tick", T.LongType()),
-            T.StructField("td_end_tick", T.LongType()),
-            T.StructField("n_tps", T.LongType()),
-            T.StructField("n_tas", T.LongType()),
+            {
+                "src_id": src_id,
+                "td_start_tick": d[0],
+                "td_end_tick": d[1],
+                "n_tps": d[2],
+                "n_tas": d[3],
+            }
+            for d in decisions
         ]
     )
 
+
+def merge_decisions(
+    tas: DataFrame, max_gap_ticks: int, max_td_ticks: int = MLT_MAX_TD_TICKS
+) -> DataFrame:
+    """Trigger-decision interval merge (A27, mlt_* keys
+    iceberg_daq_eth.json:239-258): overlapping/adjacent TA windows
+    coalesce into one trigger decision per src_id, capped at
+    ``max_td_ticks`` - the same :func:`fold_decisions` the streaming
+    state machine (pipeline.merge_decisions_stream) applies, so
+    streamed + tail == batch even on unbroken activity.  A sequential
+    fold per src_id via applyInPandas; post-TA decision rates are Hz
+    per stream, so each group is tiny at any scale."""
+
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["first_tick", "last_tick"])
-        src_id = int(pdf["src_id"].iloc[0])
-        out, cur = [], None
-        for r in pdf.itertuples(index=False):
-            if cur is not None and (
-                r.first_tick <= cur[1] + max_gap_ticks
-                and r.last_tick - cur[0] <= max_td_ticks
-            ):
-                cur[1] = max(cur[1], r.last_tick)
-                cur[2] += r.n_tps
-                cur[3] += 1
-            else:
-                if cur is not None:
-                    out.append(cur)
-                cur = [r.first_tick, r.last_tick, r.n_tps, 1]
-        if cur is not None:
-            out.append(cur)
-        return pd.DataFrame(
-            [
-                {
-                    "src_id": src_id,
-                    "td_start_tick": s,
-                    "td_end_tick": e,
-                    "n_tps": n,
-                    "n_tas": c,
-                }
-                for s, e, n, c in out
-            ]
+        return td_frame(
+            int(pdf["src_id"].iloc[0]),
+            fold_decisions(pdf, max_gap_ticks, max_td_ticks),
         )
 
     return (
         tas.select("src_id", "first_tick", "last_tick", "n_tps")
         .groupBy("src_id")
-        .applyInPandas(fold, schema)
+        .applyInPandas(fold, TD_SCHEMA)
     )

@@ -65,6 +65,10 @@ cluster:
                                      snapshots are GC-pinned past any
                                      retention window (the dataset-
                                      release workflow)
+  streaming append (the query      :func:`append_stream_to_table` -
+    id and epoch in each             each micro-batch a fast append
+    snapshot summary; a replayed     whose manifest records the
+    epoch is skipped)                query's last batch id
   snapshot expiry +                prune manifests beyond the
     remove_orphan_files              retention window on commit, then
                                      delete data dirs no retained
@@ -2124,7 +2128,9 @@ class MergeTable:
             check=lambda m, head: True,
         )
 
-    def append(self, updates: DataFrame) -> int:
+    def append(
+        self, updates: DataFrame, _epoch: tuple[str, int] | None = None
+    ) -> int:
         """Iceberg fast-append: commit ONLY the new rows as an
         additional data dir - no read of the current snapshot, no
         rewrite of existing data, O(new rows) regardless of table
@@ -2143,10 +2149,23 @@ class MergeTable:
         concurrently and serialize only on metadata.  Its check is
         that the head's physical schema is the one the staged files
         were written for: a concurrent schema change raises
-        :class:`CommitConflict`."""
+        :class:`CommitConflict`.
+
+        ``_epoch`` (internal, :func:`append_stream_to_table`'s):
+        ``(query_id, batch_id)``, recorded in the manifest's
+        ``stream_epochs`` as that query's last committed batch - the
+        query id and epoch Iceberg's streaming append keeps in each
+        snapshot summary.  An epoch the pinned or the head snapshot
+        already records commits nothing; the property carries through
+        every later commit like any other."""
 
         def physical(man: dict) -> list[tuple]:
             return [(f["name"], f["physical"], f["type"]) for f in man["schema"]]
+
+        def committed(man: dict | None) -> bool:
+            return bool(_epoch and man) and (
+                man.get("stream_epochs", {}).get(_epoch[0], -1) >= _epoch[1]
+            )
 
         def stage(base: int | None, m: dict | None):
             if m is None:
@@ -2181,7 +2200,25 @@ class MergeTable:
                 },
             }
 
+        def stage_epoch(base: int | None, m: dict | None):
+            if committed(m):
+                # a replayed epoch: the snapshot stands.  The batch
+                # still runs - a stateful stream commits its state
+                # stores only once every partition is processed
+                updates.write.format("noop").mode("overwrite").save()
+                return None
+            staged, fields = stage(base, m)
+            return staged, lambda data_dir, head: {
+                **fields(data_dir, head),
+                "stream_epochs": {
+                    **(head or {}).get("stream_epochs", {}),
+                    _epoch[0]: _epoch[1],
+                },
+            }
+
         def check(m: dict | None, head: dict | None) -> bool:
+            if committed(head):
+                return False  # rebase: the new pin sees the epoch
             if m is None:
                 return head is None  # lost the first-commit race: rebase
             if head is None or physical(head) != physical(m):
@@ -2191,7 +2228,7 @@ class MergeTable:
                 )
             return True
 
-        return self._commit_data("append", stage, check)
+        return self._commit_data("append", stage_epoch if _epoch else stage, check)
 
     def merge(
         self,
@@ -2716,6 +2753,37 @@ def start_sink(
     q = writer.trigger(availableNow=True).start()
     q.awaitTermination()
     return q
+
+
+def append_stream_to_table(
+    stream_df: DataFrame,
+    table: MergeTable,
+    checkpoint_dir: str,
+    available_now: bool = True,
+):
+    """Structured Streaming sink with append semantics: every
+    micro-batch is one :meth:`MergeTable.append` fast-append commit -
+    for append-mode streams, whose rows are emitted once (a closed
+    window, a joined pair), so no MERGE is needed.
+
+    Exactly-once table contents from a replayable source plus a sink
+    idempotent per epoch (Structured Streaming's contract): each
+    commit records ``{query id: batch id}`` in the manifest, the query
+    id being the one Spark keeps in ``<checkpoint>/metadata`` (it is
+    ``StreamingQuery.id``, stable across restarts).  A batch Spark
+    re-delivers after a crash between the table commit and the
+    checkpoint commit finds its id recorded and commits nothing - on
+    a cluster, Iceberg's streaming append skipping an epoch its
+    snapshot summaries already hold.  Rows are never deduplicated, so
+    a double emission stays visible (``flush_tail(strict=True)``
+    catches it)."""
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        with open(os.path.join(checkpoint_dir, "metadata"), encoding="utf-8") as f:
+            query_id = json.load(f)["id"]
+        table.append(batch_df, _epoch=(query_id, batch_id))
+
+    return start_sink(stream_df, checkpoint_dir, write_batch, available_now)
 
 
 def run_stream_to_table(

@@ -564,7 +564,7 @@ CONTROLLED_TRIGGER = 2.4
 CONTROLLED_PASSES = 5
 
 
-def stress_cell(pairs: list[list[dict]], estimator: str) -> dict:
+def stress_cell(pairs: list[list[dict]], estimator: str, cpus: int) -> dict:
     """One query's cell from its [base, stress] ``run_query`` pairs,
     each pair timed back-to-back in one time window.  The ratio is the
     MIN over pairs of that pair's stress/base quotient: a steal burst
@@ -573,7 +573,9 @@ def stress_cell(pairs: list[list[dict]], estimator: str) -> dict:
     them (the shorter base cells land fully inside quiet gaps more
     often, biasing every ratio upward).  The exact per-pair
     [base_sec, stress_sec] are kept so a consumer can re-derive the
-    ratio; rows_* are the peak plan-node rows at each scale."""
+    ratio; rows_* are the peak plan-node rows at each scale.  ``cpus``
+    (the timing session's defaultParallelism) names the host: a
+    STRESS_ONLY re-measure merges its cells beside earlier ones."""
     secs = [[round(wall(b), 3), round(wall(s), 3)] for b, s in pairs]
     ratios = [s / max(b, 1e-9) for b, s in secs]
     rows_base = max(b["peak_rows"] for b, _ in pairs)
@@ -588,6 +590,7 @@ def stress_cell(pairs: list[list[dict]], estimator: str) -> dict:
         "rows_base": rows_base,
         "rows_stress": rows_stress,
         "rows_growth": round(rows_stress / max(rows_base, 1), 2),
+        "cpus": cpus,
     }
 
 
@@ -672,6 +675,7 @@ def main() -> None:
             groups.append([names[i]])
             i += 1
     counters = SparkCounters(spark)
+    cpus = spark.sparkContext.defaultParallelism
     base_passes: list[dict] = []
     stress_passes: list[dict] = []
     for p in range(passes):
@@ -687,6 +691,7 @@ def main() -> None:
         n: stress_cell(
             [[bp[n], sp[n]] for bp, sp in zip(base_passes, stress_passes)],
             f"screen-{passes}x-paired",
+            cpus,
         )
         for n in sorted(base_passes[0])
     }
@@ -712,7 +717,9 @@ def main() -> None:
             for _ in range(CONTROLLED_PASSES)
         ]
         queries[n] = {
-            **stress_cell(cpairs, f"controlled-{CONTROLLED_PASSES}x-paired-warm"),
+            **stress_cell(
+                cpairs, f"controlled-{CONTROLLED_PASSES}x-paired-warm", cpus
+            ),
             "screen_ratio": queries[n]["ratio"],
         }
         print(
@@ -803,8 +810,10 @@ def main() -> None:
             "algorithm). Every cell records rows_base/rows_stress/"
             "rows_growth: the most rows any plan node output in the "
             "cell's timed runs at each scale, read from Spark's SQL "
-            "metrics. OUTPUT-BOUND CELLS (output_bound_note present) "
-            "additionally record ratio_per_output = ratio / "
+            "metrics, and cpus, the defaultParallelism of the session "
+            "that timed it (a STRESS_ONLY re-measure merges its cells "
+            "beside earlier ones). OUTPUT-BOUND CELLS "
+            "(output_bound_note present) additionally record ratio_per_output = ratio / "
             "rows_growth; on this clone-family corpus their true "
             "output grows superlinearly, so the wall ratio must be "
             "read against rows_growth, and a cell with ratio <= "

@@ -160,6 +160,16 @@ def test_stress_gate_scope():
     assert stress.superlinear({"q41_dedup_ngram_jaccard": dict(over, ratio=4.0)}) == []
 
 
+def test_stress_cell_records_cpus():
+    """Every stress cell names the core count it was timed on, so cells
+    a STRESS_ONLY re-measure merges beside earlier ones stay apart."""
+    stress = _load_script("stress_bench")
+    run = {"build_s": 0.1, "exec_s": 0.9, "peak_rows": 10}
+    cell = stress.stress_cell([[run, dict(run, exec_s=1.9, peak_rows=100)]], "screen", 4)
+    assert cell["cpus"] == 4
+    assert cell["ratio"] == 2.0 and cell["rows_growth"] == 10.0
+
+
 def test_bench_emit_line_keeps_per_query_timings():
     """A full suite with a long regression list (r14: 262 queries, 59
     regressions) still emits per-query timings inside the tail window:

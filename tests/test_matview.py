@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from iceberg_daq_spark.matview import MaterializedAggView
@@ -184,3 +185,40 @@ def test_matview_tracks_cdc_stream(spark, tmp_path):
     assert got["g0"][4] == 500        # new max folded in
     assert got["g2"] == ("g2", 1, -3, -3, -3)
     assert got["g1"][1] == 3          # one row gone from g1
+
+
+def test_matview_refresh_survives_crash_before_state_write(spark, tmp_path, monkeypatch):
+    """A crash after a refresh's view commits but before the state
+    write: the state still names the old source version, so folding
+    from it again would add the same changelog twice.  The state
+    records the view head its fold produced; the next refresh sees a
+    different head and recomputes."""
+    src = MergeTable(str(tmp_path / "src"), key_cols=("k",), keep_versions=20)
+    src.merge(_mkrows(spark, [(i, f"g{i % 3}", i * 10) for i in range(12)]))
+    mv = MaterializedAggView(
+        source=src,
+        path=str(tmp_path / "mv"),
+        group_cols=("g",),
+        measures=(
+            ("count", "", "n"),
+            ("sum", "v", "total"),
+            ("min", "v", "vmin"),
+            ("max", "v", "vmax"),
+        ),
+    )
+    mv.full_refresh(spark)
+    src.append(_mkrows(spark, [(100 + i, f"g{i % 2}", i) for i in range(6)]))
+
+    def crash(v):
+        raise RuntimeError("crash before the state write")
+
+    monkeypatch.setattr(mv, "_save_state", crash)
+    view_head = mv.view.current_version()
+    with pytest.raises(RuntimeError, match="crash"):
+        mv.refresh(spark)
+    assert mv.view.current_version() != view_head  # the fold committed
+    monkeypatch.undo()
+
+    mv.refresh(spark)
+    assert _got(spark, mv) == _expected(spark, src)
+    assert mv.refreshed_version() == src.current_version()

@@ -5,7 +5,6 @@ readout join."""
 
 from __future__ import annotations
 
-import glob
 import os
 
 import pytest
@@ -19,6 +18,7 @@ from iceberg_daq_spark.streaming.emulator import (
     with_packed_payload,
     write_frame_chunks,
 )
+from iceberg_daq_spark.tablestore import MergeTable, append_stream_to_table
 
 N_FRAMES = 1500
 SRC_IDS = [0, 1, 2, 3]
@@ -55,13 +55,11 @@ def late_frames_dir(spark, tmp_path_factory):
 
 
 def _run_stream(df, tmp_path, name):
-    out = str(tmp_path / f"{name}_out")
-    ckpt = str(tmp_path / f"{name}_ckpt")
-    pipeline.run_to_parquet(df, out, ckpt)
-    files = glob.glob(os.path.join(out, "batch_id=*", "*.parquet"))
-    if not files:
-        return None
-    return df.sparkSession.read.option("basePath", out).parquet(*sorted(glob.glob(os.path.join(out, "batch_id=*")))).drop("batch_id")
+    """Drain ``df`` into a fresh append sink; its rows (None when no
+    micro-batch committed)."""
+    table = MergeTable(str(tmp_path / f"{name}_out"), key_cols=())
+    append_stream_to_table(df, table, str(tmp_path / f"{name}_ckpt"))
+    return table.read(df.sparkSession)
 
 
 def _rows(df, cols):
@@ -187,8 +185,8 @@ def test_streaming_session_windows_equal_batch(spark, tmp_path):
 def test_rerun_with_checkpoint_is_idempotent(spark, frames_dir, tmp_path):
     """SURVEY 5.2 item 4: re-running the sink job against the same
     checkpoint must not duplicate rows - the checkpoint's committed
-    batch ids make the foreachBatch overwrite a no-op on replay (the
-    MERGE-idempotency analog without an Iceberg catalog)."""
+    batch ids leave nothing to re-deliver (a re-delivered batch is
+    test_append_sink_skips_a_redelivered_batch)."""
     cols = ["src_id", "window_start", "n_tps"]
     first = _run_stream(pipeline.ta_stream(spark, frames_dir), tmp_path, "idem")
     rows1 = _rows(first, cols)
@@ -222,27 +220,57 @@ def test_run_output_equals_batch_after_tail_flush(spark, frames_dir, tmp_path):
     """A27's buffer-timeout flush at stop_run: streamed TA windows plus
     the flush_tail complement must equal the batch plan EXACTLY - no
     trailing-window allowance, no sentinel rows."""
-    out = str(tmp_path / "ta_out")
-    pipeline.run_to_parquet(
-        pipeline.ta_stream(spark, frames_dir), out, str(tmp_path / "ckpt")
+    table = MergeTable(str(tmp_path / "ta_out"), key_cols=("src_id", "window_start"))
+    append_stream_to_table(
+        pipeline.ta_stream(spark, frames_dir), table, str(tmp_path / "ckpt")
     )
     batch_tas = plan.ta_windows(plan.decode_hits(spark.read.parquet(frames_dir)))
-    n_tail = pipeline.flush_tail(out, batch_tas, ["src_id", "window_start"])
+    assert pipeline.flush_tail(table, batch_tas, ["src_id", "window_start"]) > 0
     cols = ["src_id", "window_start", "n_tps", "n_channels", "sum_adc"]
-    merged = (
-        spark.read.option("basePath", out)
-        .parquet(*sorted(glob.glob(os.path.join(out, "batch_id=*"))))
-        .drop("batch_id")
-    )
-    assert _rows(merged, cols) == _rows(batch_tas, cols)
-    # the flush is idempotent: rerunning it rewrites the same rows
-    assert pipeline.flush_tail(out, batch_tas, ["src_id", "window_start"]) == n_tail
-    merged2 = (
-        spark.read.option("basePath", out)
-        .parquet(*sorted(glob.glob(os.path.join(out, "batch_id=*"))))
-        .drop("batch_id")
-    )
-    assert _rows(merged2, cols) == _rows(batch_tas, cols)
+    merged = _rows(table.read(spark), cols)
+    assert merged == _rows(batch_tas, cols)
+    # a re-flush finds an empty complement: nothing added, no commit
+    v = table.current_version()
+    assert pipeline.flush_tail(table, batch_tas, ["src_id", "window_start"]) == 0
+    assert table.current_version() == v
+    assert _rows(table.read(spark), cols) == merged
+
+
+def test_append_sink_skips_a_redelivered_batch(spark, frames_dir, tmp_path):
+    """Exactly-once by epoch: Spark re-delivers the last micro-batch
+    when its checkpoint commit is lost after the table commit; the
+    sink finds that batch id recorded for the query and commits
+    nothing, so the table keeps its version and rows."""
+    table = MergeTable(str(tmp_path / "tas"), key_cols=("src_id", "window_start"))
+    ckpt = str(tmp_path / "ckpt")
+    q = append_stream_to_table(pipeline.ta_stream(spark, frames_dir), table, ckpt)
+    cols = ["src_id", "window_start", "n_tps", "n_channels", "sum_adc"]
+    v, rows = table.current_version(), _rows(table.read(spark), cols)
+    last = max(p["batchId"] for p in q.recentProgress)
+    epochs = table._load_manifest(v)["stream_epochs"]
+    assert epochs == {str(q.id): last}
+    for name in (str(last), f".{last}.crc"):
+        os.remove(os.path.join(ckpt, "commits", name))
+
+    again = append_stream_to_table(pipeline.ta_stream(spark, frames_dir), table, ckpt)
+    assert str(again.id) == str(q.id)
+    # the batch did run again, and Spark recommitted it
+    replayed = [p for p in again.recentProgress if p["batchId"] == last]
+    assert replayed and os.path.exists(os.path.join(ckpt, "commits", str(last)))
+    assert table.current_version() == v
+    assert _rows(table.read(spark), cols) == rows
+
+
+def test_append_sink_keeps_duplicate_rows(spark, tmp_path):
+    """The sink never deduplicates: a micro-batch holding two
+    identical rows lands both, so a double emission stays visible."""
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(1, "a"), (1, "a")], "k int, v string").coalesce(
+        1
+    ).write.parquet(src)
+    stream = spark.readStream.schema("k int, v string").parquet(src)
+    got = _run_stream(stream, tmp_path, "dups")
+    assert sorted(tuple(r) for r in got.collect()) == [(1, "a"), (1, "a")]
 
 
 def test_opmon_listener_records_batches(spark, frames_dir, tmp_path):
@@ -363,15 +391,13 @@ def test_daq_run_lifecycle(spark, frames_dir, tmp_path):
     assert r1["raw_rows"] > 0 and r1["tp_rows"] > 0
     # the trigger-decision sink equals the batch interval merge exactly
     # (streamed decisions + stop_run tail flush)
-    td_dir = os.path.join(out, f"run_{r1['run']}", "trigdec")
-    ta_stage = os.path.join(out, f"run_{r1['run']}", "ta_stage")
-    tds = spark.read.option("basePath", td_dir).parquet(
-        os.path.join(td_dir, "batch_id=*")
-    ).drop("batch_id")
+    run_dir = os.path.join(out, f"run_{r1['run']}")
+    for sink, n in (("raw", r1["raw_rows"]), ("trigprim", r1["tp_rows"])):
+        assert MergeTable(os.path.join(run_dir, sink), key_cols=()).read(spark).count() == n
+    tds = MergeTable(os.path.join(run_dir, "trigdec"), key_cols=()).read(spark)
     batch_tds = plan.merge_decisions(
-        spark.read.parquet(ta_stage).drop("window_end"),
+        spark.read.parquet(os.path.join(run_dir, "ta_stage")).drop("window_end"),
         max_gap_ticks=plan.TA_WINDOW_TICKS,
-        max_td_ticks=pipeline.MLT_MAX_TD_TICKS,
     )
     cols = ["src_id", "td_start_tick", "td_end_tick", "n_tps", "n_tas"]
     assert _rows(tds, cols) == _rows(batch_tds, cols)
@@ -781,7 +807,7 @@ def test_merge_td_property_streamed_equals_batch_fold():
         for f, l, t in sorted(rows, key=lambda r: (r[0], r[1])):
             if cur is None:
                 cur = [f, l, t, 1]
-            elif f <= cur[1] + gap and max(cur[1], l) - min(cur[0], f) <= cap:
+            elif f <= cur[1] + gap and l - cur[0] <= cap:
                 cur[0] = min(cur[0], f)
                 cur[1] = max(cur[1], l)
                 cur[2] += t
@@ -858,13 +884,10 @@ def test_flush_tail_strict_detects_divergence(spark, tmp_path):
     """Regression: flush_tail's key-granular complement silently kept
     streamed rows that diverged from the batch twin; strict=True must
     surface them (and default stays repair-only)."""
-    import os
-
     from iceberg_daq_spark.streaming.pipeline import flush_tail
 
-    out = str(tmp_path / "sink")
-    streamed = spark.createDataFrame([(1, 10), (2, 99)], "k int, v int")
-    streamed.write.parquet(os.path.join(out, "batch_id=0"))
+    out = MergeTable(str(tmp_path / "sink"), key_cols=("k",))
+    out.append(spark.createDataFrame([(1, 10), (2, 99)], "k int, v int"))
     batch_twin = spark.createDataFrame(
         [(1, 10), (2, 20), (3, 30)], "k int, v int"
     )
@@ -879,14 +902,11 @@ def test_flush_tail_strict_detects_phantom_keys(spark, tmp_path):
     """Regression (review): a streamed key ABSENT from the batch twin
     (e.g. a shifted island the twin never produced) passed the old
     key-intersected strict check; the multiset compare must raise."""
-    import os
-
     from iceberg_daq_spark.streaming.pipeline import flush_tail
 
-    out = str(tmp_path / "sink")
+    out = MergeTable(str(tmp_path / "sink"), key_cols=("k",))
     # k=9 is a phantom: value-correct rows otherwise
-    streamed = spark.createDataFrame([(1, 10), (9, 90)], "k int, v int")
-    streamed.write.parquet(os.path.join(out, "batch_id=0"))
+    out.append(spark.createDataFrame([(1, 10), (9, 90)], "k int, v int"))
     batch_twin = spark.createDataFrame([(1, 10), (2, 20)], "k int, v int")
     with pytest.raises(ValueError, match="diverge"):
         flush_tail(out, batch_twin, ["k"], strict=True)
